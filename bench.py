@@ -170,7 +170,8 @@ def main() -> None:
 
     def run_kg():
         res = run_kg_pipeline(spark, corpus, anchors, repartition_to=4 * args.cores)
-        # per-arm sum plan == triples.count() (test-pinned); one cache scan
+        # lazy one-row count over the triples union (== triples.count(),
+        # test-pinned), run here over the persisted mention cache
         n_triples["n"] = res.triples_count.collect()[0]["n_triples"]
 
     timed("kg_pipeline", run_kg)

@@ -148,11 +148,7 @@ def main() -> None:
         res = run_kg_pipeline(spark, corpus, anchors)
         stages["extract_link_persist"] = round(time.time() - t0, 2)
         t1 = time.time()
-        # headline count via the per-arm sum plan (VERDICT r4 task 1): ONE
-        # narrow mention-cache scan through the count-only dedup + the
-        # surface-scale arms, instead of the all-arms union count that
-        # re-scanned the cache per mention-scale arm and shipped every
-        # deduped row back over Arrow (~0.45 N->4N scaling at 3.2M files).
+        # headline count: the lazy one-row count over the triples union.
         # Equality with triples.count() is pinned by
         # tests/test_kg_e2e.py::test_triples_count_plan_equals_union_count.
         n = res.triples_count.collect()[0]["n_triples"]

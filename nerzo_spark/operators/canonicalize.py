@@ -104,19 +104,24 @@ def _driver_union_find(
     return [(ft, s, cluster_min[find((ft, s))]) for ft, s in pairs]
 
 
-def _with_entity_ids(resolved: DataFrame) -> DataFrame:
-    return resolved.select(
-        "fine_type",
-        "surface",
-        "canonical",
-        ent_id(F.col("fine_type"), F.col("canonical")).alias("entity_id"),
-    )
-
-
 def canonical_expr(fine_type, surface, override_canonical):
     """Column expression: canonical = override (hot cluster) else the
     surface's own normalized key — the default-rule half of the mapping."""
     return F.coalesce(override_canonical, normalize_surface(surface))
+
+
+def resolve_entities(surfaces: DataFrame, overrides: DataFrame) -> DataFrame:
+    """DISTINCT (fine_type, surface) + :func:`canonical_overrides` output ->
+    (fine_type, surface, canonical, entity_id)."""
+    canonical = canonical_expr(F.col("fine_type"), F.col("surface"), F.col("canonical"))
+    return surfaces.join(
+        F.broadcast(overrides), ["fine_type", "surface"], "left"
+    ).select(
+        "fine_type",
+        "surface",
+        canonical.alias("canonical"),
+        ent_id(F.col("fine_type"), canonical).alias("entity_id"),
+    )
 
 
 def canonicalize_surfaces(
@@ -134,14 +139,7 @@ def canonicalize_surfaces(
         driver_limit=driver_limit,
         bucket_broadcast_bytes=bucket_broadcast_bytes,
     )
-    resolved = distinct_surfaces.join(
-        F.broadcast(overrides), ["fine_type", "surface"], "left"
-    ).select(
-        "fine_type",
-        "surface",
-        canonical_expr(F.col("fine_type"), F.col("surface"), F.col("canonical")).alias("canonical"),
-    )
-    return _with_entity_ids(resolved)
+    return resolve_entities(distinct_surfaces, overrides)
 
 
 def _collision_semi_join(
@@ -179,8 +177,8 @@ def canonical_overrides(
     cost +20s at 800k files)."""
     spark = typed_surfaces.sparkSession
     # ``already_distinct``: callers holding a pre-distincted (fine_type,
-    # surface) table (run_kg_pipeline shares one localCheckpointed copy)
-    # skip a redundant surface-scale shuffle here.
+    # surface) table (pipeline/kg.py's assemble_kg shares one persisted
+    # copy) skip a redundant surface-scale shuffle here.
     distinct_surfaces = typed_surfaces.select("fine_type", "surface")
     if not already_distinct:
         distinct_surfaces = distinct_surfaces.distinct()
@@ -246,35 +244,47 @@ def canonical_overrides(
     from pyspark.storagelevel import StorageLevel
 
     all_edges = all_edges.persist(StorageLevel.MEMORY_AND_DISK)
-    collision_stats = (
-        all_edges.groupBy("bucket")
-        .agg(F.count("*").alias("bn"))
-        .filter(F.col("bn") > 1)
-        .localCheckpoint()
-    )
-    st = collision_stats.agg(
-        F.count("*").alias("n_buckets"),
-        F.coalesce(F.sum("bn"), F.lit(0)).alias("hot_edge_rows"),
-        F.coalesce(F.sum(F.octet_length("bucket")), F.lit(0)).alias("bucket_bytes"),
-    ).collect()[0]
-    hot_edges = _collision_semi_join(
-        all_edges,
-        collision_stats,
-        est_bytes=int(st["bucket_bytes"]) + 32 * int(st["n_buckets"]),
-        limit_bytes=bucket_broadcast_bytes,
-    )
-    hot = hot_edges.select(
-        "node_id", "fine_type", "surface", "k1", "k2"
-    ).dropDuplicates(["node_id"])
-
-    # Path 1/2: collision subgraph fits on the driver — union-find it there
-    # (exact, 1 round-trip); keys come precomputed from the cluster, so the
-    # driver does dict ops only, no regex.  hot_edge_rows bounds the node
-    # count from above (each hot node contributes >=1 collision-bucket
-    # membership), so the collect is driver-safe by construction.
-    if driver_limit > 0 and st["hot_edge_rows"] <= driver_limit:
-        rows = hot.collect()
+    try:
+        collision_stats = (
+            all_edges.groupBy("bucket")
+            .agg(F.count("*").alias("bn"))
+            .filter(F.col("bn") > 1)
+            .localCheckpoint()
+        )
+        st = collision_stats.agg(
+            F.count("*").alias("n_buckets"),
+            F.coalesce(F.sum("bn"), F.lit(0)).alias("hot_edge_rows"),
+            F.coalesce(F.sum(F.octet_length("bucket")), F.lit(0)).alias("bucket_bytes"),
+        ).collect()[0]
+        hot_edges = _collision_semi_join(
+            all_edges,
+            collision_stats,
+            est_bytes=int(st["bucket_bytes"]) + 32 * int(st["n_buckets"]),
+            limit_bytes=bucket_broadcast_bytes,
+        )
+        # Path 1/2: collision subgraph fits on the driver — union-find it
+        # there (exact, 1 round-trip); keys come precomputed from the
+        # cluster, so the driver does dict ops only, no regex.
+        # hot_edge_rows bounds the node count from above (each hot node
+        # contributes >=1 collision-bucket membership), so the collect is
+        # driver-safe by construction.
+        on_driver = driver_limit > 0 and st["hot_edge_rows"] <= driver_limit
+        if on_driver:
+            rows = hot_edges.select(
+                "node_id", "fine_type", "surface", "k1", "k2"
+            ).dropDuplicates(["node_id"]).collect()
+        else:
+            # Path 3 checkpoints HERE (Path 1's single collect needs no
+            # reuse): the loop reads the edges every iteration and must not
+            # re-run the key-regex projection + collision semi-join each
+            # round (the bucket aggregation above runs once).
+            hot_edges = hot_edges.localCheckpoint()
+    finally:
+        # surface-scale cache; released on every exit path, exceptions
+        # included, before the driver union-find or the propagation loop
         all_edges.unpersist()
+
+    if on_driver:
         mapping = _driver_union_find(
             [(r["fine_type"], r["surface"]) for r in rows],
             keys=[(r["k1"], r["k2"]) for r in rows],
@@ -303,12 +313,6 @@ def canonical_overrides(
     # Path 3: distributed min-label propagation over the hot subgraph
     # (singleton buckets dropped above contribute only a node's own label
     # to the bucket-min — removing them cannot change any fixpoint label).
-    # Checkpoint HERE (not for Path 1, whose single collect needs no reuse):
-    # the loop reads `edges` every iteration and must not re-run the
-    # key-regex projection + collision semi-join each round (the bucket
-    # aggregation itself is already checkpointed above and runs once).
-    hot_edges = hot_edges.localCheckpoint()
-    all_edges.unpersist()
     hot = hot_edges.select(
         "node_id", "fine_type", "surface", "k1", "k2"
     ).dropDuplicates(["node_id"])

@@ -106,9 +106,9 @@ def minhash_lsh_pairs(
 
     Returns (id_a, id_b, jaccard) for verified pairs with J >= threshold,
     considering only bands with <= band_cap member docs (skew guard above).
-    Reuse: sh is persisted MEMORY_AND_DISK (columnar, compressed — measured
-    ~10x smaller than localCheckpoint's deserialized rows) because it is
-    read three times (signatures, sizes, verify).
+    Reuse: sh is persisted MEMORY_AND_DISK (the in-memory columnar cache,
+    compressed unless ``spark.sql.inMemoryColumnarStorage.compressed`` is
+    off) because it is read three times (signatures, sizes, verify).
     """
     sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
     sig = minhash_signatures(sh)

@@ -36,7 +36,6 @@ from pyspark.sql import functions as F
 
 from nerzo_spark.embed.embedder import embed_span
 from nerzo_spark.fixtures.labels import label_rows
-from nerzo_spark.operators.canonicalize import canonicalize_surfaces
 from nerzo_spark.operators.extract_link import extract_and_link
 
 TRIPLE_SCHEMA = "subj string, pred string, obj string, repo string, path string, commit string"
@@ -53,12 +52,12 @@ class KGResult:
     # count of the materialized mention table (the extract+link action the
     # pipeline already runs) — links_to arm cardinality, free to reuse
     n_mentions: int = 0
-    # lazy 1-row (n_triples long) plan == triples.count(), one cache scan
-    # (build_triples_count); None only for hand-built results in tests
+    # lazy, persisted 1-row (n_triples long) plan == triples.count();
+    # None only for hand-built results in tests
     triples_count: DataFrame | None = None
 
 
-def build_label_catalog(anchor_rows: list[dict]) -> list[dict]:
+def build_label_catalog(anchor_rows: list[dict] | DataFrame) -> list[dict]:
     """Label embeddings = centroid of the pinned anchor mentions' embeddings
     (anchor scheme of /root/reference/contrastive/fewnerd_processor.py:155-199;
     identity-embedding trick of step_generate_ne_embedding.py:144-147).
@@ -66,8 +65,11 @@ def build_label_catalog(anchor_rows: list[dict]) -> list[dict]:
     Anchors are a dimension-sized fixture carrying (surface, contexts), so
     the catalog is built entirely driver-side (the reference's get-by-id
     point lookup, dataset_provider.py:175-177) — zero cluster jobs; the
-    result is broadcast into the scoring UDF as a dense matrix.
+    result is broadcast into the scoring UDF as a dense matrix.  A
+    (dimension-sized) DataFrame of anchor rows is collected first.
     """
+    if isinstance(anchor_rows, DataFrame):
+        anchor_rows = [r.asDict() for r in anchor_rows.collect()]
     by_type: dict[str, list] = {}
     for a in anchor_rows:
         vec = embed_span(a["surface"], a.get("left_ctx", ""), a.get("right_ctx", ""))[2]
@@ -139,77 +141,6 @@ def _partition_local_dedup(batches):
             carry_file = last_file
             carry_keys = set(pdf.loc[tail, "subj"])
         yield pdf
-
-
-def compact_dedup_key(*cols: str):
-    """Exact 20-byte dedup key over a string tuple: sha1 of the
-    LENGTH-PREFIXED field concatenation, with NULL mapped to a reserved
-    one-char marker no length-prefixed value can start with.
-
-    concat_ws would silently skip NULL fields (and a field containing the
-    separator would shift boundaries), making distinct tuples alias — the
-    row-level dedup twin keeps such tuples distinct, so this key must too.
-    Length prefixes rule out every concatenation aliasing; collision
-    probability is sha1's (the same cryptographic-identity assumption
-    ent_id / mention_id / text_id already rest on).  Pure JVM codegen —
-    one hash plus a few string ops per row.
-    """
-
-    def _lp(c: str):
-        col = F.col(c)
-        return F.when(col.isNull(), F.lit("\u0000")).otherwise(
-            F.concat(F.length(col).cast("string"), F.lit(":"), col)
-        )
-
-    return F.unhex(F.sha1(F.concat(*[_lp(c) for c in cols])))
-
-
-def _partition_local_dedup_count(batches):
-    """Count-only twin of :func:`_partition_local_dedup` over a COMPACT
-    (key, fk) projection — same carry-one-file contiguity logic, same
-    result, a fraction of the Arrow traffic in BOTH directions:
-
-    - inbound, rows are (20-byte exact dedup key, 8-byte file token)
-      instead of four strings (~115 B/mention -> ~33 B);
-    - outbound, each batch collapses to one ``n`` long on the Python side
-      (counting via ``mapInPandas(rows).count()`` would serialize every
-      deduped row back across Arrow just to count it — part of the
-      27-45 s triples-count tail at 3.2M files, round 4).
-
-    ``key`` = sha1 over the length-prefixed (subj, repo, path, commit)
-    tuple (NULL -> a reserved marker that no length-prefixed value can
-    produce) is EXACT under the same cryptographic-identity assumption the
-    pipeline already rests on (ent_id / mention_id / text_id are
-    sha1-equality identities): length prefixes rule out every
-    field-concatenation aliasing, including NULL fields and fields that
-    contain any would-be separator; ``fk`` is only
-    a file-boundary GROUPING token — an xxhash64 collision merges two
-    files' carry sets, which is harmless because membership tests use the
-    exact key."""
-    import pandas as pd
-
-    carry_fk = None
-    carry_keys: set = set()
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        pdf = pdf.drop_duplicates(subset=["key"])
-        if carry_fk is not None:
-            cont = pdf["fk"] == carry_fk
-            if cont.any():
-                dup = cont & pdf["key"].isin(carry_keys)
-                if dup.any():
-                    pdf = pdf[~dup]
-        if not len(pdf):
-            continue
-        last_fk = pdf["fk"].iloc[-1]
-        tail = pdf["fk"] == last_fk
-        if last_fk == carry_fk:
-            carry_keys.update(pdf.loc[tail, "key"])
-        else:
-            carry_fk = last_fk
-            carry_keys = set(pdf.loc[tail, "key"])
-        yield pd.DataFrame({"n": [len(pdf)]})
 
 
 def corpus_duplicate_files(corpus: DataFrame) -> DataFrame:
@@ -291,7 +222,7 @@ def _assert_narrow_from_extraction(df: DataFrame) -> None:
 
 def build_triples(
     typed: DataFrame, overrides: DataFrame, catalog: list[dict],
-    surfaces: DataFrame | None = None,
+    surfaces: DataFrame,
     file_local_dedup: bool = False,
 ) -> DataFrame:
     """(typed mentions, canonical overrides) -> (subj, pred, obj, provenance).
@@ -304,10 +235,9 @@ def build_triples(
     Only ``links_to`` (no dedup) and ``defined_in`` (one dedup shuffle) are
     mention-scale; ``typed_as``/``subtype_of`` are entity-scale.
 
-    ``surfaces``: optional pre-computed DISTINCT (fine_type, surface) table
-    (run_kg_pipeline shares one across overrides/entities/triples).  With it,
-    the ``typed_as`` entity set is derived at SURFACE scale — without it the
-    fallback distincts the mention-scale table (one more mention shuffle).
+    ``surfaces``: the DISTINCT (fine_type, surface) table (assemble_kg
+    shares one across overrides/entities/triples), so the ``typed_as``
+    entity set is derived at SURFACE scale, not from the mention table.
 
     ``file_local_dedup``: eliminate the LAST mention-scale shuffle.  The
     ``defined_in`` dedup key is (entity, repo, path, commit) — and every
@@ -323,61 +253,6 @@ def build_triples(
     pipeline/incremental.py) MUST keep the default shuffle dedup.
     Equivalence is asserted in tests/test_kg_e2e.py.
     """
-    parts = _triple_parts(typed, overrides, catalog, surfaces, file_local_dedup)
-    typed_e, ent_typed, ent_source, label_map, defined_base = parts
-
-    null_prov = [
-        F.lit(None).cast("string").alias("repo"),
-        F.lit(None).cast("string").alias("path"),
-        F.lit(None).cast("string").alias("commit"),
-    ]
-    prov = F.concat_ws("", F.col("repo"), F.lit("/"), F.col("path"), F.lit("@"), F.col("commit"))
-
-    t_links = typed_e.select(
-        F.col("mention_id").alias("subj"), F.lit("links_to").alias("pred"),
-        F.col("entity_id").alias("obj"), "repo", "path", "commit",
-    )
-    t_defined = defined_base.select(
-        "subj", F.lit("defined_in").alias("pred"), prov.alias("obj"),
-        "repo", "path", "commit",
-    )
-    t_typed = ent_typed.select(
-        F.col("entity_id").alias("subj"), F.lit("typed_as").alias("pred"),
-        F.col("label_id").alias("obj"), *null_prov,
-    )
-    # every surface yields an entity of its own fine type, so the fine types
-    # present among entities == fine types present among surfaces: derive
-    # subtype_of from the SOURCE table's tiny fine_type distinct (partial
-    # agg collapses to |types| rows map-side) instead of re-running the
-    # whole entity chain (join+distinct over the entity table) for ~8 rows
-    t_subtype = _subtype_arm(ent_source, label_map).select(
-        F.col("fine_type").alias("subj"), F.lit("subtype_of").alias("pred"),
-        F.col("coarse_type").alias("obj"), *null_prov,
-    )
-
-    return t_links.unionByName(t_typed).unionByName(t_defined).unionByName(t_subtype)
-
-
-def _subtype_arm(ent_source: DataFrame, label_map: DataFrame) -> DataFrame:
-    return (
-        ent_source.select("fine_type")
-        .distinct()
-        .join(label_map, "fine_type")
-        .select("fine_type", "coarse_type")
-        .distinct()
-    )
-
-
-def _triple_parts(
-    typed: DataFrame, overrides: DataFrame, catalog: list[dict],
-    surfaces: DataFrame | None, file_local_dedup: bool,
-    count_only_dedup: bool = False,
-):
-    """Shared plan fragments for :func:`build_triples` and
-    :func:`build_triples_count`: (typed_e, ent_typed, ent_source, label_map,
-    defined_base).  ``defined_base`` comes back already deduped; with
-    ``count_only_dedup`` the partition-local variant collapses each batch to
-    a count row (schema ``n long``) instead of returning the rows."""
     from nerzo_spark.functions.hashing import ent_id
     from nerzo_spark.operators.canonicalize import canonical_expr
 
@@ -406,9 +281,8 @@ def _triple_parts(
             canonical_expr(F.col("fine_type"), F.col("surface"), F.col("canonical")),
         ),
     )
-    ent_source = surfaces if surfaces is not None else typed.select("fine_type", "surface")
     ent_typed = (
-        ent_source.join(F.broadcast(overrides), ["fine_type", "surface"], "left")
+        surfaces.join(F.broadcast(overrides), ["fine_type", "surface"], "left")
         .select(
             "fine_type",
             ent_id(
@@ -432,76 +306,136 @@ def _triple_parts(
         # above it cannot re-place probe-side rows, and typed's own plan is
         # exactly where a caller's repartition/parquet round-trip would show
         _assert_narrow_from_extraction(typed)
-        if count_only_dedup:
-            # compact projection: exact 20-byte dedup key + 8-byte file
-            # token (see _partition_local_dedup_count and
-            # compact_dedup_key) — sha1/xxhash64 are JVM codegen exprs, so
-            # the ~3.5x Arrow-payload cut costs one hash per row
-            defined_base = defined_base.select(
-                compact_dedup_key("subj", "repo", "path", "commit").alias("key"),
-                F.xxhash64("repo", "path", "commit").alias("fk"),
-            ).mapInPandas(_partition_local_dedup_count, schema="n long")
-        else:
-            defined_base = defined_base.mapInPandas(
-                _partition_local_dedup, schema=defined_base.schema
-            )
+        defined_base = defined_base.mapInPandas(
+            _partition_local_dedup, schema=defined_base.schema
+        )
     else:
         defined_base = defined_base.dropDuplicates(["subj", "repo", "path", "commit"])
-    return typed_e, ent_typed, ent_source, label_map, defined_base
 
+    null_prov = [
+        F.lit(None).cast("string").alias("repo"),
+        F.lit(None).cast("string").alias("path"),
+        F.lit(None).cast("string").alias("commit"),
+    ]
+    prov = F.concat_ws("", F.col("repo"), F.lit("/"), F.col("path"), F.lit("@"), F.col("commit"))
 
-def build_triples_count(
-    typed: DataFrame, overrides: DataFrame, catalog: list[dict],
-    n_mentions: int,
-    surfaces: DataFrame | None = None,
-    file_local_dedup: bool = False,
-) -> DataFrame:
-    """ONE-row plan (``n_triples`` long) whose value equals
-    ``build_triples(...).count()`` — without re-scanning the mention cache
-    once per arm (VERDICT r4 task 1: the all-arms union count was the
-    dominant ~0.45-scaling term of the full-pipeline tail).
-
-    Per-arm cardinalities, each from work that is either already done or
-    minimal:
-
-    - ``links_to`` == ``n_mentions`` EXACTLY: one links triple per mention
-      row, no dedup, and the broadcast overrides join preserves cardinality
-      because ``overrides`` is unique on (fine_type, surface) by
-      construction (it is derived from a DISTINCT surfaces table).  The
-      count was already materialized by the caller's ``typed.count()`` —
-      passed in as a literal, zero additional scans.
-    - ``defined_in``: the one genuinely unknown arm — one narrow scan of the
-      mention cache through the count-only partition-local dedup
-      (``_partition_local_dedup_count``: per-batch longs cross Arrow, not
-      deduped rows).
-    - ``typed_as``: surface-scale (distinct entity ids joined to the
-      broadcast label map).
-    - ``subtype_of``: |fine_types| rows, collapses map-side.
-
-    Equality with ``build_triples(...).count()`` is asserted in
-    tests/test_kg_e2e.py."""
-    _, ent_typed, ent_source, label_map, defined_base = _triple_parts(
-        typed, overrides, catalog, surfaces, file_local_dedup,
-        count_only_dedup=True,
+    t_links = typed_e.select(
+        F.col("mention_id").alias("subj"), F.lit("links_to").alias("pred"),
+        F.col("entity_id").alias("obj"), "repo", "path", "commit",
     )
-    if file_local_dedup:
-        defined_cnt = defined_base.agg(
-            F.coalesce(F.sum("n"), F.lit(0)).alias("n")
-        )
-    else:
-        defined_cnt = defined_base.agg(F.count(F.lit(1)).alias("n"))
-    typed_cnt = ent_typed.agg(F.count(F.lit(1)).alias("n"))
-    subtype_cnt = _subtype_arm(ent_source, label_map).agg(
-        F.count(F.lit(1)).alias("n")
+    t_defined = defined_base.select(
+        "subj", F.lit("defined_in").alias("pred"), prov.alias("obj"),
+        "repo", "path", "commit",
     )
-    return (
-        defined_cnt.unionByName(typed_cnt)
-        .unionByName(subtype_cnt)
-        .agg(
-            (F.coalesce(F.sum("n"), F.lit(0)) + F.lit(int(n_mentions)))
-            .cast("long")
-            .alias("n_triples")
+    t_typed = ent_typed.select(
+        F.col("entity_id").alias("subj"), F.lit("typed_as").alias("pred"),
+        F.col("label_id").alias("obj"), *null_prov,
+    )
+    # every surface yields an entity of its own fine type, so the fine types
+    # present among entities == fine types present among surfaces: derive
+    # subtype_of from the surface table's tiny fine_type distinct (partial
+    # agg collapses to |types| rows map-side) instead of re-running the
+    # whole entity chain (join+distinct over the entity table) for ~8 rows
+    t_subtype = (
+        surfaces.select("fine_type")
+        .distinct()
+        .join(label_map, "fine_type")
+        .select("fine_type", "coarse_type")
+        .distinct()
+        .select(
+            F.col("fine_type").alias("subj"), F.lit("subtype_of").alias("pred"),
+            F.col("coarse_type").alias("obj"), *null_prov,
         )
+    )
+
+    return t_links.unionByName(t_typed).unionByName(t_defined).unionByName(t_subtype)
+
+
+@dataclass
+class KGAssembly:
+    """What :func:`assemble_kg` hands back to its sink."""
+
+    # persisted (fine_type, surface, n_in_surface); the sink releases it
+    surface_counts: DataFrame
+    n_mentions: int
+    # time.time() once the surface pass (the first mention-scale job) ran
+    t_surfaces: float
+    canon_wall_ms: float
+    entities: DataFrame
+    triples: DataFrame
+    # per repo: rows_out, sha_ok, files; each sink adds stage/run_id/wall_ms
+    repo_lineage: DataFrame
+
+
+def assemble_kg(
+    typed: DataFrame, catalog: list[dict], file_local_dedup: bool
+) -> KGAssembly:
+    """The KG back half over a typed mention table, shared by both sinks:
+    surface aggregate, canonical overrides, entities, triples and the
+    per-repo lineage rows.  ``run_kg_pipeline`` passes its in-memory
+    extraction output (``file_local_dedup=True``); ``run_incremental``
+    passes the mention table read back from parquet (shuffle dedup).
+
+    Runs two eager stages: the surface pass and the canonicalize
+    clustering.  Everything else is a lazy plan over ``typed`` and the
+    persisted surface table, which is released here if anything raises
+    and by the sink otherwise."""
+    from pyspark.storagelevel import StorageLevel
+
+    from nerzo_spark.operators.canonicalize import (
+        canonical_overrides,
+        resolve_entities,
+    )
+
+    # ONE mention-scale pass for the whole back half:
+    # grouping the mentions by (fine_type, surface) yields the distinct
+    # surfaces table AND — as the sum of the group sizes — the exact mention
+    # count, so the single materializing job below (the sum-collect) runs
+    # extraction (in-memory sink), builds the surface cache, and returns
+    # n_mentions in one pipelined pass.  The groupBy's shuffle economics are
+    # identical to select().distinct(): map-side partial agg collapses each
+    # partition to its local distinct surfaces before anything crosses
+    # executors.  Overrides, entities and the typed_as arm all consume
+    # `surfaces` as a zero-cost projection of this cached table.
+    surface_counts = (
+        typed.groupBy("fine_type", "surface")
+        .agg(F.count(F.lit(1)).alias("n_in_surface"))
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+    try:
+        n_mentions = int(
+            surface_counts.agg(F.sum("n_in_surface")).collect()[0][0] or 0
+        )
+        t_surfaces = time.time()
+        surfaces = surface_counts.select("fine_type", "surface")
+        # broadcast-sized; Path 1 returns a driver-local Arrow frame and
+        # Path 3 self-checkpoints, so no eager materialization is needed
+        # here.  canonical_overrides runs its clustering jobs EAGERLY over
+        # the cached surface table, so the wall measured around it is the
+        # real canonicalize stage wall.
+        overrides = canonical_overrides(surfaces, already_distinct=True)
+        canon_wall_ms = (time.time() - t_surfaces) * 1000.0
+        entities = resolve_entities(surfaces, overrides)
+        triples = build_triples(
+            typed, overrides, catalog, surfaces=surfaces,
+            file_local_dedup=file_local_dedup,
+        )
+    except BaseException:
+        surface_counts.unpersist()
+        raise
+    repo_lineage = typed.groupBy("repo").agg(
+        F.count("*").alias("rows_out"),
+        F.min(F.col("sha_ok").cast("int")).cast("boolean").alias("sha_ok"),
+        F.countDistinct("path").alias("files"),
+    )
+    return KGAssembly(
+        surface_counts=surface_counts,
+        n_mentions=n_mentions,
+        t_surfaces=t_surfaces,
+        canon_wall_ms=canon_wall_ms,
+        entities=entities,
+        triples=triples,
+        repo_lineage=repo_lineage,
     )
 
 
@@ -515,104 +449,50 @@ def run_kg_pipeline(
     run_id = run_id or uuid.uuid4().hex
     t0 = time.time()
 
-    # label catalog first: driver-side, from the anchor fixture (tiny);
-    # accepts either plain rows or a (dimension-sized) DataFrame
-    if isinstance(anchors, DataFrame):
-        anchor_rows = [r.asDict() for r in anchors.collect()]
-    else:
-        anchor_rows = anchors
-    catalog = build_label_catalog(anchor_rows)
+    # label catalog first: driver-side, from the anchor fixture (tiny)
+    catalog = build_label_catalog(anchors)
 
     # ONE fused Python pass: detect -> embed -> link (vectors never cross
     # Arrow; see operators/extract_link.py).  The result is the mentions
     # table AND the links table in one — no mention-scale join at all.
-    # persist (columnar, compressed) over localCheckpoint (deserialized Java
-    # rows): ~10x smaller storage, measured ~1.3x faster end-to-end.
+    # persist (in-memory columnar cache) rather than localCheckpoint
+    # (deserialized Java rows): the surface pass builds it, and the triples
+    # arms and the lineage rows re-read it.
     from pyspark.storagelevel import StorageLevel
 
     typed = extract_and_link(corpus, catalog, repartition_to=repartition_to).persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    # ONE mention-scale pass for the whole back half (round 5; was two):
-    # grouping the mentions by (fine_type, surface) yields the distinct
-    # surfaces table AND — as the sum of the group sizes — the exact mention
-    # count, so the single materializing job below (the sum-collect) runs
-    # extraction, builds the mention cache, builds the surface cache, and
-    # returns n_mentions in one pipelined pass.  Round 4 ran typed.count()
-    # (mention-cache scan #1) and then distincted the cache again inside
-    # canonicalization's first job (scan #2, measured a flat ~3 s at BOTH
-    # 4 and 16 cores at 1.6M files — a pure constant that caps the N->4N
-    # ratio).  The groupBy's shuffle economics are identical to the old
-    # select().distinct(): map-side partial agg collapses each partition to
-    # its local distinct surfaces before anything crosses executors.
-    # Overrides, entities and the typed_as arm all consume `surfaces` as a
-    # zero-cost projection of this cached table.
-    surface_counts = (
-        typed.groupBy("fine_type", "surface")
-        .agg(F.count(F.lit(1)).alias("n_in_surface"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_mentions = int(
-        surface_counts.agg(F.sum("n_in_surface")).collect()[0][0] or 0
-    )
-    # wall of the work actually executed so far (catalog + extract + link +
-    # surface agg): stamped HERE, not after plan construction, so the
-    # lineage stage label and its wall agree (VERDICT r3 nit).
-    extract_wall_ms = (time.time() - t0) * 1000.0
+    try:
+        # typed reaches build_triples through a narrow chain from
+        # extraction, so the file-local defined_in dedup is exact (see
+        # build_triples doc)
+        kg = assemble_kg(typed, catalog, file_local_dedup=True)
+    except BaseException:
+        typed.unpersist()
+        raise
+    # wall of the work executed up to the surface pass (catalog + extract +
+    # link + surface agg), so the lineage stage label and its wall agree
+    extract_wall_ms = (kg.t_surfaces - t0) * 1000.0
 
-    from nerzo_spark.operators.canonicalize import (
-        canonical_expr,
-        canonical_overrides,
-    )
-    from nerzo_spark.functions.hashing import ent_id as _ent_id
-
-    surfaces = surface_counts.select("fine_type", "surface")
-    # broadcast-sized; Path 1 returns a driver-local Arrow frame and Path 3
-    # self-checkpoints, so no eager materialization is needed here.
-    # canonical_overrides runs its clustering jobs EAGERLY (collision-stats
-    # checkpoint + hot-subgraph union-find) over the already-cached surface
-    # table, so the wall measured around it is the real canonicalize stage
-    # wall (VERDICT r4 task 3: the library path carries per-stage lineage
-    # like incremental.py).
-    t_canon0 = time.time()
-    overrides = canonical_overrides(surfaces, already_distinct=True)
-    canon_wall_ms = (time.time() - t_canon0) * 1000.0
-    entities = (
-        surfaces
-        .join(F.broadcast(overrides), ["fine_type", "surface"], "left")
-        .select(
-            "fine_type",
-            "surface",
-            canonical_expr(F.col("fine_type"), F.col("surface"), F.col("canonical")).alias("canonical"),
-        )
-        .withColumn("entity_id", _ent_id(F.col("fine_type"), F.col("canonical")))
-    )
-    # typed reaches build_triples through a narrow chain from extraction,
-    # so the file-local defined_in dedup is exact (see build_triples doc)
-    triples = build_triples(
-        typed, overrides, catalog, surfaces=surfaces, file_local_dedup=True
-    )
-    # lazy persist of the ONE-row count plan: its defined_in arm scans the
-    # mention cache through the count-only dedup, and the plan is embedded
-    # both in KGResult.triples_count and in the lineage 'triples' row — a
-    # caller materializing both (or lineage twice) would otherwise pay the
+    # lazy persist of the ONE-row count plan: it is embedded both in
+    # KGResult.triples_count and in the lineage 'triples' row — a caller
+    # materializing both (or lineage twice) would otherwise pay the
     # mention-scale scan each time.  No action is triggered here (keeps the
     # no-serialized-action property of the library path).
-    triples_count = build_triples_count(
-        typed, overrides, catalog, n_mentions,
-        surfaces=surfaces, file_local_dedup=True,
+    triples_count = kg.triples.agg(
+        F.count(F.lit(1)).alias("n_triples")
     ).persist(StorageLevel.MEMORY_AND_DISK)
 
-    # Per-stage lineage on the library path (VERDICT r4 task 3), without
-    # adding serialized actions to the pipeline's own critical path: the
-    # extract+link rows are per-repo with the measured wall; 'canonicalize'
-    # carries the wall measured around the (eager) clustering above and a
-    # LAZY rows_out = |entities| (surface-scale agg over the persisted
-    # surfaces cache, evaluated only when a caller materializes lineage);
-    # 'triples' reuses the cheap-count plan — rows_out is exact, but its
-    # wall is a -1.0 sentinel (the triples table is lazy here; the
-    # orchestration layers that materialize it — incremental.py, the CLI —
-    # record the real wall).
+    # Per-stage lineage on the library path, without adding serialized
+    # actions to the pipeline's own critical path: the extract+link rows are
+    # per-repo with the measured wall; 'canonicalize' carries the wall
+    # measured around the (eager) clustering and a LAZY rows_out =
+    # |entities| (surface-scale agg over the persisted surfaces cache,
+    # evaluated only when a caller materializes lineage); 'triples' reuses
+    # the count plan — rows_out is exact, but its wall is a -1.0 sentinel
+    # (the triples table is lazy here; the orchestration layers that
+    # materialize it — incremental.py, the CLI — record the real wall).
     def _stage_row(cnt_df: DataFrame, cnt_col: str, stage: str, wall: float) -> DataFrame:
         return cnt_df.select(
             F.lit("__all__").alias("repo"),
@@ -625,19 +505,14 @@ def run_kg_pipeline(
         )
 
     lineage = (
-        typed.groupBy("repo")
-        .agg(
-            F.count("*").alias("rows_out"),
-            F.min(F.col("sha_ok").cast("int")).cast("boolean").alias("sha_ok"),
-            F.countDistinct("path").alias("files"),
-        )
+        kg.repo_lineage
         .withColumn("stage", F.lit("extract+link"))
         .withColumn("run_id", F.lit(run_id))
         .withColumn("wall_ms", F.lit(extract_wall_ms))
         .unionByName(
             _stage_row(
-                entities.agg(F.count(F.lit(1)).alias("n")), "n",
-                "canonicalize", canon_wall_ms,
+                kg.entities.agg(F.count(F.lit(1)).alias("n")), "n",
+                "canonicalize", kg.canon_wall_ms,
             )
         )
         .unionByName(_stage_row(triples_count, "n_triples", "triples", -1.0))
@@ -647,19 +522,10 @@ def run_kg_pipeline(
     return KGResult(
         mentions=typed,
         links=links,
-        entities=entities,
-        triples=triples,
+        entities=kg.entities,
+        triples=kg.triples,
         lineage=lineage,
         label_catalog=catalog,
-        n_mentions=n_mentions,
+        n_mentions=kg.n_mentions,
         triples_count=triples_count,
     )
-
-
-def triples_from_corpus(
-    spark: SparkSession,
-    corpus: DataFrame,
-    anchors: DataFrame,
-    repartition_to: int | None = None,
-) -> DataFrame:
-    return run_kg_pipeline(spark, corpus, anchors, repartition_to=repartition_to).triples

@@ -73,17 +73,6 @@ def get_spark(
         # the canonicalization loop); intended broadcasts are explicit
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
         .config("spark.sql.session.timeZone", "UTC")
-        # In-memory columnar cache compression (r7, guide §1.2): building
-        # the lz4-compressed cache dominated the KG pipeline's first action
-        # (persist of 1.6M mention rows: measured ~2x wall vs uncompressed
-        # across 6 interleaved A/B samples at 400k files).  Local mode spills
-        # to tmpfs and has ample memory headroom, so trade memory for CPU by
-        # default; on memory-constrained clusters set
-        # NERZO_CACHE_COMPRESSED=true to restore the compact cache.
-        .config(
-            "spark.sql.inMemoryColumnarStorage.compressed",
-            os.environ.get("NERZO_CACHE_COMPRESSED", "false"),
-        )
         .config("spark.ui.enabled", "false")
         .config("spark.driver.maxResultSize", "2g")
         # local mode = single JVM: the default 1g heap GC-thrashes with 32
@@ -92,9 +81,6 @@ def get_spark(
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
-    builder = (
-        builder
-    )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

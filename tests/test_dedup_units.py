@@ -1,18 +1,15 @@
-"""Unit tests for the partition-local defined_in dedup generators
-(pipeline/kg.py) — pure pandas, no SparkSession: the generators consume an
+"""Unit tests for the partition-local defined_in dedup generator
+(pipeline/kg.py) — pure pandas, no SparkSession: the generator consumes an
 iterator of pandas batches exactly as mapInPandas feeds them, so batch
-boundaries, file runs spanning batches, and fk-collisions are all
-exercisable directly and cheaply here (the Spark-level equivalence with the
+boundaries and file runs spanning batches are exercisable directly and
+cheaply here (the Spark-level equivalence with the
 shuffle dedup is pinned separately in test_kg_e2e.py)."""
 
 from __future__ import annotations
 
 import pandas as pd
 
-from nerzo_spark.pipeline.kg import (
-    _partition_local_dedup,
-    _partition_local_dedup_count,
-)
+from nerzo_spark.pipeline.kg import _partition_local_dedup
 
 
 def _rows(*specs):
@@ -36,24 +33,6 @@ def _expected(rows):
         pd.DataFrame(rows)
         .drop_duplicates(subset=["subj", "repo", "path", "commit"])
         .reset_index(drop=True)
-    )
-
-
-def _compact(rows_df: pd.DataFrame, fk_of=None) -> pd.DataFrame:
-    """The (key, fk) projection _triple_parts builds JVM-side, simulated:
-    key is the exact 4-tuple (bytes of the joined fields), fk any grouping
-    token of the file triple (exactness must not depend on fk)."""
-    fk_of = fk_of or (lambda t: hash(t))
-    return pd.DataFrame(
-        {
-            "key": [
-                "".join([r.subj, r.repo, r.path, r.commit]).encode()
-                for r in rows_df.itertuples()
-            ],
-            "fk": [
-                fk_of((r.repo, r.path, r.commit)) for r in rows_df.itertuples()
-            ],
-        }
     )
 
 
@@ -85,14 +64,6 @@ def _check_sizes(rows, sizes):
     assert sorted(map(tuple, got.itertuples(index=False))) == sorted(
         map(tuple, exp.itertuples(index=False))
     )
-    # count twin over the compact projection: same batch layout
-    n = sum(
-        int(b["n"].sum())
-        for b in _partition_local_dedup_count(
-            iter([_compact(b) for b in _batches(rows, sizes)])
-        )
-    )
-    assert n == len(exp)
 
 
 def test_dedup_single_batch():
@@ -111,25 +82,4 @@ def test_dedup_every_row_its_own_batch():
 def test_dedup_empty_batches():
     batches = [pd.DataFrame(columns=["subj", "repo", "path", "commit"])]
     assert list(_partition_local_dedup(iter(batches))) == []
-    cb = [pd.DataFrame({"key": pd.Series(dtype=object), "fk": pd.Series(dtype="int64")})]
-    assert list(_partition_local_dedup_count(iter(cb))) == []
 
-
-def test_count_dedup_fk_collision_harmless():
-    """fk is only a grouping token: force EVERY file onto one fk value —
-    carry sets merge across files, but exact keys keep the count right."""
-    rows = _expected(BASE)  # all rows, order preserved
-    all_rows = pd.DataFrame(BASE)
-    for sizes in ([len(BASE)], [4, 3, 2, 2], [1] * len(BASE)):
-        n = sum(
-            int(b["n"].sum())
-            for b in _partition_local_dedup_count(
-                iter(
-                    [
-                        _compact(b, fk_of=lambda t: 7)
-                        for b in _batches(BASE, sizes)
-                    ]
-                )
-            )
-        )
-        assert n == len(rows), (sizes, n, len(all_rows))

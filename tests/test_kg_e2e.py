@@ -62,8 +62,8 @@ def test_lineage_rows(spark, fixture_small, kg_result):
 
 
 def test_triples_count_plan_equals_union_count(spark, fixture_small, kg_result):
-    """build_triples_count (the bench headline count: per-arm sums, one
-    cache scan, count-only dedup) must equal triples.count() exactly."""
+    """KGResult.triples_count (the bench headline count) must equal
+    triples.count() exactly, and n_mentions the mention count."""
     n_plan = kg_result.triples_count.collect()[0]["n_triples"]
     assert n_plan == kg_result.triples.count()
     assert kg_result.n_mentions == kg_result.mentions.count()
@@ -201,29 +201,3 @@ def test_corpus_duplicate_files_checker(spark, fixture_small):
     assert len(flagged) == 1
     assert flagged[0]["n_rows"] == 2
 
-
-def test_compact_dedup_key_null_and_separator_safe(spark):
-    """Regression (r5 review): the count-only dedup key must keep tuples
-    distinct that concat_ws-style keys alias — NULL fields (concat_ws skips
-    them) and fields containing a would-be separator (boundary shift)."""
-    from nerzo_spark.pipeline.kg import compact_dedup_key
-
-    rows = [
-        ("a", "r", "x", None),          # vs next: NULL position differs
-        ("a", "r", None, "x"),
-        ("a", "r", "x", "c"),           # all-present baseline
-        ("a", "r\u001fx", "y", "c"),    # vs next: separator char inside field
-        ("a", "r", "x\u001fy", "c"),
-        ("ab", "c", "d", "e"),          # vs next: boundary shift without sep
-        ("a", "bc", "d", "e"),
-    ]
-    df = spark.createDataFrame(
-        rows, "subj string, repo string, path string, commit string"
-    )
-    keys = [
-        bytes(r["key"])
-        for r in df.select(
-            compact_dedup_key("subj", "repo", "path", "commit").alias("key")
-        ).collect()
-    ]
-    assert len(set(keys)) == len(rows)

@@ -86,10 +86,14 @@ def test_f2_token_offsets_shuffle_free(spark):
     shuffling and must fail.  Matched via the bare "hashpartitioning"
     Arguments token — formatted explain never prints the contiguous string
     "Exchange hashpartitioning", so matching that would be vacuous."""
-    import nerzo_spark.plans.catalog_text as ct
-
     df = catalog.queries()["f2_token_offsets"](spark, SF)
-    assert "hashpartitioning" not in plan_of(df)
+    plan = plan_of(df)
+    assert "hashpartitioning" not in plan
+    # the single-row-group sf table scans as one split, so T_par's exchange
+    # is present, and it is the round-robin one
+    tree = plan.split("(1) Scan")[0]
+    assert tree.count("Exchange") == 1, tree
+    assert "RoundRobinPartitioning" in plan, plan
 
 
 def test_u5_projection_no_shuffle_beyond_join(spark):

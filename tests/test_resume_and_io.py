@@ -217,3 +217,70 @@ def test_iceberg_production_statements(spark, monkeypatch, tmp_path):
     rec = []
     ice.write_overwrite_dynamic(_FakeDF(spark, rec), "db.mentions", "repo", "/unused")
     assert rec == ["writeTo:nerzo.db.mentions", "overwritePartitions"]
+
+
+def test_resumable_sink_equals_in_memory(spark, fixture_small, kg_result, tmp_path):
+    """Both sinks run one KG assembly: the resumable output's triples,
+    entities and lineage counts equal the in-memory pipeline's."""
+    from nerzo_spark.pipeline.incremental import run_incremental
+
+    fx = fixture_small
+    out = str(tmp_path / "kg")
+    run_incremental(spark, corpus_df(spark, fx), fx.anchors, out)
+
+    def same_rows(a, b, cols):
+        a, b = a.select(*cols), b.select(*cols)
+        assert a.count() == b.count()
+        assert a.exceptAll(b).count() == 0
+        assert b.exceptAll(a).count() == 0
+
+    same_rows(
+        spark.read.parquet(out + "/triples"), kg_result.triples,
+        ["subj", "pred", "obj", "repo", "path", "commit"],
+    )
+    same_rows(
+        spark.read.parquet(out + "/entities"), kg_result.entities,
+        ["fine_type", "surface", "canonical", "entity_id"],
+    )
+    lineage = spark.read.parquet(out + "/lineage")
+    same_rows(
+        lineage.filter(F.col("stage") == "extract"),
+        kg_result.lineage.filter(F.col("stage") == "extract+link"),
+        ["repo", "rows_out", "files", "sha_ok"],
+    )
+    same_rows(
+        lineage.filter(F.col("repo") == "__all__"),
+        kg_result.lineage.filter(F.col("repo") == "__all__"),
+        ["stage", "rows_out"],
+    )
+
+
+def test_failed_build_releases_caches(spark, fixture_small, tmp_path, monkeypatch):
+    """A build that fails inside canonicalization, before or after the
+    edge table is released, leaves no entry behind in Spark's cache manager,
+    on either sink."""
+    import pytest
+
+    import nerzo_spark.operators.canonicalize as canon
+    from nerzo_spark.pipeline.incremental import run_incremental
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("injected")
+
+    fx = fixture_small
+    # a repo subset: its plans must not match the session's cached kg_result
+    repos = sorted({c["repo"] for c in fx.corpus})[:4]
+    corpus = corpus_df(spark, fx).filter(F.col("repo").isin(repos))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    builds = {
+        "in_memory": lambda out: run_kg_pipeline(spark, corpus, fx.anchors),
+        "resumable": lambda out: run_incremental(spark, corpus, fx.anchors, out),
+    }
+    for target in ("_collision_semi_join", "_driver_union_find"):
+        with monkeypatch.context() as m:
+            m.setattr(canon, target, boom)
+            for sink, build in builds.items():
+                with pytest.raises(RuntimeError, match="injected"):
+                    build(str(tmp_path / f"{target}_{sink}"))
+                assert cache.numCachedEntries() == before, (target, sink)
