@@ -13,9 +13,6 @@ pooled JSON line whose ``queries`` are per-query minima; every raw sample
 rides along in ``samples`` with its window's loadavg, so round-over-round
 comparison needs no weather adjudication.  ``--as-sample`` is the internal
 single-run mode (the pre-r6 behavior).
-
-Scaling-efficiency protocol (BASELINE.md): run ``python bench.py --cores 8``
-and ``--cores 32`` on the same input; eff = (thr_32 / thr_8) / 4.
 """
 
 from __future__ import annotations
@@ -94,9 +91,11 @@ def _pooled(args) -> None:
 
 
 def main() -> None:
+    from nerzo_spark.session import default_parallelism
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default=os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    ap.add_argument("--cores", type=int, default=int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    ap.add_argument("--cores", type=int, default=default_parallelism())
     # 400k files: at 100k the pipeline's fixed costs dominated the
     # triples/sec headline (same operators, ~4x lower apparent throughput)
     ap.add_argument("--kg-files", type=int, default=int(os.environ.get("NERZO_BENCH_KG_FILES", "400000")))

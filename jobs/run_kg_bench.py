@@ -2,9 +2,8 @@
 ``spark-submit --py-files`` at N and 4N executors, same input, report
 throughput at both).
 
-Submitted against the standalone cluster (jobs/cluster.py) or local[C]; the
-master comes from spark-submit.  The corpus parquet must be pre-materialized
-(jobs/bench_cluster.py does it) — generation is never in the timed region.
+The master comes from spark-submit.  The corpus parquet must be
+pre-materialized; generation is never in the timed region.
 
 Prints ONE JSON line: cores, executors, per-stage seconds, triples, tps.
 """

@@ -38,9 +38,14 @@ def topk_desc_stable(scores: np.ndarray, kk: int) -> np.ndarray:
     10.1 s argsort vs 1.7 s GEMM per 3.3k-row batch).  Selection by
     argpartition is index-arbitrary among equal scores, so equality of the
     boundary value is detected per row and only those rows fall back to the
-    full stable sort; within the selected set, candidates are ordered index-
-    ascending first so the stable score sort reproduces the index tie-break.
+    full stable sort, in one vectorized ``argsort`` over all of them (a tie-
+    heavy batch is no slower than a full sort); within the selected set,
+    candidates are ordered index-ascending first so the stable score sort
+    reproduces the index tie-break.  NaN scores are rejected: ``-nan`` sorts
+    last in ``argsort`` but breaks the boundary test, so the two paths would
+    disagree.
     """
+    assert not np.isnan(scores).any(), "topk_desc_stable: NaN score"
     n, m = scores.shape
     if kk >= m:
         return np.argsort(-scores, axis=1, kind="stable")
@@ -52,8 +57,7 @@ def topk_desc_stable(scores: np.ndarray, kk: int) -> np.ndarray:
     top = cand[rows, order]
     kth = scores[rows[:, 0], top[:, -1]]  # smallest selected score per row
     ambiguous = np.nonzero((scores >= kth[:, None]).sum(axis=1) > kk)[0]
-    for r in ambiguous:
-        top[r] = np.argsort(-scores[r], kind="stable")[:kk]
+    top[ambiguous] = np.argsort(-scores[ambiguous], axis=1, kind="stable")[:, :kk]
     return top
 
 

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 # perfbench/trace.py wraps both names by attribute.
 from nerzo_spark.operators.canonicalize import canonical_overrides  # noqa: F401
 from nerzo_spark.operators.extract_link import extract_and_link
-from nerzo_spark.pipeline.kg import assemble_kg, build_label_catalog
+from nerzo_spark.pipeline.kg import assemble_kg, build_label_catalog, stamp_lineage
 from nerzo_spark.pipeline.manifest import ManifestStore
 
 STAGE_EXTRACT = "extract"
@@ -107,23 +107,19 @@ def run_incremental(
     stage_rows = spark.createDataFrame(
         pd.DataFrame(
             [
-                ("__all__", n_entities, True, -1, "canonicalize", run_id, canon_wall_ms),
-                ("__all__", n_triples, True, -1, "triples", run_id, triples_wall_ms),
+                ("__all__", n_entities, True, -1, "canonicalize"),
+                ("__all__", n_triples, True, -1, "triples"),
             ],
-            columns=["repo", "rows_out", "sha_ok", "files", "stage", "run_id", "wall_ms"],
+            columns=["repo", "rows_out", "sha_ok", "files", "stage"],
         ),
-        schema="repo string, rows_out long, sha_ok boolean, files long, "
-        "stage string, run_id string, wall_ms double",
+        schema="repo string, rows_out long, sha_ok boolean, files long, stage string",
     )
-    (
-        kg.repo_lineage
-        .withColumn("stage", F.lit(STAGE_EXTRACT))
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("wall_ms", F.lit(extract_wall_ms))
-        .unionByName(stage_rows)
-        .write.mode("append")
-        .parquet(lineage_path)
-    )
+    stamp_lineage(
+        kg.repo_lineage.withColumn("stage", F.lit(STAGE_EXTRACT)).unionByName(stage_rows),
+        run_id,
+        {STAGE_EXTRACT: extract_wall_ms, "canonicalize": canon_wall_ms,
+         "triples": triples_wall_ms},
+    ).write.mode("append").parquet(lineage_path)
     return {
         "run_id": run_id,
         "repos_extracted": extracted,

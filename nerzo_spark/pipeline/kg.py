@@ -367,6 +367,36 @@ class KGAssembly:
     repo_lineage: DataFrame
 
 
+def stamp_lineage(rows: DataFrame, run_id: str, walls: dict[str, float]) -> DataFrame:
+    """Lineage rows ``(repo, rows_out, sha_ok, files, stage)`` with the
+    run's ``run_id`` and each stage's ``wall_ms`` attached.
+
+    The per-run values ride in a broadcast one-row-per-stage frame built
+    through the Arrow ``createDataFrame`` path, not in ``F.lit``: a double
+    literal is inlined into the generated Java source, so every run would
+    compile fresh classes.  The frame is data, so a repeat run reuses the
+    cached code (tests/test_codegen_reuse.py)."""
+    import pandas as pd
+    from pyspark.sql.types import DoubleType, StringType, StructField, StructType
+
+    # each sink built stage, run_id and wall_ms from one source per row
+    # (literals, or a pandas frame), so they share the stage's nullability;
+    # keeping it keeps the written parquet schema
+    nullable = rows.schema["stage"].nullable
+    stamps = rows.sparkSession.createDataFrame(
+        pd.DataFrame({"stage": list(walls), "run_id": run_id,
+                      "wall_ms": [float(w) for w in walls.values()]}),
+        schema=StructType([
+            StructField("stage", StringType(), nullable),
+            StructField("run_id", StringType(), nullable),
+            StructField("wall_ms", DoubleType(), nullable),
+        ]),
+    )
+    return rows.join(F.broadcast(stamps), "stage").select(
+        "repo", "rows_out", "sha_ok", "files", "stage", "run_id", "wall_ms"
+    )
+
+
 def assemble_kg(
     typed: DataFrame, catalog: list[dict], file_local_dedup: bool
 ) -> KGAssembly:
@@ -493,29 +523,23 @@ def run_kg_pipeline(
     # the count plan — rows_out is exact, but its wall is a -1.0 sentinel
     # (the triples table is lazy here; the orchestration layers that
     # materialize it — incremental.py, the CLI — record the real wall).
-    def _stage_row(cnt_df: DataFrame, cnt_col: str, stage: str, wall: float) -> DataFrame:
+    def _stage_row(cnt_df: DataFrame, cnt_col: str, stage: str) -> DataFrame:
         return cnt_df.select(
             F.lit("__all__").alias("repo"),
             F.col(cnt_col).cast("long").alias("rows_out"),
             F.lit(True).alias("sha_ok"),
             F.lit(-1).cast("long").alias("files"),
             F.lit(stage).alias("stage"),
-            F.lit(run_id).alias("run_id"),
-            F.lit(wall).alias("wall_ms"),
         )
 
-    lineage = (
-        kg.repo_lineage
-        .withColumn("stage", F.lit("extract+link"))
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("wall_ms", F.lit(extract_wall_ms))
+    lineage = stamp_lineage(
+        kg.repo_lineage.withColumn("stage", F.lit("extract+link"))
         .unionByName(
-            _stage_row(
-                kg.entities.agg(F.count(F.lit(1)).alias("n")), "n",
-                "canonicalize", kg.canon_wall_ms,
-            )
+            _stage_row(kg.entities.agg(F.count(F.lit(1)).alias("n")), "n", "canonicalize")
         )
-        .unionByName(_stage_row(triples_count, "n_triples", "triples", -1.0))
+        .unionByName(_stage_row(triples_count, "n_triples", "triples")),
+        run_id,
+        {"extract+link": extract_wall_ms, "canonicalize": kg.canon_wall_ms, "triples": -1.0},
     )
 
     links = typed.select("mention_id", "label_id", "coarse_type", "fine_type", "score")

@@ -321,14 +321,17 @@ def ann_lsh_bucketed(spark, sf_dir):
     (_bucket_expr_spark_lit — drops dim x 4 md5/conv calls per row), and
     factored-norm scoring cosine; all three bit-identical by construction.
     The dim probe assumes a uniform embedding dim (the same contract
-    u5_u6_mlp_heads already relies on); an empty table falls back to the
-    per-row md5 expression so the builder stays total."""
+    u5_u6_mlp_heads already relies on).  An empty table, or a NULL first
+    embedding (``size`` gives NULL or -1), falls back to the per-row md5
+    expression, so the builder stays total and every non-NULL row still
+    gets its exact bucket."""
     first = T(spark, sf_dir, "embeddings").select(
         F.size("embedding").alias("d")
     ).first()
+    d = first["d"] if first is not None else None
     bucket_sql = (
-        _bucket_expr_spark_lit(first["d"], "embedding")
-        if first is not None
+        _bucket_expr_spark_lit(d, "embedding")
+        if d is not None and d > 0
         else _bucket_expr("spark", "embedding")
     )
     e = T_par(spark, sf_dir, "embeddings").withColumn(

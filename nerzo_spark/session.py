@@ -11,6 +11,10 @@ Scale posture (the point, even though tests run on ``local[N]``):
   Arrow-batched pandas UDF (no row-at-a-time Python anywhere).
 - broadcast threshold raised: the label/type catalog and anchor fixtures
   are tiny dimension tables and must never shuffle-join.
+- generated-code cache sized to the repo's working set, and stage ids kept
+  out of generated class names, so a repeat query reuses its compiled code
+  instead of re-running Janino and the JIT (ARCHITECTURE.md, "JVM-side
+  fixed costs").
 """
 
 from __future__ import annotations
@@ -21,7 +25,9 @@ from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """``SPARK_GRAFT_CPUS`` if set, else the cores this process may run on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def get_spark(
@@ -75,6 +81,20 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.maxResultSize", "2g")
+        # Generated-code cache (JVM-wide LRU of compiled whole-stage and
+        # expression classes; static, so it must be set before the first
+        # session).  The default of 100 entries is smaller than one catalog
+        # pass or one KG op, so every class was evicted before its reuse and
+        # each repeat query re-ran Janino and the JIT.  Measured working set:
+        # 894 distinct classes in one JVM that ran both benchmark workloads,
+        # every catalog oracle query at sf0.01 and sf0.001 and the test
+        # suite's KG runs.  2048 is the next power of two above twice that.
+        .config("spark.sql.codegen.cache.maxEntries", "2048")
+        # The cache is keyed on the generated source.  AQE numbers codegen
+        # stages in the order its query stages finish, so with the stage id
+        # in the class name one plan yields a different source from run to
+        # run whenever two stages race (j4_token_overlap_score does).
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # local mode = single JVM: the default 1g heap GC-thrashes with 32
         # concurrent task threads; only applies if the JVM isn't started yet
         .config("spark.driver.memory", os.environ.get("NERZO_DRIVER_MEM", "24g"))

@@ -3,10 +3,9 @@
 ``--anchors`` parquet, then check the written triples bit-exact against the
 committed independent gold and the per-stage O3 lineage (VERDICT r3 #5).
 
-The bench rig drives jobs/run_kg_bench.py; this covers the path a real user
-runs (``spark-submit jobs/run_kg.py --corpus ... --anchors ... --output``;
-plain ``python`` is the same entrypoint — SparkSession bootstrap included —
-minus cluster deploy, which jobs/bench_cluster.py exercises).
+This covers the path a real user runs (``spark-submit jobs/run_kg.py
+--corpus ... --anchors ... --output``; plain ``python`` is the same
+entrypoint, SparkSession bootstrap included).
 """
 
 from __future__ import annotations

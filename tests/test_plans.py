@@ -106,3 +106,44 @@ def test_u5_projection_no_shuffle_beyond_join(spark):
     # vec_id+1 equi-join on a small table -> broadcast; no other shuffles
     shuffles = tree.count("Exchange") - tree.count("BroadcastExchange")
     assert shuffles == 0, tree
+
+
+def test_ann_lsh_null_first_embedding(spark, tmp_path):
+    """A NULL first embedding must not break ann_lsh_bucketed's dim probe:
+    the plan falls back to the per-row md5 bucket expression, so every
+    non-NULL row lands in its exact bucket."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from nerzo_spark.plans.catalog_vec import _bucket_expr
+
+    rng = np.random.default_rng(3)
+    emb = [None] + [rng.standard_normal(8).astype(np.float32).tolist() for _ in range(39)]
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(range(40), pa.int64()),
+            "embedding": pa.array(emb, pa.list_(pa.float32())),
+            "label": pa.array([i % 3 for i in range(40)], pa.int32()),
+        }),
+        tmp_path / "embeddings.parquet",
+    )
+    got = catalog.queries()["ann_lsh_bucketed"](spark, str(tmp_path)).collect()
+    md5_bucket = {
+        r["vec_id"]: r["b"]
+        for r in spark.read.parquet(str(tmp_path / "embeddings.parquet"))
+        .filter(F.col("embedding").isNotNull())
+        .select("vec_id", F.expr(_bucket_expr("spark", "embedding")).alias("b"))
+        .collect()
+    }
+    # every non-NULL query with a bucket partner has neighbours
+    partnered = {
+        q for q in range(1, 10) if sum(b == md5_bucket[q] for b in md5_bucket.values()) > 1
+    }
+    assert partnered and partnered <= {r["query_id"] for r in got}
+    for r in got:
+        if r["query_id"] in md5_bucket:
+            assert r["bucket"] == md5_bucket[r["query_id"]]
+        if r["neighbor_id"] in md5_bucket:
+            assert md5_bucket[r["neighbor_id"]] == r["bucket"]

@@ -6,6 +6,7 @@ ties (the argpartition-ambiguous case), -inf self-masking and kk >= m."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from nerzo_spark.operators.topk import blockwise_topk, topk_desc_stable
 
@@ -82,3 +83,29 @@ def test_self_masked_neg_inf_row():
     for r in range(4):
         scores[r, r] = -np.inf
     assert np.array_equal(_ref(scores, 5), topk_desc_stable(scores, 5))
+
+
+def test_all_equal_scores_every_row_ambiguous():
+    # every row ties at the boundary, so every row takes the fallback sort
+    scores = np.full((64, 300), 0.25)
+    for kk in (1, 7, 299):
+        assert np.array_equal(_ref(scores, kk), topk_desc_stable(scores, kk))
+
+
+def test_quantized_scores_exact():
+    # cosine scores rounded to a coarse grid: ties everywhere, a mix of
+    # ambiguous and unambiguous rows in one batch
+    rng = np.random.default_rng(5)
+    for _ in range(40):
+        n = int(rng.integers(1, 50))
+        m = int(rng.integers(2, 400))
+        kk = int(rng.integers(1, m + 1))
+        scores = np.round(np.tanh(rng.standard_normal((n, m))), 1)
+        assert np.array_equal(_ref(scores, kk), topk_desc_stable(scores, kk))
+
+
+def test_nan_scores_rejected():
+    scores = np.zeros((2, 5))
+    scores[1, 3] = np.nan
+    with pytest.raises(AssertionError, match="NaN"):
+        topk_desc_stable(scores, 2)
