@@ -47,8 +47,10 @@ def entry(spark: SparkSession) -> DataFrame:
     )
 
     corpus = planted.unionByName(derived)
-    res = run_kg_pipeline(spark, corpus, anchors_df(spark, fx), repartition_to=8)
-    return res.triples
+    # the triples are checkpointed before the pipeline's caches are
+    # released, so the caller's actions read them, not a re-extraction
+    with run_kg_pipeline(spark, corpus, anchors_df(spark, fx), repartition_to=8) as res:
+        return res.triples.localCheckpoint()
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -168,10 +168,10 @@ def main() -> None:
     n_triples = {}
 
     def run_kg():
-        res = run_kg_pipeline(spark, corpus, anchors, repartition_to=4 * args.cores)
-        # lazy one-row count over the triples union (== triples.count(),
-        # test-pinned), run here over the persisted mention cache
-        n_triples["n"] = res.triples_count.collect()[0]["n_triples"]
+        with run_kg_pipeline(spark, corpus, anchors, repartition_to=4 * args.cores) as res:
+            # lazy one-row count over the triples union (== triples.count(),
+            # test-pinned), run here over the cached mention table
+            n_triples["n"] = res.triples_count.collect()[0]["n_triples"]
 
     timed("kg_pipeline", run_kg)
 

@@ -152,9 +152,10 @@ from functools import lru_cache
 # the cap (files/12500 partitions did it for the 3.2M campaign corpus), or
 # (b) raise NERZO_CACHE_ENTRIES (cost ~0.6 KB/entry/worker for the two
 # component caches).  The env var is read at import time in each Python
-# worker — set it via spark.executorEnv.NERZO_CACHE_ENTRIES on a cluster
-# (jobs/run_kg_bench.py propagates it); a stand-in artifact either way:
-# production replaces this featurizer with a GPU LLM forward.
+# worker — set it via spark.executorEnv.NERZO_CACHE_ENTRIES on a cluster,
+# where the driver's environment does not reach the executors; a stand-in
+# artifact either way: production replaces this featurizer with a GPU LLM
+# forward.
 import os as _os
 
 try:

@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from nerzo_spark.functions.hashing import ent_id
 from nerzo_spark.functions.text import norm_key, normalize_surface, squash, squash_key
+from nerzo_spark.session import cached
 
 
 def _driver_union_find(
@@ -222,35 +223,28 @@ def canonical_overrides(
     # (the whole design rests on collisions being rare; Path 3 exists for
     # the rest) — and a semi-join keeps multi-member buckets without ever
     # shuffling or sorting the edge rows.
-    # v5 (ADVICE r4): the aggregate is localCheckpointed EAGERLY so it runs
-    # exactly once — the old shape re-ran it for Path 3's hot_edges
-    # checkpoint — and its (count, sum bn, sum octet_length) stats drive
+    # v5 (ADVICE r4): the aggregate is cached so it runs exactly once — the
+    # old shape re-ran it for Path 3's hot_edges checkpoint — and its (count, sum bn, sum octet_length) stats drive
     # BOTH decisions: the Path-1/Path-3 split (sum bn >= hot node count, so
     # sum bn <= driver_limit guarantees the driver collect is bounded —
     # replaces the limit(driver_limit+1) probe job) and the broadcast gate.
     # v6 (ADVICE r5): the gate is BYTE-denominated, not row-count: bucket
     # keys embed normalized surfaces of unbounded length, so a row limit
-    # admitted anywhere from ~60 MB to several hundred MB.  The checkpointed
+    # admitted anywhere from ~60 MB to several hundred MB.  The cached
     # stats carry sum(octet_length(bucket)) for free; the estimate adds
     # ~32 B/row of UnsafeRow + hash-relation overhead.  Oversized tables
     # fall back to a shuffle semi-join (explicit F.broadcast would bypass
     # autoBroadcastJoinThreshold and could blow the driver / 8 GB cap).
-    # r7 (guide §1.2): persist the edge table for the duration of this
-    # builder — the collision-stats job below materializes it, and the
-    # hot-subgraph semi-join re-reads it; without the cache the
-    # normalize/squash regex projection over every distinct surface ran
-    # TWICE.  Surface-scale (2 rows per distinct surface), unpersisted on
-    # every exit path.
-    from pyspark.storagelevel import StorageLevel
-
-    all_edges = all_edges.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        collision_stats = (
-            all_edges.groupBy("bucket")
-            .agg(F.count("*").alias("bn"))
-            .filter(F.col("bn") > 1)
-            .localCheckpoint()
-        )
+    # The edge table is cached for the length of the block below: the
+    # collision-stats job materializes it and the hot-subgraph semi-join
+    # re-reads it; without the cache the normalize/squash regex projection
+    # over every distinct surface ran TWICE.  The collision stats are cached
+    # with it (read by the stats collect and by the semi-join).  Both are
+    # surface-scale and released on every exit path, before the driver
+    # union-find or the propagation loop.
+    with cached(all_edges) as all_edges, cached(
+        all_edges.groupBy("bucket").agg(F.count("*").alias("bn")).filter(F.col("bn") > 1)
+    ) as collision_stats:
         st = collision_stats.agg(
             F.count("*").alias("n_buckets"),
             F.coalesce(F.sum("bn"), F.lit(0)).alias("hot_edge_rows"),
@@ -277,12 +271,8 @@ def canonical_overrides(
             # Path 3 checkpoints HERE (Path 1's single collect needs no
             # reuse): the loop reads the edges every iteration and must not
             # re-run the key-regex projection + collision semi-join each
-            # round (the bucket aggregation above runs once).
+            # round; the eager checkpoint also outlives the caches above.
             hot_edges = hot_edges.localCheckpoint()
-    finally:
-        # surface-scale cache; released on every exit path, exceptions
-        # included, before the driver union-find or the propagation loop
-        all_edges.unpersist()
 
     if on_driver:
         mapping = _driver_union_find(

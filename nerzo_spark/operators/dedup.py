@@ -12,27 +12,22 @@ from pairing, logging what was dropped (no silent caps).  Docs in a dropped
 band are near-exact duplicates by construction — the exact-dedup operator
 (md5 groupBy, catalog_text.py dedup_exact_groups) already clusters those at
 linear cost, so nothing is lost end-to-end.
+
+One implementation, :func:`minhash_lsh_pairs_rowform`: signatures and set
+sizes are per-row array expressions over one row per doc.  Its independent
+reference is the DuckDB oracle registered for ``dedup_minhash_lsh_pairs``
+(plans/catalog_text.py), which tests/test_scale_guards.py runs over the
+tests' own rows.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
+
+from nerzo_spark.session import cached
 
 DEFAULT_BAND_CAP = 64
-
-
-def minhash_signatures(sh: DataFrame, n_hashes: int = 4) -> DataFrame:
-    """(doc_id, s) exploded shingles -> one row per doc with mh0..mh{n-1}.
-    One-pass hash-aggregate: map-side partial min, single shuffle on doc_id;
-    md5-based so the signature is engine-portable (oracle parity)."""
-    return sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{j}|"), F.col("s")))).alias(f"mh{j}")
-            for j in range(n_hashes)
-        ]
-    )
 
 
 def _bands_of(sig: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
@@ -59,17 +54,16 @@ def _band_candidates(
 ) -> DataFrame:
     """Distinct candidate pairs (id_a[, <c>a...], id_b[, <c>b...]) from
     bands with <= band_cap members — the skew guard + no-silent-caps log
-    shared by both minhash builders (a degenerate band of M near-identical
-    docs would otherwise emit M(M-1)/2 rows of real output volume that no
-    AQE split can fix; dropped members are near-exact dups covered by
-    dedup_exact_groups)."""
+    (a degenerate band of M near-identical docs would otherwise emit
+    M(M-1)/2 rows of real output volume that no AQE split can fix; dropped
+    members are near-exact dups covered by dedup_exact_groups)."""
     band_sizes = bands.groupBy("band").agg(F.count("*").alias("bcnt"))
     dropped = band_sizes.filter(F.col("bcnt") > band_cap)
     n_dropped = dropped.count()  # band-scale action; the no-silent-caps log
     if n_dropped > 0 and logger is not None:
         worst = dropped.agg(F.max("bcnt")).first()[0]
         logger(
-            f"[minhash_lsh_pairs] skew guard: dropped {n_dropped} band(s) with "
+            f"[minhash_lsh_pairs_rowform] skew guard: dropped {n_dropped} band(s) with "
             f"> {band_cap} docs (largest: {worst}); members are near-exact "
             f"dups — covered by exact dedup (dedup_exact_groups)"
         )
@@ -93,53 +87,6 @@ def _band_candidates(
     )
 
 
-def minhash_lsh_pairs(
-    sh: DataFrame,
-    threshold: float = 0.5,
-    band_cap: int = DEFAULT_BAND_CAP,
-    logger=print,
-) -> DataFrame:
-    """Banded LSH candidate generation + exact-Jaccard verification.
-
-    sh: (doc_id, s) DISTINCT shingles per doc (min over distinct == min over
-    all, so one table feeds signatures, bands and the verify join).
-
-    Returns (id_a, id_b, jaccard) for verified pairs with J >= threshold,
-    considering only bands with <= band_cap member docs (skew guard above).
-    Reuse: sh is persisted MEMORY_AND_DISK (the in-memory columnar cache,
-    compressed unless ``spark.sql.inMemoryColumnarStorage.compressed`` is
-    off) because it is read three times (signatures, sizes, verify).
-    """
-    sh = sh.persist(StorageLevel.MEMORY_AND_DISK)
-    sig = minhash_signatures(sh)
-    bands = _bands_of(sig).persist(StorageLevel.MEMORY_AND_DISK)
-    cand = _band_candidates(bands, band_cap, logger)
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = (
-        cand.join(sh.alias("x"), F.col("x.doc_id") == F.col("id_a"))
-        .join(sh.alias("y"), (F.col("y.doc_id") == F.col("id_b")) & (F.col("y.s") == F.col("x.s")))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("i"))
-    )
-    jac = F.col("i") * 1.0 / (F.col("na.n") + F.col("nb.n") - F.col("i"))
-    out = (
-        inter.join(sizes.alias("na"), F.col("na.doc_id") == F.col("id_a"))
-        .join(sizes.alias("nb"), F.col("nb.doc_id") == F.col("id_b"))
-        .withColumn("jaccard", F.round(jac, 6))
-        # filter on the SAME rounded expression that is returned, so no
-        # emitted row can display a jaccard below the threshold
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    # the pair table is tiny (verified near-dups); materialize it eagerly so
-    # the two intermediate caches can be released NOW instead of leaking
-    # executor memory for the rest of the session
-    out = out.localCheckpoint(eager=True)
-    bands.unpersist()
-    sh.unpersist()
-    return out
-
-
 def minhash_lsh_pairs_rowform(
     doc_sh: DataFrame,
     explode_shingles=None,
@@ -147,8 +94,12 @@ def minhash_lsh_pairs_rowform(
     band_cap: int = DEFAULT_BAND_CAP,
     logger=print,
 ) -> DataFrame:
-    """Row-form twin of :func:`minhash_lsh_pairs` (r7, guide §2.3/§2.4):
-    same pairs, same jaccard values, fraction of the shuffled bytes.
+    """Banded LSH candidate generation + exact-Jaccard verification.
+
+    Returns (id_a, id_b, jaccard) for verified pairs with J >= threshold,
+    considering only bands with <= band_cap member docs (skew guard above).
+    The result is materialized (an eager local checkpoint): its
+    intermediate caches are released before it is returned.
 
     ``doc_sh``: (doc_id, sh ARRAY<STRING>) — ONE row per doc carrying its
     DISTINCT shingle array.  Signatures and set sizes become per-row array
@@ -156,11 +107,9 @@ def minhash_lsh_pairs_rowform(
     exploded table, ``size(sh)`` == exploded count), so the shingle table is
     never exploded corpus-wide, never persisted, and never shuffled; only
     CANDIDATE docs (pairs sharing a band, post skew-guard) are exploded for
-    the exact-Jaccard verify — candidate-scale, not corpus-scale.  Band
-    derivation, the band_cap skew guard (+ no-silent-caps logging) and the
-    rounded-jaccard threshold are expression-identical to the exploded
-    form, so outputs match bit-for-bit (asserted against the frozen DuckDB
-    oracle at sf0.01/sf0.1 and by tests/test_dedup_units.py).
+    the exact-Jaccard verify — candidate-scale, not corpus-scale.  Outputs
+    match the DuckDB oracle of ``dedup_minhash_lsh_pairs`` bit-for-bit
+    (tests/test_scale_guards.py, including an active band-cap drop).
 
     ``explode_shingles``: optional callable ``(cand_ids_df) -> (doc_id, s)``
     producing the exploded distinct shingles of the candidate docs only.
@@ -180,43 +129,41 @@ def minhash_lsh_pairs_rowform(
             for j in range(4)
         ],
     )
-    bands = _bands_of(base, carry=("n",)).persist(StorageLevel.MEMORY_AND_DISK)
-    # candidate-scale, read 3x below (two cand_ids selects + the inter
-    # join); persist instead of localCheckpoint so it is RELEASED at the
-    # end — the final eager checkpoint of `out` makes re-execution moot
-    cand = _band_candidates(bands, band_cap, logger, carry=("n",)).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    cand_ids = (
-        cand.select(F.col("id_a").alias("doc_id"))
-        .unionByName(cand.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    if explode_shingles is not None:
-        cand_sh = explode_shingles(cand_ids)
-    else:
-        cand_sh = doc_sh.join(F.broadcast(cand_ids), "doc_id", "left_semi").select(
-            "doc_id", F.explode("sh").alias("s")
+    # bands: read by the skew guard's size count and by the candidate join;
+    # cand: candidate-scale, read 3x (two cand_ids selects + the inter join);
+    # cand_sh: candidate-scale, read twice by the intersection self-join.
+    # The pair table is tiny (verified near-dups), so it is checkpointed
+    # eagerly before the caches it was computed from are released.
+    with cached(_bands_of(base, carry=("n",))) as bands, cached(
+        _band_candidates(bands, band_cap, logger, carry=("n",))
+    ) as cand:
+        cand_ids = (
+            cand.select(F.col("id_a").alias("doc_id"))
+            .unionByName(cand.select(F.col("id_b").alias("doc_id")))
+            .distinct()
         )
-    # candidate-scale; read twice by the intersection self-join below
-    cand_sh = cand_sh.persist(StorageLevel.MEMORY_AND_DISK)
-    inter = (
-        cand.join(cand_sh.alias("x"), F.col("x.doc_id") == F.col("id_a"))
-        .join(
-            cand_sh.alias("y"),
-            (F.col("y.doc_id") == F.col("id_b")) & (F.col("y.s") == F.col("x.s")),
-        )
-        .groupBy("id_a", "id_b", "na", "nb")
-        .agg(F.count("*").alias("i"))
-    )
-    jac = F.col("i") * 1.0 / (F.col("na") + F.col("nb") - F.col("i"))
-    out = (
-        inter.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    out = out.localCheckpoint(eager=True)
-    bands.unpersist()
-    cand.unpersist()
-    cand_sh.unpersist()
-    return out
+        if explode_shingles is not None:
+            cand_sh = explode_shingles(cand_ids)
+        else:
+            cand_sh = doc_sh.join(F.broadcast(cand_ids), "doc_id", "left_semi").select(
+                "doc_id", F.explode("sh").alias("s")
+            )
+        with cached(cand_sh) as cand_sh:
+            inter = (
+                cand.join(cand_sh.alias("x"), F.col("x.doc_id") == F.col("id_a"))
+                .join(
+                    cand_sh.alias("y"),
+                    (F.col("y.doc_id") == F.col("id_b")) & (F.col("y.s") == F.col("x.s")),
+                )
+                .groupBy("id_a", "id_b", "na", "nb")
+                .agg(F.count("*").alias("i"))
+            )
+            jac = F.col("i") * 1.0 / (F.col("na") + F.col("nb") - F.col("i"))
+            return (
+                inter.withColumn("jaccard", F.round(jac, 6))
+                # filter on the SAME rounded expression that is returned, so
+                # no emitted row can display a jaccard below the threshold
+                .filter(F.col("jaccard") >= threshold)
+                .select("id_a", "id_b", "jaccard")
+                .localCheckpoint(eager=True)
+            )

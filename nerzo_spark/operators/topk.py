@@ -202,7 +202,6 @@ def knn_self_join(
     """
     from pyspark.sql import Window
     from pyspark.sql import functions as F
-    from pyspark.storagelevel import StorageLevel
 
     cols = [id_col, emb_col] + ([label_col] if label_col else [])
     src = vectors.select(*cols)
@@ -219,7 +218,11 @@ def knn_self_join(
     if src.rdd.getNumPartitions() < q_parts:
         src = src.repartition(q_parts)
     if n_chunks > 1:
-        src = src.persist(StorageLevel.MEMORY_AND_DISK)
+        # every chunk collect and every scorer pass re-reads src, and the
+        # returned plan does too, so no scoped cache can hold it: a lazy
+        # local checkpoint is materialized by the first chunk collect and
+        # released by Spark's ContextCleaner together with the result
+        src = src.localCheckpoint(eager=False)
 
     out_schema = "query_id long, neighbor_id long, score double, rank int"
     if label_col:

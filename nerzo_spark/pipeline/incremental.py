@@ -80,8 +80,8 @@ def run_incremental(
     # the mention table read back from parquet no longer carries extraction's
     # file contiguity, so the defined_in dedup must shuffle
     t_canon0 = time.time()
-    kg = assemble_kg(spark.read.parquet(mentions_path), catalog, file_local_dedup=False)
-    try:
+    mentions = spark.read.parquet(mentions_path)
+    with assemble_kg(mentions, catalog, file_local_dedup=False) as kg:
         kg.entities.write.mode("overwrite").parquet(entities_path)
         n_entities = spark.read.parquet(entities_path).count()
         canon_wall_ms = (time.time() - t_canon0) * 1000.0
@@ -90,8 +90,6 @@ def run_incremental(
         kg.triples.write.mode("overwrite").partitionBy("pred").parquet(triples_path)
         n_triples = spark.read.parquet(triples_path).count()
         triples_wall_ms = (time.time() - t_triples0) * 1000.0
-    finally:
-        kg.surface_counts.unpersist()
 
     # O3 lineage, per stage (VERDICT r3 #5): per-repo rows for the
     # incremental extract stage (rows/files/sha-invariant per partition) +

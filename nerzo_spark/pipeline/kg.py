@@ -28,7 +28,9 @@ from __future__ import annotations
 
 import time
 import uuid
-from dataclasses import dataclass
+from collections.abc import Iterator
+from contextlib import ExitStack, contextmanager
+from dataclasses import dataclass, field
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -37,12 +39,20 @@ from pyspark.sql import functions as F
 from nerzo_spark.embed.embedder import embed_span
 from nerzo_spark.fixtures.labels import label_rows
 from nerzo_spark.operators.extract_link import extract_and_link
+from nerzo_spark.session import cached
 
 TRIPLE_SCHEMA = "subj string, pred string, obj string, repo string, path string, commit string"
 
 
 @dataclass
 class KGResult:
+    """The in-memory KG.  It holds three caches: the mention table
+    (``mentions``), the surface aggregate the entities and triples plans
+    read, and ``triples_count``.  ``close()`` (or leaving a ``with`` block)
+    releases them; the plans stay valid and recompute on their next action.
+    A result that is never closed, even once garbage-collected, keeps its
+    caches until the session's ``clearCache()``."""
+
     mentions: DataFrame
     links: DataFrame
     entities: DataFrame
@@ -52,9 +62,19 @@ class KGResult:
     # count of the materialized mention table (the extract+link action the
     # pipeline already runs) — links_to arm cardinality, free to reuse
     n_mentions: int = 0
-    # lazy, persisted 1-row (n_triples long) plan == triples.count();
+    # lazy, cached 1-row (n_triples long) plan == triples.count();
     # None only for hand-built results in tests
     triples_count: DataFrame | None = None
+    caches: ExitStack = field(default_factory=ExitStack, repr=False)
+
+    def close(self) -> None:
+        self.caches.close()
+
+    def __enter__(self) -> KGResult:
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.close()
 
 
 def build_label_catalog(anchor_rows: list[dict] | DataFrame) -> list[dict]:
@@ -355,8 +375,6 @@ def build_triples(
 class KGAssembly:
     """What :func:`assemble_kg` hands back to its sink."""
 
-    # persisted (fine_type, surface, n_in_surface); the sink releases it
-    surface_counts: DataFrame
     n_mentions: int
     # time.time() once the surface pass (the first mention-scale job) ran
     t_surfaces: float
@@ -397,9 +415,10 @@ def stamp_lineage(rows: DataFrame, run_id: str, walls: dict[str, float]) -> Data
     )
 
 
+@contextmanager
 def assemble_kg(
     typed: DataFrame, catalog: list[dict], file_local_dedup: bool
-) -> KGAssembly:
+) -> Iterator[KGAssembly]:
     """The KG back half over a typed mention table, shared by both sinks:
     surface aggregate, canonical overrides, entities, triples and the
     per-repo lineage rows.  ``run_kg_pipeline`` passes its in-memory
@@ -408,10 +427,9 @@ def assemble_kg(
 
     Runs two eager stages: the surface pass and the canonicalize
     clustering.  Everything else is a lazy plan over ``typed`` and the
-    persisted surface table, which is released here if anything raises
-    and by the sink otherwise."""
-    from pyspark.storagelevel import StorageLevel
-
+    cached surface aggregate, which this context manager holds: the sink
+    runs those plans inside the ``with`` block, and the cache is released
+    when the block exits, exceptions included."""
     from nerzo_spark.operators.canonicalize import (
         canonical_overrides,
         resolve_entities,
@@ -427,12 +445,9 @@ def assemble_kg(
     # partition to its local distinct surfaces before anything crosses
     # executors.  Overrides, entities and the typed_as arm all consume
     # `surfaces` as a zero-cost projection of this cached table.
-    surface_counts = (
-        typed.groupBy("fine_type", "surface")
-        .agg(F.count(F.lit(1)).alias("n_in_surface"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    try:
+    with cached(
+        typed.groupBy("fine_type", "surface").agg(F.count(F.lit(1)).alias("n_in_surface"))
+    ) as surface_counts:
         n_mentions = int(
             surface_counts.agg(F.sum("n_in_surface")).collect()[0][0] or 0
         )
@@ -445,28 +460,21 @@ def assemble_kg(
         # real canonicalize stage wall.
         overrides = canonical_overrides(surfaces, already_distinct=True)
         canon_wall_ms = (time.time() - t_surfaces) * 1000.0
-        entities = resolve_entities(surfaces, overrides)
-        triples = build_triples(
-            typed, overrides, catalog, surfaces=surfaces,
-            file_local_dedup=file_local_dedup,
+        yield KGAssembly(
+            n_mentions=n_mentions,
+            t_surfaces=t_surfaces,
+            canon_wall_ms=canon_wall_ms,
+            entities=resolve_entities(surfaces, overrides),
+            triples=build_triples(
+                typed, overrides, catalog, surfaces=surfaces,
+                file_local_dedup=file_local_dedup,
+            ),
+            repo_lineage=typed.groupBy("repo").agg(
+                F.count("*").alias("rows_out"),
+                F.min(F.col("sha_ok").cast("int")).cast("boolean").alias("sha_ok"),
+                F.countDistinct("path").alias("files"),
+            ),
         )
-    except BaseException:
-        surface_counts.unpersist()
-        raise
-    repo_lineage = typed.groupBy("repo").agg(
-        F.count("*").alias("rows_out"),
-        F.min(F.col("sha_ok").cast("int")).cast("boolean").alias("sha_ok"),
-        F.countDistinct("path").alias("files"),
-    )
-    return KGAssembly(
-        surface_counts=surface_counts,
-        n_mentions=n_mentions,
-        t_surfaces=t_surfaces,
-        canon_wall_ms=canon_wall_ms,
-        entities=entities,
-        triples=triples,
-        repo_lineage=repo_lineage,
-    )
 
 
 def run_kg_pipeline(
@@ -485,71 +493,70 @@ def run_kg_pipeline(
     # ONE fused Python pass: detect -> embed -> link (vectors never cross
     # Arrow; see operators/extract_link.py).  The result is the mentions
     # table AND the links table in one — no mention-scale join at all.
-    # persist (in-memory columnar cache) rather than localCheckpoint
+    # Cached (in-memory columnar) rather than localCheckpointed
     # (deserialized Java rows): the surface pass builds it, and the triples
-    # arms and the lineage rows re-read it.
-    from pyspark.storagelevel import StorageLevel
-
-    typed = extract_and_link(corpus, catalog, repartition_to=repartition_to).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    try:
+    # arms and the lineage rows re-read it.  The mention cache, the surface
+    # aggregate and the triples count are entered on one stack; it moves to
+    # the KGResult on success, and is unwound here if anything raises.
+    with ExitStack() as caches:
+        typed = caches.enter_context(
+            cached(extract_and_link(corpus, catalog, repartition_to=repartition_to))
+        )
         # typed reaches build_triples through a narrow chain from
         # extraction, so the file-local defined_in dedup is exact (see
         # build_triples doc)
-        kg = assemble_kg(typed, catalog, file_local_dedup=True)
-    except BaseException:
-        typed.unpersist()
-        raise
-    # wall of the work executed up to the surface pass (catalog + extract +
-    # link + surface agg), so the lineage stage label and its wall agree
-    extract_wall_ms = (kg.t_surfaces - t0) * 1000.0
+        kg = caches.enter_context(assemble_kg(typed, catalog, file_local_dedup=True))
+        # wall of the work executed up to the surface pass (catalog +
+        # extract + link + surface agg), so the lineage stage label and its
+        # wall agree
+        extract_wall_ms = (kg.t_surfaces - t0) * 1000.0
 
-    # lazy persist of the ONE-row count plan: it is embedded both in
-    # KGResult.triples_count and in the lineage 'triples' row — a caller
-    # materializing both (or lineage twice) would otherwise pay the
-    # mention-scale scan each time.  No action is triggered here (keeps the
-    # no-serialized-action property of the library path).
-    triples_count = kg.triples.agg(
-        F.count(F.lit(1)).alias("n_triples")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-
-    # Per-stage lineage on the library path, without adding serialized
-    # actions to the pipeline's own critical path: the extract+link rows are
-    # per-repo with the measured wall; 'canonicalize' carries the wall
-    # measured around the (eager) clustering and a LAZY rows_out =
-    # |entities| (surface-scale agg over the persisted surfaces cache,
-    # evaluated only when a caller materializes lineage); 'triples' reuses
-    # the count plan — rows_out is exact, but its wall is a -1.0 sentinel
-    # (the triples table is lazy here; the orchestration layers that
-    # materialize it — incremental.py, the CLI — record the real wall).
-    def _stage_row(cnt_df: DataFrame, cnt_col: str, stage: str) -> DataFrame:
-        return cnt_df.select(
-            F.lit("__all__").alias("repo"),
-            F.col(cnt_col).cast("long").alias("rows_out"),
-            F.lit(True).alias("sha_ok"),
-            F.lit(-1).cast("long").alias("files"),
-            F.lit(stage).alias("stage"),
+        # lazy cache of the ONE-row count plan: it is embedded both in
+        # KGResult.triples_count and in the lineage 'triples' row — a caller
+        # materializing both (or lineage twice) would otherwise pay the
+        # mention-scale scan each time.  No action is triggered here (keeps
+        # the no-serialized-action property of the library path).
+        triples_count = caches.enter_context(
+            cached(kg.triples.agg(F.count(F.lit(1)).alias("n_triples")))
         )
 
-    lineage = stamp_lineage(
-        kg.repo_lineage.withColumn("stage", F.lit("extract+link"))
-        .unionByName(
-            _stage_row(kg.entities.agg(F.count(F.lit(1)).alias("n")), "n", "canonicalize")
-        )
-        .unionByName(_stage_row(triples_count, "n_triples", "triples")),
-        run_id,
-        {"extract+link": extract_wall_ms, "canonicalize": kg.canon_wall_ms, "triples": -1.0},
-    )
+        # Per-stage lineage on the library path, without adding serialized
+        # actions to the pipeline's own critical path: the extract+link rows
+        # are per-repo with the measured wall; 'canonicalize' carries the
+        # wall measured around the (eager) clustering and a LAZY rows_out =
+        # |entities| (surface-scale agg over the cached surfaces, evaluated
+        # only when a caller materializes lineage); 'triples' reuses the
+        # count plan — rows_out is exact, but its wall is a -1.0 sentinel
+        # (the triples table is lazy here; the orchestration layers that
+        # materialize it — incremental.py, the CLI — record the real wall).
+        def _stage_row(cnt_df: DataFrame, cnt_col: str, stage: str) -> DataFrame:
+            return cnt_df.select(
+                F.lit("__all__").alias("repo"),
+                F.col(cnt_col).cast("long").alias("rows_out"),
+                F.lit(True).alias("sha_ok"),
+                F.lit(-1).cast("long").alias("files"),
+                F.lit(stage).alias("stage"),
+            )
 
-    links = typed.select("mention_id", "label_id", "coarse_type", "fine_type", "score")
-    return KGResult(
-        mentions=typed,
-        links=links,
-        entities=kg.entities,
-        triples=kg.triples,
-        lineage=lineage,
-        label_catalog=catalog,
-        n_mentions=kg.n_mentions,
-        triples_count=triples_count,
-    )
+        lineage = stamp_lineage(
+            kg.repo_lineage.withColumn("stage", F.lit("extract+link"))
+            .unionByName(
+                _stage_row(kg.entities.agg(F.count(F.lit(1)).alias("n")), "n", "canonicalize")
+            )
+            .unionByName(_stage_row(triples_count, "n_triples", "triples")),
+            run_id,
+            {"extract+link": extract_wall_ms, "canonicalize": kg.canon_wall_ms,
+             "triples": -1.0},
+        )
+
+        return KGResult(
+            mentions=typed,
+            links=typed.select("mention_id", "label_id", "coarse_type", "fine_type", "score"),
+            entities=kg.entities,
+            triples=kg.triples,
+            lineage=lineage,
+            label_catalog=catalog,
+            n_mentions=kg.n_mentions,
+            triples_count=triples_count,
+            caches=caches.pop_all(),
+        )

@@ -41,8 +41,9 @@ _run_cache: dict[str, tuple[object, object]] = {}
 
 def _run(spark):
     """One pipeline execution per SparkSession: the 4 kg_* driver queries
-    share the same KGResult (persisted mentions), so the driver pays the
-    extract+link stage once, not four times.  Keyed by applicationId, not
+    share the same KGResult (cached mentions), so the driver pays the
+    extract+link stage once, not four times.  The memoized result is never
+    closed: its caches live as long as the session.  Keyed by applicationId, not
     id(spark): a dead session's id() can be recycled by the allocator in a
     long-lived process and would serve stale results.  Entries whose
     SparkContext has stopped are evicted on the next call (ADVICE r3), so a

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from nerzo_spark.functions.hashing import md5_i64_duckdb, md5_i64_sql
 from nerzo_spark.plans.catalog import T, T_par, register
+from nerzo_spark.session import cached
 
 _TOK = r"\s+"
 
@@ -385,10 +386,9 @@ def dedup_minhash_lsh_pairs(spark, sf_dir):
     excluded (quadratic skew guard, operators/dedup.py — the oracle mirrors
     the same cap).
 
-    r7: row-form builder (operators/dedup.py minhash_lsh_pairs_rowform) —
-    signatures/sizes as per-row array expressions, shingles exploded only
-    for candidate docs; identical output (oracle-verified), no corpus-scale
-    explode/persist/shuffle."""
+    Built by operators/dedup.py minhash_lsh_pairs_rowform: signatures and
+    sizes are per-row array expressions, and shingles are exploded only for
+    candidate docs, so there is no corpus-scale explode, cache or shuffle."""
     from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform
 
     d = _docs_par(spark, sf_dir)
@@ -496,56 +496,48 @@ def _ngram_jaccard_pairs(d, df_cap: int = NGRAM_DF_CAP, logger=print):
     view over the shingle pipeline — recomputation semantics differ from a
     normal lazy DataFrame (re-executing the result does NOT re-scan the
     corpus)."""
-    from pyspark.storagelevel import StorageLevel
-
     sh0 = d.select(
         "doc_id", "source", F.explode(F.array_distinct(F.expr(_SHINGLE_SPARK))).alias("s")
     )
-    # persist so the drop-count action below MATERIALIZES the aggregation
+    # cached so the drop-count action below MATERIALIZES the aggregation
     # the semi-join needs anyway — one shingle scan, not two (ADVICE r3).
-    # Shingle-df-scale, MEMORY_AND_DISK, LRU-evictable; session-scoped.
-    sdf = (
-        sh0.groupBy("s", "source")
-        .agg(F.count("*").alias("df"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    n_dropped = sdf.filter(F.col("df") > df_cap).count()
-    if n_dropped > 0 and logger is not None:
-        logger(
-            f"[ngram_jaccard_top_pairs] skew guard: dropped {n_dropped} "
-            f"shingle(s) with per-source document frequency > {df_cap} "
-            f"(boilerplate text; Jaccard computed over kept shingles)"
+    # The result is a top-20 — driver-sized by construction — so it is
+    # collected inside the block and the shingle-df cache is released
+    # before returning; callers get a driver-local Arrow frame with the
+    # identical schema.
+    with cached(sh0.groupBy("s", "source").agg(F.count("*").alias("df"))) as sdf:
+        n_dropped = sdf.filter(F.col("df") > df_cap).count()
+        if n_dropped > 0 and logger is not None:
+            logger(
+                f"[ngram_jaccard_top_pairs] skew guard: dropped {n_dropped} "
+                f"shingle(s) with per-source document frequency > {df_cap} "
+                f"(boilerplate text; Jaccard computed over kept shingles)"
+            )
+        sh = sh0.join(sdf.filter(F.col("df") <= df_cap).select("s", "source"), ["s", "source"])
+        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
+        inter = (
+            sh.alias("a")
+            .join(
+                sh.alias("b"),
+                (F.col("a.s") == F.col("b.s"))
+                & (F.col("a.source") == F.col("b.source"))
+                & (F.col("a.doc_id") < F.col("b.doc_id")),
+            )
+            .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+            .agg(F.count("*").alias("i"))
         )
-    sh = sh0.join(sdf.filter(F.col("df") <= df_cap).select("s", "source"), ["s", "source"])
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    inter = (
-        sh.alias("a")
-        .join(
-            sh.alias("b"),
-            (F.col("a.s") == F.col("b.s"))
-            & (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
+        pairs = (
+            inter.join(sizes.alias("na"), F.col("na.doc_id") == F.col("id_a"))
+            .join(sizes.alias("nb"), F.col("nb.doc_id") == F.col("id_b"))
+            .select(
+                "id_a",
+                "id_b",
+                F.round(F.col("i") * 1.0 / (F.col("na.n") + F.col("nb.n") - F.col("i")), 6).alias("jaccard"),
+            )
+            .orderBy(F.desc("jaccard"), "id_a", "id_b")
+            .limit(20)
         )
-        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .agg(F.count("*").alias("i"))
-    )
-    pairs = (
-        inter.join(sizes.alias("na"), F.col("na.doc_id") == F.col("id_a"))
-        .join(sizes.alias("nb"), F.col("nb.doc_id") == F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(F.col("i") * 1.0 / (F.col("na.n") + F.col("nb.n") - F.col("i")), 6).alias("jaccard"),
-        )
-        .orderBy(F.desc("jaccard"), "id_a", "id_b")
-        .limit(20)
-    )
-    # the result is a top-20 — driver-sized by construction.  Materialize it
-    # here so the shingle-df cache can be RELEASED before returning (round-4
-    # nit: the lazy shape retained sdf for the session's lifetime); callers
-    # get a driver-local Arrow frame with the identical schema.
-    out = pairs.toPandas()
-    sdf.unpersist()
+        out = pairs.toPandas()
     return d.sparkSession.createDataFrame(out, schema=pairs.schema)
 
 

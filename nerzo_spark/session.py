@@ -15,19 +15,50 @@ Scale posture (the point, even though tests run on ``local[N]``):
   out of generated class names, so a repeat query reuses its compiled code
   instead of re-running Janino and the JIT (ARCHITECTURE.md, "JVM-side
   fixed costs").
+- one way to hold a cache: :func:`cached` persists a frame for the length
+  of a ``with`` block and releases it on every exit path (ARCHITECTURE.md,
+  "Cache lifetime").
 """
 
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 
 def default_parallelism() -> int:
     """``SPARK_GRAFT_CPUS`` if set, else the cores this process may run on."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS")
     return int(cpus) if cpus else len(os.sched_getaffinity(0))
+
+
+@contextmanager
+def cached(df: DataFrame) -> Iterator[DataFrame]:
+    """Persist ``df`` (in-memory columnar cache, spilling to disk) for the
+    length of the ``with`` block and unpersist it when the block exits,
+    exceptions included.  Persisting is lazy: the block's first action
+    builds the cache.  A plan that must outlive the block has to be
+    materialized inside it (``localCheckpoint(eager=True)``, ``toPandas``,
+    a write).
+
+    Dropping the holder of a block that never exited (an unclosed
+    :class:`~nerzo_spark.pipeline.kg.KGResult` being garbage-collected,
+    or the interpreter shutting down) is not an exit: the cache stays
+    until the session's ``clearCache()``, as an unmanaged persist would."""
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        yield df
+    except GeneratorExit:
+        # abandoned, not exited (see above)
+        raise
+    except BaseException:
+        df.unpersist()
+        raise
+    df.unpersist()
 
 
 def get_spark(

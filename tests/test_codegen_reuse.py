@@ -50,18 +50,14 @@ def test_kg_pipeline_repeat_compiles_nothing(spark, fixture_small):
     from nerzo_spark.pipeline.kg import run_kg_pipeline
 
     def run():
-        res = run_kg_pipeline(
+        with run_kg_pipeline(
             spark,
             corpus_df(spark, fixture_small),
             anchors_df(spark, fixture_small),
             repartition_to=8,
-        )
-        try:
+        ) as res:
             res.triples_count.collect()
             res.lineage.collect()
-        finally:
-            res.triples_count.unpersist()
-            res.mentions.unpersist()
 
     assert _repeat_compiles(spark, run) == 0
 

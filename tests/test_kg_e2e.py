@@ -128,22 +128,19 @@ def test_file_local_dedup_tripwire(spark, fixture_small, kg_result, tmp_path):
     false-passed this), and a parquet round-trip (no extraction MapInPandas
     in the plan at all) — while accepting the legit persisted chain."""
     import pytest
-    from pyspark.storagelevel import StorageLevel
 
     from nerzo_spark.pipeline.kg import _assert_narrow_from_extraction
+    from nerzo_spark.session import cached
 
     typed = kg_result.mentions
     # legit: cache directly over the extraction mapInPandas
     _assert_narrow_from_extraction(typed)
 
     # hazard 1 (ADVICE r4): shuffle below the cache boundary
-    reshuffled = typed.repartition(8).persist(StorageLevel.MEMORY_AND_DISK)
-    try:
+    with cached(typed.repartition(8)) as reshuffled:
         reshuffled.count()
         with pytest.raises(ValueError, match="narrow"):
             _assert_narrow_from_extraction(reshuffled)
-    finally:
-        reshuffled.unpersist()
 
     # hazard 2: parquet round-trip (incremental.py's shape) — no MapInPandas
     p = str(tmp_path / "typed_roundtrip")

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from nerzo_spark.fixtures.spark_io import anchors_df, corpus_df
@@ -259,8 +260,6 @@ def test_failed_build_releases_caches(spark, fixture_small, tmp_path, monkeypatc
     """A build that fails inside canonicalization, before or after the
     edge table is released, leaves no entry behind in Spark's cache manager,
     on either sink."""
-    import pytest
-
     import nerzo_spark.operators.canonicalize as canon
     from nerzo_spark.pipeline.incremental import run_incremental
 
@@ -284,3 +283,48 @@ def test_failed_build_releases_caches(spark, fixture_small, tmp_path, monkeypatc
                 with pytest.raises(RuntimeError, match="injected"):
                     build(str(tmp_path / f"{target}_{sink}"))
                 assert cache.numCachedEntries() == before, (target, sink)
+
+
+def test_closed_kg_result_releases_caches(spark, fixture_small):
+    """Leaving ``with run_kg_pipeline(...)`` releases every cache the build
+    holds (the mention table, the surface aggregate and the triples count),
+    after the caller has collected from them."""
+    fx = fixture_small
+    # a repo subset: its plans must not match the session's cached kg_result
+    repos = sorted({c["repo"] for c in fx.corpus})[:4]
+    corpus = corpus_df(spark, fx).filter(F.col("repo").isin(repos))
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    with run_kg_pipeline(spark, corpus, fx.anchors) as res:
+        assert res.triples_count.collect()[0]["n_triples"] > 0
+        assert res.lineage.collect()
+        assert cache.numCachedEntries() > before
+    assert cache.numCachedEntries() == before
+
+
+@pytest.mark.parametrize("op", ["minhash_lsh_pairs_rowform", "_ngram_jaccard_pairs"])
+def test_raising_skew_guard_logger_releases_caches(spark, op):
+    """A skew-guard logger that raises while a band or shingle drop fires
+    leaves no cache entry behind."""
+    from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform
+    from nerzo_spark.plans.catalog_text import _SHINGLE_SPARK, _ngram_jaccard_pairs
+
+    def boom(msg):
+        raise RuntimeError("injected")
+
+    base = "the quick value of a stream is computed from rows and batches near"
+    docs = spark.createDataFrame(
+        [(i, base, "src") for i in range(70)], "doc_id long, text string, source string"
+    )
+    runs = {
+        "minhash_lsh_pairs_rowform": lambda: minhash_lsh_pairs_rowform(
+            docs.select("doc_id", F.array_distinct(F.expr(_SHINGLE_SPARK)).alias("sh")),
+            band_cap=64, logger=boom,
+        ),
+        "_ngram_jaccard_pairs": lambda: _ngram_jaccard_pairs(docs, df_cap=8, logger=boom),
+    }
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    with pytest.raises(RuntimeError, match="injected"):
+        runs[op]()
+    assert cache.numCachedEntries() == before

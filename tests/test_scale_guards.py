@@ -11,52 +11,10 @@ SF_SMALL = "/root/testdata/sf0.001"
 
 
 # --- MinHash-LSH skew guard ---------------------------------------------------
-
-def _shingles(df):
-    from nerzo_spark.plans.catalog_text import _SHINGLE_SPARK
-
-    return df.select(
-        "doc_id", F.explode(F.array_distinct(F.expr(_SHINGLE_SPARK))).alias("s")
-    )
-
-
-def test_lsh_degenerate_band_capped(spark):
-    """300 identical docs share every band: without the guard the candidate
-    join emits ~45k pairs from one bucket; with cap=64 the band is dropped,
-    the drop is logged, and distinct near-dup pairs still come through."""
-    from nerzo_spark.operators.dedup import minhash_lsh_pairs
-
-    base = "the quick value of a stream is computed from rows and batches near"
-    rows = [(i, base) for i in range(300)]
-    # two genuinely-near docs in their own small band
-    rows += [(1000, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-             (1001, "alpha beta gamma delta epsilon zeta eta theta iota kappa x")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    logs = []
-    pairs = minhash_lsh_pairs(
-        _shingles(docs), threshold=0.5, band_cap=64, logger=logs.append
-    ).collect()
-    assert logs and "skew guard" in logs[0]
-    got = {(r.id_a, r.id_b) for r in pairs}
-    # the degenerate 300-doc clique is excluded (covered by exact dedup)
-    assert all(a >= 1000 for a, _ in got), got
-    assert (1000, 1001) in got
-
-
-def test_lsh_guard_noop_below_cap(spark):
-    """With no oversized band the guard changes nothing vs the oracle result
-    (the driver CORRECTNESS row is the primary gate; this is the unit twin)."""
-    from nerzo_spark.operators.dedup import minhash_lsh_pairs
-
-    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    logs = []
-    pairs = minhash_lsh_pairs(
-        _shingles(docs), threshold=0.5, band_cap=64, logger=logs.append
-    )
-    n = pairs.count()
-    assert n >= 0
-    assert not logs  # sf0.001 has no 64-doc band
-
+#
+# The independent reference is the DuckDB oracle registered for
+# dedup_minhash_lsh_pairs (band cap 64, threshold 0.5), run over each test's
+# own rows registered as `documents`.
 
 def _doc_sh(df):
     from nerzo_spark.plans.catalog_text import _SHINGLE_SPARK
@@ -66,48 +24,92 @@ def _doc_sh(df):
     )
 
 
-def test_minhash_rowform_equals_exploded_form(spark):
-    """r7: minhash_lsh_pairs_rowform must emit the EXACT pair set + jaccard
-    values of the exploded-form builder — including under an active band_cap
-    drop, via BOTH the default explode path and a caller-supplied
-    explode_shingles callback."""
-    from nerzo_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        minhash_lsh_pairs_rowform,
-    )
+def _oracle_matches(pairs, con):
+    from nerzo_spark.plans import catalog
+    from tests.oracle_harness import compare
+
+    ok, msg = compare(pairs, con, catalog.oracle_sql()["dedup_minhash_lsh_pairs"])
+    assert ok, msg
+
+
+def _docs_con(rows):
+    import duckdb
+    import pandas as pd
+
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    return con
+
+
+def test_lsh_degenerate_band_capped(spark):
+    """300 identical docs share every band: without the guard the candidate
+    join emits ~45k pairs from one bucket; with cap=64 the band is dropped,
+    the drop is logged, and distinct near-dup pairs still come through."""
+    from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform
 
     base = "the quick value of a stream is computed from rows and batches near"
-    rows = [(i, base) for i in range(80)]  # shared band, above cap=8
+    rows = [(i, base) for i in range(300)]
+    # two genuinely-near docs in their own small band
+    rows += [(1000, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+             (1001, "alpha beta gamma delta epsilon zeta eta theta iota kappa x")]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    logs = []
+    pairs = minhash_lsh_pairs_rowform(
+        _doc_sh(docs), threshold=0.5, band_cap=64, logger=logs.append
+    )
+    assert logs and "skew guard" in logs[0]
+    got = {(r.id_a, r.id_b) for r in pairs.collect()}
+    # the degenerate 300-doc clique is excluded (covered by exact dedup)
+    assert all(a >= 1000 for a, _ in got), got
+    assert (1000, 1001) in got
+    _oracle_matches(pairs, _docs_con(rows))
+
+
+def test_lsh_guard_noop_below_cap(spark):
+    """With no oversized band the guard changes nothing: the sf0.001 pairs
+    equal the oracle's, and nothing is logged."""
+    from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform
+    from tests.oracle_harness import duck_con
+
+    docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
+    logs = []
+    pairs = minhash_lsh_pairs_rowform(
+        _doc_sh(docs), threshold=0.5, band_cap=64, logger=logs.append
+    )
+    assert not logs  # sf0.001 has no 64-doc band
+    _oracle_matches(pairs, duck_con(SF_SMALL))
+
+
+def test_minhash_rowform_band_cap_equals_oracle(spark):
+    """Under an active band_cap drop (70 identical docs, cap 64) the pair
+    set and jaccard values equal the oracle's, via BOTH the default explode
+    path and a caller-supplied explode_shingles callback, and the skew-guard
+    log fires on both."""
+    from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform
+    from nerzo_spark.plans.catalog_text import _explode_shingles
+
+    base = "the quick value of a stream is computed from rows and batches near"
+    rows = [(i, base) for i in range(70)]  # one shared band, above cap=64
     rows += [(1000, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
              (1001, "alpha beta gamma delta epsilon zeta eta theta iota kappa x"),
              (1002, "one two three four five six seven eight nine ten eleven"),
              (1003, "one two three four five six seven eight nine ten twelve")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    logs_a, logs_b, logs_c = [], [], []
-    ref = sorted(
-        tuple(r) for r in minhash_lsh_pairs(
-            _shingles(docs), threshold=0.5, band_cap=8, logger=logs_a.append
-        ).collect()
-    )
-    got_default = sorted(
-        tuple(r) for r in minhash_lsh_pairs_rowform(
-            _doc_sh(docs), threshold=0.5, band_cap=8, logger=logs_b.append
-        ).collect()
-    )
+    con = _docs_con(rows)
 
-    def _exploder(ids_df):
-        return _shingles(docs.join(F.broadcast(ids_df), "doc_id", "left_semi"))
+    def _exploder(ids_df):  # shaped like the catalog query's callback
+        return _explode_shingles(docs.join(F.broadcast(ids_df), "doc_id", "left_semi"))
 
-    got_cb = sorted(
-        tuple(r) for r in minhash_lsh_pairs_rowform(
-            _doc_sh(docs), explode_shingles=_exploder,
-            threshold=0.5, band_cap=8, logger=logs_c.append,
-        ).collect()
-    )
-    assert ref == got_default == got_cb
-    assert ref  # non-degenerate: the small near-dup pairs survive
-    # the skew-guard log fires identically on all three paths
-    assert logs_a and logs_b and logs_c
+    for explode_shingles in (None, _exploder):
+        logs = []
+        pairs = minhash_lsh_pairs_rowform(
+            _doc_sh(docs), explode_shingles=explode_shingles,
+            threshold=0.5, band_cap=64, logger=logs.append,
+        )
+        assert logs and "skew guard" in logs[0]
+        # non-degenerate: the small near-dup pairs survive
+        assert {(1000, 1001), (1002, 1003)} <= {(r.id_a, r.id_b) for r in pairs.collect()}
+        _oracle_matches(pairs, con)
 
 
 # --- blocked kNN --------------------------------------------------------------
@@ -118,6 +120,8 @@ def test_knn_blocked_equals_single_chunk(spark):
     from nerzo_spark.operators.topk import knn_self_join
 
     vecs = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
     one = knn_self_join(vecs, k=5, chunk_rows=10**9)
     many = knn_self_join(vecs, k=5, chunk_rows=97)  # forces several chunks
 
@@ -128,6 +132,8 @@ def test_knn_blocked_equals_single_chunk(spark):
         }
 
     assert key(one) == key(many)
+    # neither path leaves a cache entry behind once its result is collected
+    assert cache.numCachedEntries() == before
     # every query keeps exactly k rows with ranks 1..k
     per_q = many.groupBy("query_id").agg(
         F.count("*").alias("c"), F.max("rank").alias("mx"), F.min("rank").alias("mn")
