@@ -5,6 +5,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from nerzo_spark.fixtures.corpus import Fixture
+from nerzo_spark.session import local_frame
 
 CORPUS_SCHEMA = (
     "repo string, path string, commit string, lang string, "
@@ -20,12 +21,12 @@ GOLD_TRIPLE_SCHEMA = (
 
 
 def corpus_df(spark: SparkSession, fx: Fixture) -> DataFrame:
-    return spark.createDataFrame(fx.corpus, schema=CORPUS_SCHEMA)
+    return local_frame(spark, fx.corpus, CORPUS_SCHEMA)
 
 
 def anchors_df(spark: SparkSession, fx: Fixture) -> DataFrame:
-    return spark.createDataFrame(fx.anchors, schema=ANCHORS_SCHEMA)
+    return local_frame(spark, fx.anchors, ANCHORS_SCHEMA)
 
 
 def gold_triples_df(spark: SparkSession, fx: Fixture) -> DataFrame:
-    return spark.createDataFrame(fx.triples, schema=GOLD_TRIPLE_SCHEMA)
+    return local_frame(spark, fx.triples, GOLD_TRIPLE_SCHEMA)

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 
 from nerzo_spark.functions.hashing import ent_id
 from nerzo_spark.functions.text import norm_key, normalize_surface, squash, squash_key
-from nerzo_spark.session import cached
+from nerzo_spark.session import cached, local_frame
 
 
 def _driver_union_find(
@@ -283,21 +283,8 @@ def canonical_overrides(
         overrides = [
             (ft, s, c) for ft, s, c in mapping if c != k1_of[(ft, s)]
         ]
-        import pandas as pd
-
-        # Arrow-path createDataFrame (plain parallelize costs a cold
-        # 4-9 s RDD job for even a 3k-row table)
-        return spark.createDataFrame(
-            pd.DataFrame(
-                overrides, columns=["fine_type", "surface", "canonical"]
-            ).astype(str)
-            if overrides
-            else pd.DataFrame(
-                {"fine_type": pd.Series(dtype=str),
-                 "surface": pd.Series(dtype=str),
-                 "canonical": pd.Series(dtype=str)}
-            ),
-            schema="fine_type string, surface string, canonical string",
+        return local_frame(
+            spark, overrides, "fine_type string, surface string, canonical string"
         )
 
     # Path 3: distributed min-label propagation over the hot subgraph

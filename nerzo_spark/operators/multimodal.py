@@ -23,6 +23,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from nerzo_spark.session import local_frame
+
 ASSET_SCHEMA = (
     "asset_id string, kind string, payload binary, "
     "meta struct<width:int, height:int, sample_rate:int, duration_ms:int, codec:string>"
@@ -169,4 +171,4 @@ def fake_assets(spark, n: int = 64, seed: int = 42) -> DataFrame:
             "codec": {"image": "png", "audio": "pcm", "video": "h264"}[kind],
         }
         rows.append((f"asset{i}", kind, payload, meta))
-    return spark.createDataFrame(rows, ASSET_SCHEMA)
+    return local_frame(spark, rows, ASSET_SCHEMA)

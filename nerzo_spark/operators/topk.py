@@ -24,6 +24,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from nerzo_spark.session import local_frame
+
 LINK_SCHEMA = (
     "mention_id string, label_id string, coarse_type string, fine_type string, "
     "score double, rank int"
@@ -299,7 +301,7 @@ def knn_self_join(
         parts.append(src.mapInPandas(_scorer(bc, min(k + 1, len(rows))), schema=out_schema))
 
     if not parts:  # empty input: zero-row result with the declared schema
-        return vectors.sparkSession.createDataFrame([], out_schema)
+        return local_frame(vectors.sparkSession, [], out_schema)
     union = parts[0]
     for p in parts[1:]:
         union = union.unionByName(p)

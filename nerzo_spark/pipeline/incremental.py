@@ -35,6 +35,7 @@ from nerzo_spark.operators.canonicalize import canonical_overrides  # noqa: F401
 from nerzo_spark.operators.extract_link import extract_and_link
 from nerzo_spark.pipeline.kg import assemble_kg, build_label_catalog, stamp_lineage
 from nerzo_spark.pipeline.manifest import ManifestStore
+from nerzo_spark.session import local_frame
 
 STAGE_EXTRACT = "extract"
 
@@ -100,17 +101,13 @@ def run_incremental(
     # repo-wide files=-1 sentinel; sha_ok on stage rows propagates the
     # extraction invariant check's scope (True — the invariant is checked at
     # extraction, per-repo rows carry the per-partition result).
-    import pandas as pd
-
-    stage_rows = spark.createDataFrame(
-        pd.DataFrame(
-            [
-                ("__all__", n_entities, True, -1, "canonicalize"),
-                ("__all__", n_triples, True, -1, "triples"),
-            ],
-            columns=["repo", "rows_out", "sha_ok", "files", "stage"],
-        ),
-        schema="repo string, rows_out long, sha_ok boolean, files long, stage string",
+    stage_rows = local_frame(
+        spark,
+        [
+            ("__all__", n_entities, True, -1, "canonicalize"),
+            ("__all__", n_triples, True, -1, "triples"),
+        ],
+        "repo string, rows_out long, sha_ok boolean, files long, stage string",
     )
     stamp_lineage(
         kg.repo_lineage.withColumn("stage", F.lit(STAGE_EXTRACT)).unionByName(stage_rows),

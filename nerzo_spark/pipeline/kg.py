@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from nerzo_spark.embed.embedder import embed_span
 from nerzo_spark.fixtures.labels import label_rows
 from nerzo_spark.operators.extract_link import extract_and_link
-from nerzo_spark.session import cached
+from nerzo_spark.session import cached, local_frame
 
 TRIPLE_SCHEMA = "subj string, pred string, obj string, repo string, path string, commit string"
 
@@ -276,19 +276,12 @@ def build_triples(
     from nerzo_spark.functions.hashing import ent_id
     from nerzo_spark.operators.canonicalize import canonical_expr
 
-    import pandas as pd
-
     spark = typed.sparkSession
-    # Arrow-path createDataFrame: a plain list would go through the
-    # pickle-RDD bootstrap — a cold 4-9 s job the first time a session uses
-    # it (measured round 1), sitting INSIDE the pipeline's timed region
     label_map = F.broadcast(
-        spark.createDataFrame(
-            pd.DataFrame(
-                [(c["fine_type"], c["coarse_type"], c["label_id"]) for c in catalog],
-                columns=["fine_type", "coarse_type", "label_id"],
-            ).astype(str),
-            schema="fine_type string, coarse_type string, label_id string",
+        local_frame(
+            spark,
+            [(c["fine_type"], c["coarse_type"], c["label_id"]) for c in catalog],
+            "fine_type string, coarse_type string, label_id string",
         )
     )
 
@@ -389,22 +382,21 @@ def stamp_lineage(rows: DataFrame, run_id: str, walls: dict[str, float]) -> Data
     """Lineage rows ``(repo, rows_out, sha_ok, files, stage)`` with the
     run's ``run_id`` and each stage's ``wall_ms`` attached.
 
-    The per-run values ride in a broadcast one-row-per-stage frame built
-    through the Arrow ``createDataFrame`` path, not in ``F.lit``: a double
+    The per-run values ride in a broadcast one-row-per-stage frame
+    (:func:`~nerzo_spark.session.local_frame`), not in ``F.lit``: a double
     literal is inlined into the generated Java source, so every run would
     compile fresh classes.  The frame is data, so a repeat run reuses the
     cached code (tests/test_codegen_reuse.py)."""
-    import pandas as pd
     from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
     # each sink built stage, run_id and wall_ms from one source per row
-    # (literals, or a pandas frame), so they share the stage's nullability;
-    # keeping it keeps the written parquet schema
+    # (literals, or a driver-built frame), so they share the stage's
+    # nullability; keeping it keeps the written parquet schema
     nullable = rows.schema["stage"].nullable
-    stamps = rows.sparkSession.createDataFrame(
-        pd.DataFrame({"stage": list(walls), "run_id": run_id,
-                      "wall_ms": [float(w) for w in walls.values()]}),
-        schema=StructType([
+    stamps = local_frame(
+        rows.sparkSession,
+        [(stage, run_id, float(w)) for stage, w in walls.items()],
+        StructType([
             StructField("stage", StringType(), nullable),
             StructField("run_id", StringType(), nullable),
             StructField("wall_ms", DoubleType(), nullable),

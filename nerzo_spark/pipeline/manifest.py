@@ -23,6 +23,8 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nerzo_spark.session import local_frame
+
 MANIFEST_SCHEMA = "stage string, partition_key string, run_id string, committed_at double"
 
 
@@ -34,7 +36,7 @@ class ManifestStore:
     def read(self) -> DataFrame:
         if os.path.exists(self.path):
             return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
-        return self.spark.createDataFrame([], MANIFEST_SCHEMA)
+        return local_frame(self.spark, [], MANIFEST_SCHEMA)
 
     def committed(self, stage: str) -> DataFrame:
         return self.read().filter(F.col("stage") == stage).select("partition_key").distinct()
@@ -50,12 +52,7 @@ class ManifestStore:
             return
         run_id = run_id or uuid.uuid4().hex
         now = time.time()
-        import pandas as pd
-
         rows = [(stage, k, run_id, now) for k in sorted(set(keys))]
-        # Arrow-path createDataFrame — the pickle-RDD bootstrap a plain list
-        # triggers costs a cold multi-second job inside the commit window
-        pdf = pd.DataFrame(rows, columns=["stage", "partition_key", "run_id", "ts"])
-        self.spark.createDataFrame(pdf, MANIFEST_SCHEMA).coalesce(1).write.mode(
+        local_frame(self.spark, rows, MANIFEST_SCHEMA).coalesce(1).write.mode(
             "append"
         ).parquet(self.path)

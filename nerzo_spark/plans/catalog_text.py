@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from nerzo_spark.functions.hashing import md5_i64_duckdb, md5_i64_sql
 from nerzo_spark.plans.catalog import T, T_par, register
-from nerzo_spark.session import cached
+from nerzo_spark.session import cached, local_frame
 
 _TOK = r"\s+"
 
@@ -503,7 +503,7 @@ def _ngram_jaccard_pairs(d, df_cap: int = NGRAM_DF_CAP, logger=print):
     # the semi-join needs anyway — one shingle scan, not two (ADVICE r3).
     # The result is a top-20 — driver-sized by construction — so it is
     # collected inside the block and the shingle-df cache is released
-    # before returning; callers get a driver-local Arrow frame with the
+    # before returning; callers get a driver-local frame with the
     # identical schema.
     with cached(sh0.groupBy("s", "source").agg(F.count("*").alias("df"))) as sdf:
         n_dropped = sdf.filter(F.col("df") > df_cap).count()
@@ -537,8 +537,8 @@ def _ngram_jaccard_pairs(d, df_cap: int = NGRAM_DF_CAP, logger=print):
             .orderBy(F.desc("jaccard"), "id_a", "id_b")
             .limit(20)
         )
-        out = pairs.toPandas()
-    return d.sparkSession.createDataFrame(out, schema=pairs.schema)
+        out = pairs.collect()
+    return local_frame(d.sparkSession, out, pairs.schema)
 
 
 # --- F2 offset -> token-index mapping ----------------------------------------

@@ -63,12 +63,12 @@ from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nerzo_spark.functions.hashing import md5_i64_duckdb, md5_i64_sql
 from nerzo_spark.plans.catalog import T, QueryFn
-from nerzo_spark.plans.catalog_vec import _COS_DUCK, _COS_SPARK, _bucket_expr
+from nerzo_spark.plans.catalog_vec import _COS_DUCK, _DOT_SPARK, _NORM_SPARK, _bucket_expr
 
 _REGISTRY: dict[str, tuple[QueryFn, str | None]] = {}
 
@@ -87,6 +87,13 @@ def queries() -> dict[str, QueryFn]:
 
 def oracle_sql() -> dict[str, str]:
     return {k: v[1] for k, v in _REGISTRY.items() if v[1] is not None}
+
+
+def _cos(a: str, b: str, norm_a: str, norm_b: str) -> Column:
+    """Per-pair cosine over norms computed once per row (``_NORM_SPARK``):
+    the same scalar op sequence as ``_COS_SPARK``, so bit-identical, with
+    one array fold per pair instead of three (see catalog_vec)."""
+    return F.expr(_DOT_SPARK.format(a=a, b=b)) / (F.col(norm_a) * F.col(norm_b))
 
 
 # =========================================================================
@@ -138,9 +145,11 @@ def u8_contrastive_losses(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     e = T(spark, sf_dir, "embeddings")
     tot = e.agg(F.count("*").alias("n"))
+    e = e.withColumn("n_e", F.expr(_NORM_SPARK.format(v="embedding")))
     w_lbl = Window.partitionBy("label").orderBy("vec_id")
     base = (
         e.withColumn("pos_emb", F.lead("embedding").over(w_lbl))
+        .withColumn("n_pos", F.lead("n_e").over(w_lbl))
         .crossJoin(F.broadcast(tot))
         .withColumn("neg_id", (F.col("vec_id") * 17 + 3) % F.col("n"))
         .filter(F.col("pos_emb").isNotNull())
@@ -149,12 +158,13 @@ def u8_contrastive_losses(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("g_id"),
         F.col("label").alias("g_label"),
         F.col("embedding").alias("neg_emb"),
+        F.col("n_e").alias("n_neg"),
     )
     trip = base.join(
         neg, (F.col("g_id") == F.col("neg_id")) & (F.col("g_label") != F.col("label"))
     ).select(
-        F.expr(_COS_SPARK.format(a="embedding", b="pos_emb")).alias("cp"),
-        F.expr(_COS_SPARK.format(a="embedding", b="neg_emb")).alias("cn"),
+        _cos("embedding", "pos_emb", "n_e", "n_pos").alias("cp"),
+        _cos("embedding", "neg_emb", "n_e", "n_neg").alias("cn"),
     )
     return _loss_agg(trip)
 
@@ -215,13 +225,13 @@ def u8_losses_over_j3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     embs = embed_mentions(
         docs, surface_col="text", left_col="_l", right_col="_r"
-    ).select("doc_id", "emb")
+    ).select("doc_id", "emb", F.expr(_NORM_SPARK.format(v="emb")).alias("n"))
     be = b.join(embs, "doc_id")
     anchors = be.filter(F.col("role") == "anchor").select(
-        "batch_id", F.col("emb").alias("a_emb")
+        "batch_id", F.col("emb").alias("a_emb"), F.col("n").alias("n_a")
     )
     pos = be.filter(F.col("role") == "positive").select(
-        "batch_id", "rnk", F.col("emb").alias("p_emb")
+        "batch_id", "rnk", F.col("emb").alias("p_emb"), F.col("n").alias("n_p")
     )
     # negatives: hard first (rnk 1..n_hard), then easy (n_hard+1..batch_size)
     # — the reference packs hard negatives at the front of the negative list
@@ -233,13 +243,14 @@ def u8_losses_over_j3(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.col("rnk") + n_hard)
         .alias("rnk"),
         F.col("emb").alias("n_emb"),
+        F.col("n").alias("n_n"),
     )
     trip = (
         pos.join(negs, ["batch_id", "rnk"])
         .join(F.broadcast(anchors), "batch_id")
         .select(
-            F.expr(_COS_SPARK.format(a="a_emb", b="p_emb")).alias("cp"),
-            F.expr(_COS_SPARK.format(a="a_emb", b="n_emb")).alias("cn"),
+            _cos("a_emb", "p_emb", "n_a", "n_p").alias("cp"),
+            _cos("a_emb", "n_emb", "n_a", "n_n").alias("cn"),
         )
     )
     return _loss_agg(trip)
@@ -370,7 +381,9 @@ def _o4_plan(
             F.col("embedding"),
             F.coalesce(F.lead("embedding").over(w_lbl), F.col("embedding")),
         ),
-    )
+    ).withColumn(
+        "n_e", F.expr(_NORM_SPARK.format(v="embedding"))
+    ).withColumn("n_pair", F.expr(_NORM_SPARK.format(v="pair_emb")))
     if candidate_tier == "lsh":
         v = v.withColumn("bucket", F.expr(_bucket_expr("spark", "embedding")))
     q = v.select(
@@ -378,6 +391,8 @@ def _o4_plan(
         F.col("label").alias("qlab"),
         F.col("embedding").alias("q_emb"),
         F.col("pair_emb").alias("q_pair"),
+        F.col("n_e").alias("n_q"),
+        F.col("n_pair").alias("n_qpair"),
         *([F.col("bucket").alias("q_bucket")] if candidate_tier == "lsh" else []),
     )
     if candidate_tier == "lsh":
@@ -391,8 +406,8 @@ def _o4_plan(
     scored = pairs.select(
         "qid", "qlab",
         F.col("vec_id").alias("nid"), F.col("label").alias("nlab"),
-        F.expr(_COS_SPARK.format(a="q_emb", b="embedding")).alias("cos_end"),
-        F.expr(_COS_SPARK.format(a="q_pair", b="pair_emb")).alias("cos_pair"),
+        _cos("q_emb", "embedding", "n_q", "n_e").alias("cos_end"),
+        _cos("q_pair", "pair_emb", "n_qpair", "n_pair").alias("cos_pair"),
     )
     w_end = Window.partitionBy("qid").orderBy(F.desc("cos_end"), F.asc("nid"))
     w_pair = Window.partitionBy("qid").orderBy(F.desc("cos_pair"), F.asc("nid"))

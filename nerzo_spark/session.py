@@ -18,15 +18,19 @@ Scale posture (the point, even though tests run on ``local[N]``):
 - one way to hold a cache: :func:`cached` persists a frame for the length
   of a ``with`` block and releases it on every exit path (ARCHITECTURE.md,
   "Cache lifetime").
+- one Python worker pool per session: driver-built frames go through
+  :func:`local_frame`, which never starts a Python worker, so the Arrow-UDF
+  pool :func:`warm_python_workers` starts is the only one.
 """
 
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType, StructType
 from pyspark.storagelevel import StorageLevel
 
 
@@ -59,6 +63,34 @@ def cached(df: DataFrame) -> Iterator[DataFrame]:
         df.unpersist()
         raise
     df.unpersist()
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[tuple | dict], schema: str | StructType
+) -> DataFrame:
+    """A frame of driver-side ``rows``, typed by ``schema`` (a DDL string or
+    a ``StructType``; nullability is kept).  A tuple row is read by position,
+    a dict row by field name.
+
+    The rows reach Spark as a ``pyarrow.Table``, which the driver serializes
+    and the JVM reads as a local relation, empty or not: no Python worker
+    starts.  A plain list would go through a pickled Python RDD, whose
+    worker environment differs from the Arrow UDFs', so it starts a second
+    ``pyspark.daemon`` with one worker per core that stays for the rest of
+    the session.  A pandas frame is no way round it: PySpark takes the
+    Arrow path only when ``len(data) > 0``, so an empty one is pickled too.
+    Every driver-built frame in this repo goes through here
+    (tests/test_local_frame.py)."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = DataType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow = to_arrow_schema(struct)
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(arrow.names, r, strict=True)) for r in rows],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def get_spark(
@@ -150,7 +182,12 @@ def warm_python_workers(spark: SparkSession, depth: int = 1) -> None:
     extraction wall (211-241 s with the bloated pool vs 131.5 s with none).
     The hot path is ONE fused mapInPandas, so the correct pool is ONE
     worker per slot: a single-operator pass over exactly `cores`
-    partitions."""
+    partitions.
+
+    This is the session's only pool: driver-built frames go through
+    :func:`local_frame`, which starts no worker, where a pickled Python RDD
+    would start a second, idle daemon with one worker per core
+    (tests/test_local_frame.py counts the daemons)."""
     import pandas as pd  # noqa: F401
 
     cores = spark.sparkContext.defaultParallelism

@@ -12,6 +12,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nerzo_spark.session import local_frame
+
 
 def read_tsv(spark: SparkSession, path: str, schema: str | None = None) -> DataFrame:
     """S12 — TSV source with header (pocs/poc_manual_labeling.py:69-72)."""
@@ -36,7 +38,7 @@ def ensure_table(spark: SparkSession, path: str, schema: str) -> DataFrame:
     """S6 — create-if-absent (dataset_provider.py:160-162).  Production:
     ``CREATE TABLE IF NOT EXISTS ... USING iceberg PARTITIONED BY (...)``."""
     if not os.path.exists(path):
-        spark.createDataFrame([], schema).write.parquet(path)
+        local_frame(spark, [], schema).write.parquet(path)
     return spark.read.schema(schema).parquet(path)
 
 

@@ -222,7 +222,17 @@ def test_iceberg_production_statements(spark, monkeypatch, tmp_path):
 
 def test_resumable_sink_equals_in_memory(spark, fixture_small, kg_result, tmp_path):
     """Both sinks run one KG assembly: the resumable output's triples,
-    entities and lineage counts equal the in-memory pipeline's."""
+    entities and lineage counts equal the in-memory pipeline's.  The
+    lineage and manifest schemas, nullability included, are the ones both
+    sinks have always produced (their per-run frames are driver-built)."""
+    import glob
+    import json
+
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import (
+        BooleanType, DoubleType, LongType, StringType, StructField, StructType,
+    )
+
     from nerzo_spark.pipeline.incremental import run_incremental
 
     fx = fixture_small
@@ -254,6 +264,31 @@ def test_resumable_sink_equals_in_memory(spark, fixture_small, kg_result, tmp_pa
         kg_result.lineage.filter(F.col("repo") == "__all__"),
         ["stage", "rows_out"],
     )
+
+    def written_schema(table):
+        f = sorted(glob.glob(f"{out}/{table}/*.parquet"))[0]
+        meta = pq.read_schema(f).metadata[b"org.apache.spark.sql.parquet.row.metadata"]
+        return StructType.fromJson(json.loads(meta))
+
+    def lineage_schema(nullable):
+        return StructType([
+            StructField("repo", StringType()),
+            StructField("rows_out", LongType(), nullable),
+            StructField("sha_ok", BooleanType()),
+            StructField("files", LongType(), nullable),
+            StructField("stage", StringType(), nullable),
+            StructField("run_id", StringType(), nullable),
+            StructField("wall_ms", DoubleType(), nullable),
+        ])
+
+    assert kg_result.lineage.schema == lineage_schema(nullable=False)
+    assert written_schema("lineage") == lineage_schema(nullable=True)
+    assert written_schema("manifest") == StructType([
+        StructField("stage", StringType()),
+        StructField("partition_key", StringType()),
+        StructField("run_id", StringType()),
+        StructField("committed_at", DoubleType()),
+    ])
 
 
 def test_failed_build_releases_caches(spark, fixture_small, tmp_path, monkeypatch):
