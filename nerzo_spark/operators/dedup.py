@@ -6,9 +6,11 @@ equi-join — shuffle on the band key, NEVER an all-pairs product.  The one
 remaining 100 TB hazard is a DEGENERATE BAND: M near-identical docs sharing
 a band produce M(M-1)/2 candidate rows inside one join bucket (a quadratic
 skew bomb no AQE split can fix, since it is real output volume, not
-partition imbalance).  Guard: count docs per band (band-scale agg, one
-cheap shuffle on the same key) and EXCLUDE bands larger than ``band_cap``
-from pairing, logging what was dropped (no silent caps).  Docs in a dropped
+partition imbalance).  Guard: size each band with a window count over the
+band key (operators/skew.py) and EXCLUDE bands larger than ``band_cap``
+from pairing.  The window's exchange on the band is the one the candidate
+self-join reads on both sides, and the drop is observed in-plan and
+reported as a record (no silent caps, no extra job).  Docs in a dropped
 band are near-exact duplicates by construction — the exact-dedup operator
 (md5 groupBy, catalog_text.py dedup_exact_groups) already clusters those at
 linear cost, so nothing is lost end-to-end.
@@ -25,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from nerzo_spark.session import cached
+from nerzo_spark.operators.skew import capped_keys, watch
 
 DEFAULT_BAND_CAP = 64
 
@@ -46,74 +48,34 @@ def _bands_of(sig: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
     )
 
 
-def _band_candidates(
-    bands: DataFrame,
-    band_cap: int,
-    logger,
-    carry: tuple[str, ...] = (),
-) -> DataFrame:
-    """Distinct candidate pairs (id_a[, <c>a...], id_b[, <c>b...]) from
-    bands with <= band_cap members — the skew guard + no-silent-caps log
-    (a degenerate band of M near-identical docs would otherwise emit
-    M(M-1)/2 rows of real output volume that no AQE split can fix; dropped
-    members are near-exact dups covered by dedup_exact_groups)."""
-    band_sizes = bands.groupBy("band").agg(F.count("*").alias("bcnt"))
-    dropped = band_sizes.filter(F.col("bcnt") > band_cap)
-    n_dropped = dropped.count()  # band-scale action; the no-silent-caps log
-    if n_dropped > 0 and logger is not None:
-        worst = dropped.agg(F.max("bcnt")).first()[0]
-        logger(
-            f"[minhash_lsh_pairs_rowform] skew guard: dropped {n_dropped} band(s) with "
-            f"> {band_cap} docs (largest: {worst}); members are near-exact "
-            f"dups — covered by exact dedup (dedup_exact_groups)"
-        )
-    kept = bands.join(
-        band_sizes.filter(F.col("bcnt") <= band_cap).select("band"), "band"
-    )
-    sel = (
-        [F.col("a.doc_id").alias("id_a")]
-        + [F.col(f"a.{c}").alias(f"{c}a") for c in carry]
-        + [F.col("b.doc_id").alias("id_b")]
-        + [F.col(f"b.{c}").alias(f"{c}b") for c in carry]
-    )
-    return (
-        kept.alias("a")
-        .join(
-            kept.alias("b"),
-            (F.col("a.band") == F.col("b.band")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(*sel)
-        .distinct()
-    )
-
-
 def minhash_lsh_pairs_rowform(
     doc_sh: DataFrame,
     explode_shingles=None,
     threshold: float = 0.5,
     band_cap: int = DEFAULT_BAND_CAP,
-    logger=print,
 ) -> DataFrame:
     """Banded LSH candidate generation + exact-Jaccard verification.
 
     Returns (id_a, id_b, jaccard) for verified pairs with J >= threshold,
-    considering only bands with <= band_cap member docs (skew guard above).
-    The result is materialized (an eager local checkpoint): its
-    intermediate caches are released before it is returned.
+    considering only bands with <= band_cap member docs (skew guard above),
+    as one lazy plan: building it runs nothing and holds no cache.  The
+    guard's record (``guard="minhash_lsh_pairs_rowform"``) is read with
+    :func:`~nerzo_spark.operators.skew.guard_records` on the returned frame
+    once an action has run it.
 
     ``doc_sh``: (doc_id, sh ARRAY<STRING>) — ONE row per doc carrying its
     DISTINCT shingle array.  Signatures and set sizes become per-row array
     expressions (``array_min(transform(...))`` == groupBy-min over the
     exploded table, ``size(sh)`` == exploded count), so the shingle table is
-    never exploded corpus-wide, never persisted, and never shuffled; only
-    CANDIDATE docs (pairs sharing a band, post skew-guard) are exploded for
-    the exact-Jaccard verify — candidate-scale, not corpus-scale.  Outputs
-    match the DuckDB oracle of ``dedup_minhash_lsh_pairs`` bit-for-bit
+    never exploded corpus-wide and never shuffled; only CANDIDATE docs (docs
+    in a kept band with a second member) are exploded for the exact-Jaccard
+    verify — candidate-scale, not corpus-scale.  Outputs match the DuckDB
+    oracle of ``dedup_minhash_lsh_pairs`` bit-for-bit
     (tests/test_scale_guards.py, including an active band-cap drop).
 
     ``explode_shingles``: optional callable ``(cand_ids_df) -> (doc_id, s)``
-    producing the exploded distinct shingles of the candidate docs only.
-    Callers SHOULD supply one whose explode sits directly over the source
+    producing the exploded distinct shingles of the candidate docs only
+    (the ``doc_id`` column of ``cand_ids_df``).  Callers SHOULD supply one whose explode sits directly over the source
     projection (see catalog_text._explode_shingles): exploding the aliased
     ``sh`` column lets CollapseProject inline the array-building expression
     into the Generate and re-evaluate it per element (measured 54 s vs
@@ -129,41 +91,48 @@ def minhash_lsh_pairs_rowform(
             for j in range(4)
         ],
     )
-    # bands: read by the skew guard's size count and by the candidate join;
-    # cand: candidate-scale, read 3x (two cand_ids selects + the inter join);
-    # cand_sh: candidate-scale, read twice by the intersection self-join.
-    # The pair table is tiny (verified near-dups), so it is checkpointed
-    # eagerly before the caches it was computed from are released.
-    with cached(_bands_of(base, carry=("n",))) as bands, cached(
-        _band_candidates(bands, band_cap, logger, carry=("n",))
-    ) as cand:
-        cand_ids = (
-            cand.select(F.col("id_a").alias("doc_id"))
-            .unionByName(cand.select(F.col("id_b").alias("doc_id")))
-            .distinct()
+    observed, kept, guard = capped_keys(
+        _bands_of(base, carry=("n",)), ["band"], band_cap, "minhash_lsh_pairs_rowform"
+    )
+    cand = (
+        observed.alias("a")
+        .join(
+            kept.alias("b"),
+            (F.col("a.band") == F.col("b.band")) & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        if explode_shingles is not None:
-            cand_sh = explode_shingles(cand_ids)
-        else:
-            cand_sh = doc_sh.join(F.broadcast(cand_ids), "doc_id", "left_semi").select(
-                "doc_id", F.explode("sh").alias("s")
-            )
-        with cached(cand_sh) as cand_sh:
-            inter = (
-                cand.join(cand_sh.alias("x"), F.col("x.doc_id") == F.col("id_a"))
-                .join(
-                    cand_sh.alias("y"),
-                    (F.col("y.doc_id") == F.col("id_b")) & (F.col("y.s") == F.col("x.s")),
-                )
-                .groupBy("id_a", "id_b", "na", "nb")
-                .agg(F.count("*").alias("i"))
-            )
-            jac = F.col("i") * 1.0 / (F.col("na") + F.col("nb") - F.col("i"))
-            return (
-                inter.withColumn("jaccard", F.round(jac, 6))
-                # filter on the SAME rounded expression that is returned, so
-                # no emitted row can display a jaccard below the threshold
-                .filter(F.col("jaccard") >= threshold)
-                .select("id_a", "id_b", "jaccard")
-                .localCheckpoint(eager=True)
-            )
+        .select(
+            F.col("a.doc_id").alias("id_a"),
+            F.col("a.n").alias("na"),
+            F.col("b.doc_id").alias("id_b"),
+            F.col("b.n").alias("nb"),
+        )
+        .distinct()
+    )
+    # the docs of some candidate pair, read off the same band exchange; n
+    # rides along (it is a function of doc_id) so that this read needs the
+    # same columns as the join's and Spark reuses the exchange
+    cand_ids = kept.filter(F.col("cnt") >= 2).select("doc_id", "n").distinct()
+    if explode_shingles is not None:
+        cand_sh = explode_shingles(cand_ids)
+    else:
+        cand_sh = doc_sh.join(F.broadcast(cand_ids), "doc_id", "left_semi").select(
+            "doc_id", F.explode("sh").alias("s")
+        )
+    inter = (
+        cand.join(cand_sh.alias("x"), F.col("x.doc_id") == F.col("id_a"))
+        .join(
+            cand_sh.alias("y"),
+            (F.col("y.doc_id") == F.col("id_b")) & (F.col("y.s") == F.col("x.s")),
+        )
+        .groupBy("id_a", "id_b", "na", "nb")
+        .agg(F.count("*").alias("i"))
+    )
+    jac = F.col("i") * 1.0 / (F.col("na") + F.col("nb") - F.col("i"))
+    pairs = (
+        inter.withColumn("jaccard", F.round(jac, 6))
+        # filter on the SAME rounded expression that is returned, so no
+        # emitted row can display a jaccard below the threshold
+        .filter(F.col("jaccard") >= threshold)
+        .select("id_a", "id_b", "jaccard")
+    )
+    return watch(pairs, guard)

@@ -16,8 +16,8 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from nerzo_spark.functions.hashing import md5_i64_duckdb, md5_i64_sql
+from nerzo_spark.operators.skew import capped_keys, watch
 from nerzo_spark.plans.catalog import T, T_par, register
-from nerzo_spark.session import cached, local_frame
 
 _TOK = r"\s+"
 
@@ -262,13 +262,6 @@ def dedup_exact_groups(spark, sf_dir):
     )
 
 
-_SHINGLE_SPARK = (
-    "transform(sequence(1, greatest(size(split(text, '\\\\s+')) - 2, 1)),"
-    " i -> concat_ws(' ', element_at(split(text, '\\\\s+'), i),"
-    " try_element_at(split(text, '\\\\s+'), i + 1),"
-    " try_element_at(split(text, '\\\\s+'), i + 2)))"
-)
-
 _SHINGLE_DUCK = (
     "list_transform(generate_series(1, greatest(len(string_split_regex(text, '\\s+')) - 2, 1)),"
     " i -> concat_ws(' ', string_split_regex(text, '\\s+')[i],"
@@ -276,23 +269,18 @@ _SHINGLE_DUCK = (
 )
 
 
-def _mh_spark(j: int) -> str:
-    return f"array_min(transform({_SHINGLE_SPARK}, s -> md5(concat('{j}|', s))))"
-
-
 def _mh_duck(j: int) -> str:
     return f"list_aggregate(list_transform({_SHINGLE_DUCK}, s -> md5('{j}|' || s)), 'min')"
 
 
-def _doc_shingle_arrays(spark, sf_dir):
-    """(doc_id, sh ARRAY<STRING>) — one row per doc with its DISTINCT
-    word-3-gram shingles (r7 row form; guide §2.3: ship arrays, not an
-    exploded corpus-scale table, when downstream work is per-doc).
+def _doc_shingle_arrays(d):
+    """(doc table) -> (doc_id, sh ARRAY<STRING>) — one row per doc with its
+    DISTINCT word-3-gram shingles (r7 row form; guide §2.3: ship arrays, not
+    an exploded corpus-scale table, when downstream work is per-doc).
 
     The token array is materialized ONCE per row in its own Project —
     inlining `split(text)` into the transform lambda re-evaluated it per
     shingle index (O(tokens^2) per doc; measured ~3x the stage time)."""
-    d = _docs_par(spark, sf_dir)
     return d.select("doc_id", F.split(F.col("text"), _TOK).alias("toks")).select(
         "doc_id", F.array_distinct(F.expr(_SHINGLE_FROM_TOKS)).alias("sh")
     )
@@ -305,8 +293,8 @@ _SHINGLE_FROM_TOKS = (
 )
 
 
-def _explode_shingles(d):
-    """(doc table) -> (doc_id, s) exploded distinct shingles.
+def _explode_shingles(d, *carry: str):
+    """(doc table) -> (doc_id[, carry...], s) exploded distinct shingles.
 
     PLAN-SHAPE CRITICAL (r7 regression found by measurement): the explode
     must sit DIRECTLY over the two-step token projection.  Routing it over
@@ -315,8 +303,8 @@ def _explode_shingles(d):
     `toks` is re-evaluated per shingle index: measured 54 s vs 1.6 s for
     the identical result at sf1.0.  `toks` survives as its own Project here
     because the shingle transform references it multiple times."""
-    return d.select("doc_id", F.split(F.col("text"), _TOK).alias("toks")).select(
-        "doc_id", F.explode(F.array_distinct(F.expr(_SHINGLE_FROM_TOKS))).alias("s")
+    return d.select("doc_id", *carry, F.split(F.col("text"), _TOK).alias("toks")).select(
+        "doc_id", *carry, F.explode(F.array_distinct(F.expr(_SHINGLE_FROM_TOKS))).alias("s")
     )
 
 
@@ -388,7 +376,8 @@ def dedup_minhash_lsh_pairs(spark, sf_dir):
 
     Built by operators/dedup.py minhash_lsh_pairs_rowform: signatures and
     sizes are per-row array expressions, and shingles are exploded only for
-    candidate docs, so there is no corpus-scale explode, cache or shuffle."""
+    candidate docs, so no shingle table is exploded, cached or shuffled
+    corpus-wide."""
     from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform
 
     d = _docs_par(spark, sf_dir)
@@ -397,7 +386,7 @@ def dedup_minhash_lsh_pairs(spark, sf_dir):
         return _explode_shingles(d.join(F.broadcast(ids_df), "doc_id", "left_semi"))
 
     return minhash_lsh_pairs_rowform(
-        _doc_shingle_arrays(spark, sf_dir),
+        _doc_shingle_arrays(d),
         explode_shingles=_cand_exploder,
         threshold=0.5,
         band_cap=64,
@@ -477,68 +466,53 @@ def ngram_jaccard_top_pairs(spark, sf_dir):
     one source would still emit M^2 intermediate rows — real output volume,
     not partition imbalance, so no AQE split can fix it.  Guard: drop
     shingles with per-source document frequency > NGRAM_DF_CAP before the
-    join (same posture as the LSH band cap, operators/dedup.py) and log the
-    drop.  Jaccard is then computed over the KEPT (informative) shingles on
-    both sides — numerator and denominator — which is standard stop-feature
-    removal; the DuckDB oracle mirrors the identical cap so results stay
-    bit-exact.  Ties broken by ids."""
+    join (same posture as the LSH band cap, operators/dedup.py) and report
+    the drop as a record (operators/skew.py).  Jaccard is then computed
+    over the KEPT (informative) shingles on both sides — numerator and
+    denominator — which is standard stop-feature removal; the DuckDB oracle
+    mirrors the identical cap so results stay bit-exact.  Ties broken by
+    ids."""
     return _ngram_jaccard_pairs(_docs_par(spark, sf_dir), df_cap=NGRAM_DF_CAP)
 
 
-def _ngram_jaccard_pairs(d, df_cap: int = NGRAM_DF_CAP, logger=print):
-    """Top-20 n-gram Jaccard pairs per source.
+def _ngram_jaccard_pairs(d, df_cap: int = NGRAM_DF_CAP):
+    """Top-20 n-gram Jaccard pairs per source, as one lazy plan: building
+    it runs nothing and holds no cache.
 
-    NOTE (round 5 change, documented round 6): the returned DataFrame is
-    EAGER — the top-20 is computed here, round-tripped through the driver
-    (driver-sized by construction), and handed back as a driver-local Arrow
-    frame so the shingle-df cache can be released immediately.  A caller
-    composing this into a larger plan gets a tiny LocalRelation, not a lazy
-    view over the shingle pipeline — recomputation semantics differ from a
-    normal lazy DataFrame (re-executing the result does NOT re-scan the
-    corpus)."""
-    sh0 = d.select(
-        "doc_id", "source", F.explode(F.array_distinct(F.expr(_SHINGLE_SPARK))).alias("s")
+    The df cap is a window count over (s, source) (operators/skew.py): its
+    exchange is the one the shingle self-join reads on both sides, and the
+    per-doc kept-shingle sizes read it a third time.  The drop is observed
+    in-plan; read it with :func:`~nerzo_spark.operators.skew.guard_records`
+    on the returned frame (``guard="ngram_jaccard_top_pairs"``) once an
+    action has run it.  Shingles come from the two-step token projection
+    (:func:`_explode_shingles`), built once per doc."""
+    observed, kept, guard = capped_keys(
+        _explode_shingles(d, "source"), ["s", "source"], df_cap, "ngram_jaccard_top_pairs"
     )
-    # cached so the drop-count action below MATERIALIZES the aggregation
-    # the semi-join needs anyway — one shingle scan, not two (ADVICE r3).
-    # The result is a top-20 — driver-sized by construction — so it is
-    # collected inside the block and the shingle-df cache is released
-    # before returning; callers get a driver-local frame with the
-    # identical schema.
-    with cached(sh0.groupBy("s", "source").agg(F.count("*").alias("df"))) as sdf:
-        n_dropped = sdf.filter(F.col("df") > df_cap).count()
-        if n_dropped > 0 and logger is not None:
-            logger(
-                f"[ngram_jaccard_top_pairs] skew guard: dropped {n_dropped} "
-                f"shingle(s) with per-source document frequency > {df_cap} "
-                f"(boilerplate text; Jaccard computed over kept shingles)"
-            )
-        sh = sh0.join(sdf.filter(F.col("df") <= df_cap).select("s", "source"), ["s", "source"])
-        sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-        inter = (
-            sh.alias("a")
-            .join(
-                sh.alias("b"),
-                (F.col("a.s") == F.col("b.s"))
-                & (F.col("a.source") == F.col("b.source"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-            .agg(F.count("*").alias("i"))
+    sizes = kept.groupBy("doc_id").agg(F.count("*").alias("n"))
+    inter = (
+        observed.alias("a")
+        .join(
+            kept.alias("b"),
+            (F.col("a.s") == F.col("b.s"))
+            & (F.col("a.source") == F.col("b.source"))
+            & (F.col("a.doc_id") < F.col("b.doc_id")),
         )
-        pairs = (
-            inter.join(sizes.alias("na"), F.col("na.doc_id") == F.col("id_a"))
-            .join(sizes.alias("nb"), F.col("nb.doc_id") == F.col("id_b"))
-            .select(
-                "id_a",
-                "id_b",
-                F.round(F.col("i") * 1.0 / (F.col("na.n") + F.col("nb.n") - F.col("i")), 6).alias("jaccard"),
-            )
-            .orderBy(F.desc("jaccard"), "id_a", "id_b")
-            .limit(20)
+        .groupBy(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        .agg(F.count("*").alias("i"))
+    )
+    pairs = (
+        inter.join(sizes.alias("na"), F.col("na.doc_id") == F.col("id_a"))
+        .join(sizes.alias("nb"), F.col("nb.doc_id") == F.col("id_b"))
+        .select(
+            "id_a",
+            "id_b",
+            F.round(F.col("i") * 1.0 / (F.col("na.n") + F.col("nb.n") - F.col("i")), 6).alias("jaccard"),
         )
-        out = pairs.collect()
-    return local_frame(d.sparkSession, out, pairs.schema)
+        .orderBy(F.desc("jaccard"), "id_a", "id_b")
+        .limit(20)
+    )
+    return watch(pairs, guard)
 
 
 # --- F2 offset -> token-index mapping ----------------------------------------

@@ -338,28 +338,25 @@ def test_closed_kg_result_releases_caches(spark, fixture_small):
 
 
 @pytest.mark.parametrize("op", ["minhash_lsh_pairs_rowform", "_ngram_jaccard_pairs"])
-def test_raising_skew_guard_logger_releases_caches(spark, op):
-    """A skew-guard logger that raises while a band or shingle drop fires
-    leaves no cache entry behind."""
+def test_near_dup_plans_hold_no_cache(spark, op):
+    """Building and collecting a near-dup plan whose skew guard fires
+    leaves the session's cache entries as they were."""
     from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform
-    from nerzo_spark.plans.catalog_text import _SHINGLE_SPARK, _ngram_jaccard_pairs
-
-    def boom(msg):
-        raise RuntimeError("injected")
+    from nerzo_spark.plans.catalog_text import _doc_shingle_arrays, _ngram_jaccard_pairs
 
     base = "the quick value of a stream is computed from rows and batches near"
     docs = spark.createDataFrame(
         [(i, base, "src") for i in range(70)], "doc_id long, text string, source string"
     )
-    runs = {
+    builds = {
         "minhash_lsh_pairs_rowform": lambda: minhash_lsh_pairs_rowform(
-            docs.select("doc_id", F.array_distinct(F.expr(_SHINGLE_SPARK)).alias("sh")),
-            band_cap=64, logger=boom,
+            _doc_shingle_arrays(docs), band_cap=64
         ),
-        "_ngram_jaccard_pairs": lambda: _ngram_jaccard_pairs(docs, df_cap=8, logger=boom),
+        "_ngram_jaccard_pairs": lambda: _ngram_jaccard_pairs(docs, df_cap=8),
     }
     cache = spark._jsparkSession.sharedState().cacheManager()
     before = cache.numCachedEntries()
-    with pytest.raises(RuntimeError, match="injected"):
-        runs[op]()
+    plan = builds[op]()
+    assert cache.numCachedEntries() == before
+    plan.collect()
     assert cache.numCachedEntries() == before

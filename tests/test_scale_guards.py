@@ -7,6 +7,8 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from nerzo_spark.plans.catalog_text import _doc_shingle_arrays
+
 SF_SMALL = "/root/testdata/sf0.001"
 
 
@@ -14,14 +16,16 @@ SF_SMALL = "/root/testdata/sf0.001"
 #
 # The independent reference is the DuckDB oracle registered for
 # dedup_minhash_lsh_pairs (band cap 64, threshold 0.5), run over each test's
-# own rows registered as `documents`.
+# own rows registered as `documents`.  The guard's record is held against
+# the same band sizes counted in DuckDB.
 
-def _doc_sh(df):
-    from nerzo_spark.plans.catalog_text import _SHINGLE_SPARK
+def _records(spark, df):
+    """The guard records of ``df`` after its action: the metrics reach the
+    driver through the listener bus, so drain it first."""
+    from nerzo_spark.operators.skew import guard_records
 
-    return df.select(
-        "doc_id", F.array_distinct(F.expr(_SHINGLE_SPARK)).alias("sh")
-    )
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return guard_records(df)
 
 
 def _oracle_matches(pairs, con):
@@ -32,20 +36,41 @@ def _oracle_matches(pairs, con):
     assert ok, msg
 
 
-def _docs_con(rows):
+def _docs_con(rows, cols=("doc_id", "text")):
     import duckdb
     import pandas as pd
 
     con = duckdb.connect()
-    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
+    con.register("documents", pd.DataFrame(rows, columns=list(cols)))
     return con
+
+
+def _duck_band_record(con, cap=64):
+    """GuardRecord of the band guard, from band sizes counted in DuckDB."""
+    from nerzo_spark.operators.skew import GuardRecord
+    from nerzo_spark.plans.catalog_text import _mh_duck
+
+    dropped, worst = con.execute(
+        f"""WITH sig AS (
+              SELECT doc_id, {_mh_duck(0)} AS mh0, {_mh_duck(1)} AS mh1,
+                     {_mh_duck(2)} AS mh2, {_mh_duck(3)} AS mh3
+              FROM documents),
+            bands AS (
+              SELECT md5(mh0 || mh1) AS band FROM sig
+              UNION ALL SELECT md5(mh2 || mh3) FROM sig),
+            sizes AS (SELECT band, count(*) AS c FROM bands GROUP BY band)
+            SELECT count(*) FILTER (WHERE c > {cap}), max(c) FROM sizes"""
+    ).fetchone()
+    return GuardRecord("minhash_lsh_pairs_rowform", dropped, cap, worst)
 
 
 def test_lsh_degenerate_band_capped(spark):
     """300 identical docs share every band: without the guard the candidate
-    join emits ~45k pairs from one bucket; with cap=64 the band is dropped,
-    the drop is logged, and distinct near-dup pairs still come through."""
+    join emits ~45k pairs from one bucket; with cap=64 both of their bands
+    are dropped, the record says so, and distinct near-dup pairs still come
+    through."""
     from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform
+    from nerzo_spark.operators.skew import GuardRecord
 
     base = "the quick value of a stream is computed from rows and batches near"
     rows = [(i, base) for i in range(300)]
@@ -53,39 +78,40 @@ def test_lsh_degenerate_band_capped(spark):
     rows += [(1000, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
              (1001, "alpha beta gamma delta epsilon zeta eta theta iota kappa x")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    logs = []
-    pairs = minhash_lsh_pairs_rowform(
-        _doc_sh(docs), threshold=0.5, band_cap=64, logger=logs.append
-    )
-    assert logs and "skew guard" in logs[0]
+    con = _docs_con(rows)
+    pairs = minhash_lsh_pairs_rowform(_doc_shingle_arrays(docs), threshold=0.5, band_cap=64)
+    assert _records(spark, pairs) == []  # nothing has run yet
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
+    record = GuardRecord("minhash_lsh_pairs_rowform", dropped=2, cap=64, worst=300)
+    assert _records(spark, pairs) == [record] == [_duck_band_record(con)]
     # the degenerate 300-doc clique is excluded (covered by exact dedup)
     assert all(a >= 1000 for a, _ in got), got
     assert (1000, 1001) in got
-    _oracle_matches(pairs, _docs_con(rows))
+    _oracle_matches(pairs, con)
 
 
 def test_lsh_guard_noop_below_cap(spark):
     """With no oversized band the guard changes nothing: the sf0.001 pairs
-    equal the oracle's, and nothing is logged."""
+    equal the oracle's, and the record shows no drop."""
     from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform
     from tests.oracle_harness import duck_con
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
-    logs = []
-    pairs = minhash_lsh_pairs_rowform(
-        _doc_sh(docs), threshold=0.5, band_cap=64, logger=logs.append
-    )
-    assert not logs  # sf0.001 has no 64-doc band
-    _oracle_matches(pairs, duck_con(SF_SMALL))
+    con = duck_con(SF_SMALL)
+    pairs = minhash_lsh_pairs_rowform(_doc_shingle_arrays(docs), threshold=0.5, band_cap=64)
+    _oracle_matches(pairs, con)
+    (record,) = _records(spark, pairs)
+    assert record == _duck_band_record(con)
+    assert record.dropped == 0 and 2 <= record.worst <= 64  # sf0.001 has no 64-doc band
 
 
 def test_minhash_rowform_band_cap_equals_oracle(spark):
     """Under an active band_cap drop (70 identical docs, cap 64) the pair
     set and jaccard values equal the oracle's, via BOTH the default explode
-    path and a caller-supplied explode_shingles callback, and the skew-guard
-    log fires on both."""
+    path and a caller-supplied explode_shingles callback, and both records
+    show the two dropped bands."""
     from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform
+    from nerzo_spark.operators.skew import GuardRecord
     from nerzo_spark.plans.catalog_text import _explode_shingles
 
     base = "the quick value of a stream is computed from rows and batches near"
@@ -96,19 +122,19 @@ def test_minhash_rowform_band_cap_equals_oracle(spark):
              (1003, "one two three four five six seven eight nine ten twelve")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     con = _docs_con(rows)
+    record = GuardRecord("minhash_lsh_pairs_rowform", dropped=2, cap=64, worst=70)
+    assert _duck_band_record(con) == record
 
     def _exploder(ids_df):  # shaped like the catalog query's callback
         return _explode_shingles(docs.join(F.broadcast(ids_df), "doc_id", "left_semi"))
 
     for explode_shingles in (None, _exploder):
-        logs = []
         pairs = minhash_lsh_pairs_rowform(
-            _doc_sh(docs), explode_shingles=explode_shingles,
-            threshold=0.5, band_cap=64, logger=logs.append,
+            _doc_shingle_arrays(docs), explode_shingles=explode_shingles, threshold=0.5, band_cap=64,
         )
-        assert logs and "skew guard" in logs[0]
         # non-degenerate: the small near-dup pairs survive
         assert {(1000, 1001), (1002, 1003)} <= {(r.id_a, r.id_b) for r in pairs.collect()}
+        assert _records(spark, pairs) == [record]
         _oracle_matches(pairs, con)
 
 
@@ -218,11 +244,27 @@ def test_token_offsets_substring_invariant(spark):
 
 # --- n-gram Jaccard boilerplate-shingle guard ----------------------------------
 
+def _duck_ngram_record(con, cap):
+    """GuardRecord of the shingle-df guard, from (s, source) groups counted
+    in DuckDB over the same rows."""
+    from nerzo_spark.operators.skew import GuardRecord
+    from nerzo_spark.plans.catalog_text import _SHINGLE_DUCK
+
+    dropped, worst = con.execute(
+        f"""WITH sh AS (
+              SELECT source, unnest(list_distinct({_SHINGLE_DUCK})) AS s FROM documents),
+            sdf AS (SELECT s, source, count(*) AS df FROM sh GROUP BY s, source)
+            SELECT count(*) FILTER (WHERE df > {cap}), max(df) FROM sdf"""
+    ).fetchone()
+    return GuardRecord("ngram_jaccard_top_pairs", dropped, cap, worst)
+
+
 def test_ngram_boilerplate_shingle_capped(spark):
     """100 docs of one source share a boilerplate license line: without the
     DF cap the shingle self-join emits ~5k intermediate rows from that one
-    shingle.  With the cap the boilerplate shingles are dropped (and logged)
-    and only genuinely-similar docs pair."""
+    shingle.  With the cap the boilerplate shingles are dropped (the record
+    counts all 7 of them) and only genuinely-similar docs pair."""
+    from nerzo_spark.operators.skew import GuardRecord
     from nerzo_spark.plans.catalog_text import _ngram_jaccard_pairs
 
     boiler = "licensed under the apache license version two point zero"
@@ -234,9 +276,11 @@ def test_ngram_boilerplate_shingle_capped(spark):
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string, source string")
 
-    logs = []
-    out = _ngram_jaccard_pairs(d, df_cap=8, logger=logs.append).collect()
-    assert logs and "skew guard" in logs[0]
+    top = _ngram_jaccard_pairs(d, df_cap=8)
+    out = top.collect()
+    record = GuardRecord("ngram_jaccard_top_pairs", dropped=7, cap=8, worst=100)
+    assert _records(spark, top) == [record]
+    assert _duck_ngram_record(_docs_con(rows, ("doc_id", "text", "source")), 8) == record
     pairs = {(r["id_a"], r["id_b"]) for r in out}
     assert (1000, 1001) in pairs
     # boilerplate-only docs share nothing after the cap: no pair among them
@@ -244,7 +288,9 @@ def test_ngram_boilerplate_shingle_capped(spark):
 
 
 def test_ngram_guard_noop_without_boilerplate(spark):
-    """Below the cap the guard changes nothing (and logs nothing)."""
+    """Below the cap the guard changes nothing, and its record shows no
+    drop."""
+    from nerzo_spark.operators.skew import GuardRecord
     from nerzo_spark.plans.catalog_text import _ngram_jaccard_pairs
 
     rows = [
@@ -253,11 +299,45 @@ def test_ngram_guard_noop_without_boilerplate(spark):
         (3, "totally different words here now", "src"),
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string, source string")
-    logs = []
-    capped = _ngram_jaccard_pairs(d, df_cap=64, logger=logs.append).collect()
-    uncapped = _ngram_jaccard_pairs(d, df_cap=10**9, logger=None).collect()
-    assert logs == []
+    capped_df = _ngram_jaccard_pairs(d, df_cap=64)
+    uncapped_df = _ngram_jaccard_pairs(d, df_cap=10**9)
+    capped, uncapped = capped_df.collect(), uncapped_df.collect()
+    # the shared shingles of docs 1 and 2 are the most frequent: df 2
+    assert _records(spark, capped_df) == [GuardRecord("ngram_jaccard_top_pairs", 0, 64, 2)]
+    assert _records(spark, uncapped_df) == [GuardRecord("ngram_jaccard_top_pairs", 0, 10**9, 2)]
     assert sorted(map(tuple, capped)) == sorted(map(tuple, uncapped))
+
+
+def test_ngram_cap_firing_equals_oracle(spark):
+    """At NGRAM_DF_CAP, with more than 64 docs of one source sharing a
+    boilerplate line, the top pairs equal the registered DuckDB oracle and
+    the record's drop count equals DuckDB's count of (s, source) groups over
+    the cap.  64 of the docs also share a phrase whose shingles sit exactly
+    at the cap and are kept."""
+    from nerzo_spark.plans import catalog
+    from nerzo_spark.plans.catalog_text import NGRAM_DF_CAP, _ngram_jaccard_pairs
+    from tests.oracle_harness import compare
+
+    boiler = "licensed under the apache license version two point zero"
+    rows = [
+        (i, f"{boiler} {'common mid words now' if i < 64 else 'other'} "
+            f"x{i % 9} y{i % 4} z{i}", "a")
+        for i in range(70)
+    ]
+    rows += [
+        (1000, "alpha beta gamma delta epsilon zeta", "b"),
+        (1001, "alpha beta gamma delta epsilon eta", "b"),
+        (1002, "alpha beta gamma delta", "a"),
+    ]
+    d = spark.createDataFrame(rows, "doc_id long, text string, source string")
+    con = _docs_con(rows, ("doc_id", "text", "source"))
+
+    top = _ngram_jaccard_pairs(d, df_cap=NGRAM_DF_CAP)
+    ok, msg = compare(top, con, catalog.oracle_sql()["ngram_jaccard_top_pairs"])
+    assert ok, msg
+    (record,) = _records(spark, top)
+    assert record == _duck_ngram_record(con, NGRAM_DF_CAP)
+    assert record.dropped == 7 and record.worst == 70
 
 
 # --- embedding near-dup label-partition guard ----------------------------------
