@@ -18,10 +18,12 @@ Size-aware execution (the AQE-style decision, explicit):
    (Spark regex exprs) — driver-side norm_key() over the distinct-surface
    set was measured as a ~20 s core-count-invariant sequential cost at 800k
    files; singleton short-circuit: only surfaces sharing a bucket with
-   another surface ("hot") can merge;
-2. hot subgraph fits on the driver (`driver_limit`): collect it WITH its
-   precomputed keys, exact union-find in Python (dict ops only), broadcast
-   the mapping back;
+   another surface ("hot") can merge, found by a window count on the
+   bucket exchange;
+2. hot subgraph fits on the driver (`driver_limit` edge rows): one bounded
+   collect (``limit(driver_limit + 1)``) fetches it WITH its precomputed
+   keys, exact union-find in Python (dict ops only), broadcast the mapping
+   back;
 3. else full distributed min-label propagation: iterate
    label(node) <- min over buckets of min over members until fixpoint
    (O(cluster diameter) rounds; fixture plants >=3-hop chains).  Loop joins
@@ -35,12 +37,12 @@ All three paths produce identical clusters (tests/test_canonicalize_paths.py).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from nerzo_spark.functions.hashing import ent_id
 from nerzo_spark.functions.text import norm_key, normalize_surface, squash, squash_key
-from nerzo_spark.session import cached, local_frame
+from nerzo_spark.session import local_frame
 
 
 def _driver_union_find(
@@ -130,7 +132,6 @@ def canonicalize_surfaces(
     max_iter: int = 12,
     loop_partitions: int = 32,
     driver_limit: int = 500_000,
-    bucket_broadcast_bytes: int = 32 << 20,
 ) -> DataFrame:
     """typed_surfaces(fine_type, surface) -> (fine_type, surface, canonical,
     entity_id).  Deterministic: canonical = lexicographic min k1 in cluster."""
@@ -138,27 +139,8 @@ def canonicalize_surfaces(
     overrides = canonical_overrides(
         typed_surfaces, max_iter=max_iter, loop_partitions=loop_partitions,
         driver_limit=driver_limit,
-        bucket_broadcast_bytes=bucket_broadcast_bytes,
     )
     return resolve_entities(distinct_surfaces, overrides)
-
-
-def _collision_semi_join(
-    all_edges: DataFrame,
-    collision_buckets: DataFrame,
-    est_bytes: int,
-    limit_bytes: int,
-) -> DataFrame:
-    """Keep only edges in multi-member buckets.  Broadcasts the bucket list
-    when its estimated in-memory size fits ``limit_bytes`` (collision buckets
-    are hot-subgraph-sized — tiny in the designed regime); falls back to a
-    shuffle semi-join when the estimate says the broadcast could pressure
-    the driver (unbounded-surface regime).  Split out so the gate's two
-    physical shapes are plan-assertable (tests/test_canonicalize_paths.py)."""
-    buckets = collision_buckets.select("bucket")
-    if est_bytes <= limit_bytes:
-        buckets = F.broadcast(buckets)
-    return all_edges.join(buckets, "bucket", "left_semi")
 
 
 def canonical_overrides(
@@ -167,7 +149,6 @@ def canonical_overrides(
     loop_partitions: int = 32,
     driver_limit: int = 500_000,
     already_distinct: bool = False,
-    bucket_broadcast_bytes: int = 32 << 20,
 ) -> DataFrame:
     """The MINIMAL canonicalization mapping: (fine_type, surface, canonical)
     ONLY for surfaces whose cluster canonical differs from their own
@@ -196,100 +177,60 @@ def canonical_overrides(
         .withColumn("node_id", F.sha1(F.concat_ws("|", "fine_type", "surface")))
     )
 
-    # per-row array_distinct (k1 bucket == k2 bucket for separator-free
-    # surfaces) — NOT a shuffle-wide distinct; node_id is already unique.
-    # Node payload rides WITH the edge so the hot subgraph needs no join
-    # back to `nodes` (round-1 shape cost 3 shuffles + 2 checkpoints here).
+    # two edges per node, one per bucket key; the "k1"/"k2" tags keep the
+    # two bucket strings distinct.  Node payload rides WITH the edge so the
+    # hot subgraph needs no join back to `nodes` (round-1 shape cost 3
+    # shuffles + 2 checkpoints here).
     all_edges = nodes.select(
         "node_id", "fine_type", "surface", "k1", "k2",
         F.explode(
-            F.array_distinct(
-                F.array(
-                    F.concat_ws("#", F.col("fine_type"), F.lit("k1"), F.col("k1")),
-                    F.concat_ws("#", F.col("fine_type"), F.lit("k2"), F.col("k2")),
-                )
+            F.array(
+                F.concat_ws("#", F.col("fine_type"), F.lit("k1"), F.col("k1")),
+                F.concat_ws("#", F.col("fine_type"), F.lit("k2"), F.col("k2")),
             )
         ).alias("bucket"),
     )
 
-    # singleton short-circuit: only nodes sharing a bucket can merge.
-    # Round 3 used count() OVER (PARTITION BY bucket) — a full sort-window
-    # shuffle of ALL edge rows (2x distinct surfaces).  Measured at 1.6M
-    # files on the 4-executor rig it ANTI-scaled (5.9 s at 1 exec -> 18.9 s
-    # at 4: the cross-executor shuffle+sort of ~1.7M rows swamped the
-    # compute).  v4: a hash aggregate with MAP-SIDE partial counts (only
-    # (bucket, partial-count) pairs cross executors) finds the collision
-    # buckets — a table bounded by the HOT subgraph, small by construction
-    # (the whole design rests on collisions being rare; Path 3 exists for
-    # the rest) — and a semi-join keeps multi-member buckets without ever
-    # shuffling or sorting the edge rows.
-    # v5 (ADVICE r4): the aggregate is cached so it runs exactly once — the
-    # old shape re-ran it for Path 3's hot_edges checkpoint — and its (count, sum bn, sum octet_length) stats drive
-    # BOTH decisions: the Path-1/Path-3 split (sum bn >= hot node count, so
-    # sum bn <= driver_limit guarantees the driver collect is bounded —
-    # replaces the limit(driver_limit+1) probe job) and the broadcast gate.
-    # v6 (ADVICE r5): the gate is BYTE-denominated, not row-count: bucket
-    # keys embed normalized surfaces of unbounded length, so a row limit
-    # admitted anywhere from ~60 MB to several hundred MB.  The cached
-    # stats carry sum(octet_length(bucket)) for free; the estimate adds
-    # ~32 B/row of UnsafeRow + hash-relation overhead.  Oversized tables
-    # fall back to a shuffle semi-join (explicit F.broadcast would bypass
-    # autoBroadcastJoinThreshold and could blow the driver / 8 GB cap).
-    # The edge table is cached for the length of the block below: the
-    # collision-stats job materializes it and the hot-subgraph semi-join
-    # re-reads it; without the cache the normalize/squash regex projection
-    # over every distinct surface ran TWICE.  The collision stats are cached
-    # with it (read by the stats collect and by the semi-join).  Both are
-    # surface-scale and released on every exit path, before the driver
-    # union-find or the propagation loop.
-    with cached(all_edges) as all_edges, cached(
-        all_edges.groupBy("bucket").agg(F.count("*").alias("bn")).filter(F.col("bn") > 1)
-    ) as collision_stats:
-        st = collision_stats.agg(
-            F.count("*").alias("n_buckets"),
-            F.coalesce(F.sum("bn"), F.lit(0)).alias("hot_edge_rows"),
-            F.coalesce(F.sum(F.octet_length("bucket")), F.lit(0)).alias("bucket_bytes"),
-        ).collect()[0]
-        hot_edges = _collision_semi_join(
-            all_edges,
-            collision_stats,
-            est_bytes=int(st["bucket_bytes"]) + 32 * int(st["n_buckets"]),
-            limit_bytes=bucket_broadcast_bytes,
-        )
-        # Path 1/2: collision subgraph fits on the driver — union-find it
-        # there (exact, 1 round-trip); keys come precomputed from the
-        # cluster, so the driver does dict ops only, no regex.
-        # hot_edge_rows bounds the node count from above (each hot node
-        # contributes >=1 collision-bucket membership), so the collect is
-        # driver-safe by construction.
-        on_driver = driver_limit > 0 and st["hot_edge_rows"] <= driver_limit
-        if on_driver:
-            rows = hot_edges.select(
-                "node_id", "fine_type", "surface", "k1", "k2"
-            ).dropDuplicates(["node_id"]).collect()
-        else:
-            # Path 3 checkpoints HERE (Path 1's single collect needs no
-            # reuse): the loop reads the edges every iteration and must not
-            # re-run the key-regex projection + collision semi-join each
-            # round; the eager checkpoint also outlives the caches above.
-            hot_edges = hot_edges.localCheckpoint()
+    # singleton short-circuit: only nodes sharing a bucket can merge.  A
+    # window count on the bucket exchange keeps the edges of multi-member
+    # buckets in one pass (the operators/skew.py shape).  It shuffles every
+    # edge row: in one JVM that is a local exchange, but round 3 measured
+    # it anti-scaling across 4 executors, where the rows crossed machines.
+    hot_edges = (
+        all_edges.withColumn("bn", F.count("*").over(Window.partitionBy("bucket")))
+        .filter(F.col("bn") > 1)
+        .drop("bn")
+    )
 
-    if on_driver:
-        mapping = _driver_union_find(
-            [(r["fine_type"], r["surface"]) for r in rows],
-            keys=[(r["k1"], r["k2"]) for r in rows],
-        )
-        k1_of = {(r["fine_type"], r["surface"]): r["k1"] for r in rows}
-        overrides = [
-            (ft, s, c) for ft, s, c in mapping if c != k1_of[(ft, s)]
-        ]
-        return local_frame(
-            spark, overrides, "fine_type string, surface string, canonical string"
-        )
+    # Path 1/2: the collision subgraph fits on the driver — union-find it
+    # there (exact); keys come precomputed from the cluster, so the driver
+    # does dict ops only, no regex.  ONE bounded action decides and fetches:
+    # at most driver_limit + 1 hot edge rows come back, and the driver path
+    # is taken when the subgraph has at most driver_limit of them (each hot
+    # node has >= 1 hot edge, so that also bounds the node count).
+    if driver_limit > 0:
+        rows = hot_edges.select(
+            "node_id", "fine_type", "surface", "k1", "k2"
+        ).limit(driver_limit + 1).collect()
+        if len(rows) <= driver_limit:
+            mapping = _driver_union_find(
+                [(r["fine_type"], r["surface"]) for r in rows],
+                keys=[(r["k1"], r["k2"]) for r in rows],
+            )
+            k1_of = {(r["fine_type"], r["surface"]): r["k1"] for r in rows}
+            overrides = [
+                (ft, s, c) for ft, s, c in mapping if c != k1_of[(ft, s)]
+            ]
+            return local_frame(
+                spark, overrides, "fine_type string, surface string, canonical string"
+            )
 
     # Path 3: distributed min-label propagation over the hot subgraph
     # (singleton buckets dropped above contribute only a node's own label
     # to the bucket-min — removing them cannot change any fixpoint label).
+    # The loop reads the edges every round: checkpoint them once so the
+    # key-regex projection and the bucket window do not re-run per round.
+    hot_edges = hot_edges.localCheckpoint()
     hot = hot_edges.select(
         "node_id", "fine_type", "surface", "k1", "k2"
     ).dropDuplicates(["node_id"])

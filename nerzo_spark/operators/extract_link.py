@@ -118,14 +118,3 @@ def extract_and_link(
             yield pd.DataFrame(out)
 
     return corpus.mapInPandas(_nerzo_extract_link, schema=LINKED_SCHEMA)
-
-
-# The physical plan prints the UDF's __name__ on the MapInPandas line
-# ("MapInPandas _nerzo_extract_link(...)"; verified on Spark 4.1) — the
-# narrow-chain tripwire (pipeline/kg.py) anchors its scan boundary on this
-# EXACT rendered form (operator name + space + __name__ + opening paren,
-# ADVICE r5): a caller UDF whose __name__ merely CONTAINS the name (prefix
-# "my_nerzo_extract_link_passthrough" or suffix
-# "_nerzo_extract_link_wrapper") renders a different line and cannot be
-# mistaken for the extraction boundary.
-EXTRACT_UDF_PLAN_TOKEN = "MapInPandas _nerzo_extract_link("

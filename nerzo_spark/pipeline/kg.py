@@ -105,74 +105,16 @@ def build_label_catalog(anchor_rows: list[dict] | DataFrame) -> list[dict]:
     return catalog
 
 
-def _partition_local_dedup(batches):
-    """Streaming exact dedup of (subj, repo, path, commit) within one
-    partition, exploiting file contiguity: a duplicate key necessarily
-    shares its (repo, path, commit) — one FILE — and the extraction
-    ``mapInPandas`` emits each file's mentions as one contiguous run in the
-    partition's output stream (the same narrow-chain precondition
-    :func:`build_triples` already requires).  So a batch-local
-    ``drop_duplicates`` is exact except for the single file that may span
-    a batch boundary — only ITS keys are carried across batches (round 3
-    carried every key through a per-row Python loop; this is vectorized
-    pandas end-to-end and the carry state is one file's worth).
-
-    PRECONDITION (data-level, ADVICE r4): the CORPUS must hold at most ONE
-    row per (repo, path, commit) — a duplicate corpus row yields two
-    non-adjacent runs of the same file in one partition, which this
-    contiguity-based carry under-dedups and the plan-level tripwire cannot
-    see.  This is a standing pipeline invariant, not a new one: duplicate
-    corpus rows would double-emit ``links_to`` triples (and mention rows)
-    regardless of any dedup strategy here, and the fixture generator / the
-    incremental path's dynamic-partition-overwrite both guarantee
-    uniqueness by construction.  Corpora of unknown provenance must be
-    deduplicated on (repo, path, commit) before entering the pipeline —
-    :func:`corpus_duplicate_files` is the one-job checker for that.
-    """
-    carry_file: tuple | None = None
-    carry_keys: set = set()
-    cols = ["subj", "repo", "path", "commit"]
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        pdf = pdf.drop_duplicates(subset=cols)
-        if carry_file is not None:
-            cont = (
-                (pdf["repo"] == carry_file[0])
-                & (pdf["path"] == carry_file[1])
-                & (pdf["commit"] == carry_file[2])
-            )
-            if cont.any():
-                dup = cont & pdf["subj"].isin(carry_keys)
-                if dup.any():
-                    pdf = pdf[~dup]
-        if not len(pdf):
-            continue
-        last = pdf.iloc[-1]
-        last_file = (last["repo"], last["path"], last["commit"])
-        tail = (
-            (pdf["repo"] == last_file[0])
-            & (pdf["path"] == last_file[1])
-            & (pdf["commit"] == last_file[2])
-        )
-        if last_file == carry_file:
-            carry_keys.update(pdf.loc[tail, "subj"])
-        else:
-            carry_file = last_file
-            carry_keys = set(pdf.loc[tail, "subj"])
-        yield pdf
-
-
 def corpus_duplicate_files(corpus: DataFrame) -> DataFrame:
-    """Checker for the corpus-row uniqueness precondition (ADVICE r4/r5):
-    returns the (repo, path, commit) keys that appear on MORE than one
-    corpus row, with their counts — empty means the precondition holds and
-    ``file_local_dedup`` is exact.  FILE-scale work (one partial-agg
-    groupBy over the corpus table, collapsing map-side to per-partition
-    distinct keys): run it once when ingesting a corpus of unknown
-    provenance, not inside the timed pipeline — the fixture generator and
-    the incremental path's dynamic-partition overwrite guarantee
-    uniqueness by construction, so the hot path never pays for it."""
+    """The (repo, path, commit) keys that appear on MORE than one corpus
+    row, with their counts; empty means every file is one row.  A duplicate
+    corpus row is extracted twice, so its mentions and ``links_to`` triples
+    are doubled.  FILE-scale work (one partial-agg groupBy over the corpus
+    table, collapsing map-side to per-partition distinct keys): run it once
+    when ingesting a corpus of unknown provenance, not inside the timed
+    pipeline — the fixture generator and the incremental path's
+    dynamic-partition overwrite guarantee uniqueness by construction, so the
+    hot path never pays for it."""
     return (
         corpus.groupBy("repo", "path", "commit")
         .agg(F.count(F.lit(1)).alias("n_rows"))
@@ -180,70 +122,9 @@ def corpus_duplicate_files(corpus: DataFrame) -> DataFrame:
     )
 
 
-def _assert_narrow_from_extraction(df: DataFrame) -> None:
-    """Runtime tripwire for the ``file_local_dedup`` precondition (VERDICT
-    r3 #3 / ADVICE r3): the partition-local ``defined_in`` dedup is exact
-    ONLY if ``typed`` reaches here through a narrow (shuffle-free) chain
-    from the extraction ``mapInPandas`` — a re-shuffled or parquet-sourced
-    input splits one file's mentions across partitions and would silently
-    double-emit triples.  The extraction boundary is the MapInPandas line
-    carrying the extraction UDF's NAME (the plan prints the function's
-    ``__name__``: "MapInPandas _nerzo_extract_link(...)"; anchoring on the
-    EXACT rendered form — operator + name + opening paren, not the first
-    MapInPandas or a substring of the name — means neither a caller-inserted
-    mapInPandas above a hidden shuffle (r4 ADVICE) nor a caller UDF whose
-    ``__name__`` merely contains the token (r5 ADVICE) can truncate the
-    scan).  The full plan string is scanned — ``InMemoryRelation``
-    prints its cached child plan inline (verified on Spark 4.1), so a
-    shuffle hidden inside a cached plan (caller repartitions THEN persists:
-    the Exchange sits below the InMemoryTableScan line but above the
-    extraction MapInPandas) is visible and caught.  Fail loudly if (a) any
-    non-broadcast Exchange appears above that boundary, or (b) no
-    extraction MapInPandas exists at all (input did not descend from
-    in-process extraction).  Broadcast exchanges are allowed — they never
-    move the probe side's rows; shuffles BELOW the extraction MapInPandas
-    (the corpus repartition) are allowed — extraction emits each file's
-    mentions from one input row regardless of how corpus rows were placed.
-    The boundary is the FIRST named occurrence: AQE prints the plan tree
-    twice ("== Current Plan ==" / "== Initial Plan =="), so the last
-    occurrence would sit below the current plan's legal corpus Exchange and
-    false-trip; the first named line belongs to the current plan, and
-    everything string-above it is genuinely above the extraction."""
-    from nerzo_spark.operators.extract_link import EXTRACT_UDF_PLAN_TOKEN
-
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    lines = plan.splitlines()
-    boundary_idx = None
-    for i, ln in enumerate(lines):
-        if EXTRACT_UDF_PLAN_TOKEN in ln:
-            boundary_idx = i
-            break
-    boundary = boundary_idx is not None
-    prefix = lines[:boundary_idx] if boundary else lines
-    shuffles = [
-        ln.strip()
-        for ln in prefix
-        if "Exchange" in ln and "Broadcast" not in ln
-    ]
-    if not boundary or shuffles:
-        raise ValueError(
-            "file_local_dedup=True requires `typed` to reach build_triples "
-            "through a narrow (shuffle-free) chain from the extraction "
-            "mapInPandas; "
-            + (
-                f"found shuffle operator(s) above the extraction boundary: {shuffles}. "
-                if shuffles
-                else "no extraction boundary (MapInPandas) found in the plan. "
-            )
-            + "Pass file_local_dedup=False for re-shuffled or "
-            "parquet-sourced inputs (pipeline/incremental.py does)."
-        )
-
-
 def build_triples(
     typed: DataFrame, overrides: DataFrame, catalog: list[dict],
     surfaces: DataFrame,
-    file_local_dedup: bool = False,
 ) -> DataFrame:
     """(typed mentions, canonical overrides) -> (subj, pred, obj, provenance).
 
@@ -258,20 +139,6 @@ def build_triples(
     ``surfaces``: the DISTINCT (fine_type, surface) table (assemble_kg
     shares one across overrides/entities/triples), so the ``typed_as``
     entity set is derived at SURFACE scale, not from the mention table.
-
-    ``file_local_dedup``: eliminate the LAST mention-scale shuffle.  The
-    ``defined_in`` dedup key is (entity, repo, path, commit) — and every
-    mention of one file is emitted by ONE ``mapInPandas`` input row
-    (operators/extract_link.py), i.e. duplicates of the key are ALWAYS
-    co-partitioned as long as ``typed`` reaches here through a narrow chain
-    from extraction.  A partition-local streaming dedup (Arrow-batched,
-    seen-set carried across the partition's batches) is then EXACT and
-    requires no Exchange — measured 26 s -> ~2 s at 1.6M mentions on the
-    4-executor rig, and it is the stage that otherwise refuses to scale
-    with cores (flat ~12 s at every executor count).  Callers whose
-    ``typed`` crossed a file-split boundary (e.g. read back from parquet —
-    pipeline/incremental.py) MUST keep the default shuffle dedup.
-    Equivalence is asserted in tests/test_kg_e2e.py.
     """
     from nerzo_spark.functions.hashing import ent_id
     from nerzo_spark.operators.canonicalize import canonical_expr
@@ -313,17 +180,7 @@ def build_triples(
     # ~100B/row less (0.3 GB at 3.2M mentions); literals added post-shuffle
     defined_base = typed_e.select(
         F.col("entity_id").alias("subj"), "repo", "path", "commit"
-    )
-    if file_local_dedup:
-        # check `typed` (not defined_base): the broadcast overrides join
-        # above it cannot re-place probe-side rows, and typed's own plan is
-        # exactly where a caller's repartition/parquet round-trip would show
-        _assert_narrow_from_extraction(typed)
-        defined_base = defined_base.mapInPandas(
-            _partition_local_dedup, schema=defined_base.schema
-        )
-    else:
-        defined_base = defined_base.dropDuplicates(["subj", "repo", "path", "commit"])
+    ).dropDuplicates(["subj", "repo", "path", "commit"])
 
     null_prov = [
         F.lit(None).cast("string").alias("repo"),
@@ -348,13 +205,13 @@ def build_triples(
     # present among entities == fine types present among surfaces: derive
     # subtype_of from the surface table's tiny fine_type distinct (partial
     # agg collapses to |types| rows map-side) instead of re-running the
-    # whole entity chain (join+distinct over the entity table) for ~8 rows
+    # whole entity chain (join+distinct over the entity table) for ~8 rows.
+    # label_map has one row per fine type (each fine type appears once in TAXONOMY), so
+    # the join keeps (fine_type, coarse_type) distinct.
     t_subtype = (
         surfaces.select("fine_type")
         .distinct()
         .join(label_map, "fine_type")
-        .select("fine_type", "coarse_type")
-        .distinct()
         .select(
             F.col("fine_type").alias("subj"), F.lit("subtype_of").alias("pred"),
             F.col("coarse_type").alias("obj"), *null_prov,
@@ -408,14 +265,12 @@ def stamp_lineage(rows: DataFrame, run_id: str, walls: dict[str, float]) -> Data
 
 
 @contextmanager
-def assemble_kg(
-    typed: DataFrame, catalog: list[dict], file_local_dedup: bool
-) -> Iterator[KGAssembly]:
+def assemble_kg(typed: DataFrame, catalog: list[dict]) -> Iterator[KGAssembly]:
     """The KG back half over a typed mention table, shared by both sinks:
     surface aggregate, canonical overrides, entities, triples and the
     per-repo lineage rows.  ``run_kg_pipeline`` passes its in-memory
-    extraction output (``file_local_dedup=True``); ``run_incremental``
-    passes the mention table read back from parquet (shuffle dedup).
+    extraction output; ``run_incremental`` passes the mention table read
+    back from parquet.
 
     Runs two eager stages: the surface pass and the canonicalize
     clustering.  Everything else is a lazy plan over ``typed`` and the
@@ -457,10 +312,7 @@ def assemble_kg(
             t_surfaces=t_surfaces,
             canon_wall_ms=canon_wall_ms,
             entities=resolve_entities(surfaces, overrides),
-            triples=build_triples(
-                typed, overrides, catalog, surfaces=surfaces,
-                file_local_dedup=file_local_dedup,
-            ),
+            triples=build_triples(typed, overrides, catalog, surfaces=surfaces),
             repo_lineage=typed.groupBy("repo").agg(
                 F.count("*").alias("rows_out"),
                 F.min(F.col("sha_ok").cast("int")).cast("boolean").alias("sha_ok"),
@@ -494,10 +346,7 @@ def run_kg_pipeline(
         typed = caches.enter_context(
             cached(extract_and_link(corpus, catalog, repartition_to=repartition_to))
         )
-        # typed reaches build_triples through a narrow chain from
-        # extraction, so the file-local defined_in dedup is exact (see
-        # build_triples doc)
-        kg = caches.enter_context(assemble_kg(typed, catalog, file_local_dedup=True))
+        kg = caches.enter_context(assemble_kg(typed, catalog))
         # wall of the work executed up to the surface pass (catalog +
         # extract + link + surface agg), so the lineage stage label and its
         # wall agree

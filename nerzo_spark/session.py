@@ -18,6 +18,8 @@ Scale posture (the point, even though tests run on ``local[N]``):
 - one way to hold a cache: :func:`cached` persists a frame for the length
   of a ``with`` block and releases it on every exit path (ARCHITECTURE.md,
   "Cache lifetime").
+- partition discovery lists on the driver in local mode, where a listing
+  job's tasks would run in the same JVM.
 - one Python worker pool per session: driver-built frames go through
   :func:`local_frame`, which never starts a Python worker, so the Arrow-UDF
   pool :func:`warm_python_workers` starts is the only one.
@@ -164,6 +166,15 @@ def get_spark(
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
+    if master == "local" or master.startswith("local["):
+        # Partition discovery over more directories than the threshold
+        # (default 32) lists them in a Spark job; a resume's mention table
+        # has one directory per repo, so each read paid a listing job with
+        # one task per repo.  In local mode that job's tasks run in this JVM
+        # anyway, so list on the driver and skip the job's fixed cost.
+        builder = builder.config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -1,17 +1,16 @@
 """The distributed label-propagation path (driver_limit=0) must produce the
-same clusters as the driver union-find path (default), and the collision
-broadcast gate's shuffle fallback must be both equivalent and genuinely
-non-broadcast (ADVICE r5 / VERDICT r5 task 2)."""
+same clusters as the driver union-find path (default), and the driver path's
+bound must switch paths exactly at the hot subgraph's edge-row count."""
 
 from __future__ import annotations
 
-import contextlib
-import io
+from collections import Counter
 
-from nerzo_spark.operators.canonicalize import (
-    _collision_semi_join,
-    canonicalize_surfaces,
-)
+import pytest
+
+import nerzo_spark.operators.canonicalize as canon
+from nerzo_spark.functions.text import norm_key, squash
+from nerzo_spark.operators.canonicalize import canonicalize_surfaces
 
 
 def _surfaces_df(spark, fixture_small):
@@ -19,6 +18,18 @@ def _surfaces_df(spark, fixture_small):
         sorted({(m["fine_type"], m["surface"]) for m in fixture_small.mentions}),
         "fine_type string, surface string",
     )
+
+
+def _hot_edge_rows(fixture_small) -> int:
+    """Edge rows in multi-member buckets, counted with the Python twins of
+    the bucket keys: each (fine_type, surface) node has one k1 and one k2
+    bucket."""
+    nodes = {(m["fine_type"], m["surface"]) for m in fixture_small.mentions}
+    sizes = Counter()
+    for ft, s in nodes:
+        sizes[(ft, "k1", norm_key(s))] += 1
+        sizes[(ft, "k2", squash(s))] += 1
+    return sum(n for n in sizes.values() if n > 1)
 
 
 def _assert_same_clusters(a, b):
@@ -34,43 +45,19 @@ def test_driver_and_distributed_paths_agree(spark, fixture_small):
     _assert_same_clusters(a, b)
 
 
-def test_broadcast_gate_fallback_identical_clusters(spark, fixture_small):
-    """bucket_broadcast_bytes=0 forces the shuffle semi-join fallback on
-    BOTH the driver path and the distributed loop path; clusters must not
-    change."""
+@pytest.mark.parametrize("slack, on_driver", [(0, True), (-1, False)])
+def test_driver_limit_boundary(spark, fixture_small, monkeypatch, slack, on_driver):
+    """At driver_limit == the hot edge-row count the driver path runs; one
+    below it, the distributed loop.  Both give the default path's clusters."""
+    hot = _hot_edge_rows(fixture_small)
+    assert hot > 1
+    calls = []
+    union_find = canon._driver_union_find
+    monkeypatch.setattr(
+        canon, "_driver_union_find", lambda *a, **k: calls.append(1) or union_find(*a, **k)
+    )
     surfaces = _surfaces_df(spark, fixture_small)
-    base = canonicalize_surfaces(surfaces)
-    fallback_driver = canonicalize_surfaces(surfaces, bucket_broadcast_bytes=0)
-    fallback_dist = canonicalize_surfaces(
-        surfaces, driver_limit=0, bucket_broadcast_bytes=0
-    )
-    _assert_same_clusters(base, fallback_driver)
-    _assert_same_clusters(base, fallback_dist)
-
-
-def _plan_of(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
-def test_collision_semi_join_gate_controls_broadcast(spark):
-    """Below the byte limit -> explicit BroadcastExchange; above -> shuffle
-    semi-join.  Auto-broadcast is disabled for the assertion because Catalyst
-    would otherwise broadcast any test-sized table on its own, making the
-    no-broadcast branch unobservable."""
-    edges = spark.createDataFrame(
-        [("b1", "n1"), ("b1", "n2"), ("b2", "n3")], "bucket string, node_id string"
-    )
-    buckets = spark.createDataFrame([("b1",)], "bucket string")
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        hinted = _collision_semi_join(edges, buckets, est_bytes=10, limit_bytes=1 << 20)
-        assert "BroadcastExchange" in _plan_of(hinted)
-        fallback = _collision_semi_join(edges, buckets, est_bytes=10, limit_bytes=0)
-        assert "BroadcastExchange" not in _plan_of(fallback)
-        assert sorted(r["node_id"] for r in fallback.collect()) == ["n1", "n2"]
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    got = canonicalize_surfaces(surfaces, driver_limit=hot + slack)
+    assert bool(calls) == on_driver
+    monkeypatch.undo()
+    _assert_same_clusters(canonicalize_surfaces(surfaces), got)

@@ -92,102 +92,10 @@ def test_canonical_variant_chain(spark, fixture_small, kg_result):
         assert len(ids) == 1, f"chain {chain} did not canonicalize: {ids}"
 
 
-def test_file_local_dedup_equals_shuffle_dedup(spark, fixture_small, kg_result):
-    """The no-shuffle partition-local defined_in dedup (file_local_dedup=True,
-    the run_kg_pipeline hot path) must emit EXACTLY the rows of the shuffle
-    dropDuplicates — including surface variants that canonicalize into one
-    entity within a single file (the case a naive first-occurrence flag at
-    extraction would over-count)."""
-    from nerzo_spark.operators.canonicalize import canonical_overrides
-    from nerzo_spark.pipeline.kg import build_label_catalog, build_triples
-
-    typed = kg_result.mentions  # narrow chain from extraction (persisted)
-    surfaces = typed.select("fine_type", "surface").distinct()
-    overrides = canonical_overrides(surfaces).localCheckpoint()
-    catalog = kg_result.label_catalog
-
-    local = build_triples(
-        typed, overrides, catalog, surfaces=surfaces, file_local_dedup=True
-    ).filter(F.col("pred") == "defined_in")
-    shuffled = build_triples(
-        typed, overrides, catalog, surfaces=surfaces, file_local_dedup=False
-    ).filter(F.col("pred") == "defined_in")
-    l_rows = sorted(map(tuple, local.collect()))
-    s_rows = sorted(map(tuple, shuffled.collect()))
-    assert l_rows == s_rows
-    # the repartition(8) fixture spread + megarepo skew means multiple
-    # batches/partitions were exercised, not a single-partition trivial pass
-    assert len(l_rows) > 0
-
-
-def test_file_local_dedup_tripwire(spark, fixture_small, kg_result, tmp_path):
-    """The narrow-chain tripwire must reject inputs whose file contiguity is
-    broken — INCLUDING a shuffle hidden inside a cached plan (caller does
-    repartition THEN persist: the Exchange sits below the InMemoryTableScan
-    line in the plan string; ADVICE r4 found the old prefix-only scan
-    false-passed this), and a parquet round-trip (no extraction MapInPandas
-    in the plan at all) — while accepting the legit persisted chain."""
-    import pytest
-
-    from nerzo_spark.pipeline.kg import _assert_narrow_from_extraction
-    from nerzo_spark.session import cached
-
-    typed = kg_result.mentions
-    # legit: cache directly over the extraction mapInPandas
-    _assert_narrow_from_extraction(typed)
-
-    # hazard 1 (ADVICE r4): shuffle below the cache boundary
-    with cached(typed.repartition(8)) as reshuffled:
-        reshuffled.count()
-        with pytest.raises(ValueError, match="narrow"):
-            _assert_narrow_from_extraction(reshuffled)
-
-    # hazard 2: parquet round-trip (incremental.py's shape) — no MapInPandas
-    p = str(tmp_path / "typed_roundtrip")
-    typed.write.mode("overwrite").parquet(p)
-    with pytest.raises(ValueError, match="no extraction boundary"):
-        _assert_narrow_from_extraction(spark.read.parquet(p))
-
-    # hazard 3 (ADVICE r5 residue): a CALLER's own mapInPandas sitting above
-    # a hidden shuffle — a first-MapInPandas-line scan would stop at the
-    # caller's UDF and never see the Exchange; the name-anchored boundary
-    # must still catch it
-    def _caller_passthrough(batches):
-        yield from batches
-
-    masked = typed.repartition(8).mapInPandas(
-        _caller_passthrough, schema=typed.schema
-    )
-    with pytest.raises(ValueError, match="narrow"):
-        _assert_narrow_from_extraction(masked)
-
-    # and the same caller mapInPandas WITHOUT a shuffle is narrow -> legit
-    _assert_narrow_from_extraction(
-        typed.mapInPandas(_caller_passthrough, schema=typed.schema)
-    )
-
-    # hazard 4 (ADVICE r5): a caller UDF whose __name__ merely CONTAINS the
-    # extraction token, above a hidden shuffle — a substring-of-name match
-    # would take the caller's line as the boundary and mask the Exchange;
-    # the exact-rendered-form anchor ("MapInPandas _nerzo_extract_link(")
-    # must not be fooled by either a prefixed or a suffixed name
-    def my_nerzo_extract_link_passthrough(batches):
-        yield from batches
-
-    def _nerzo_extract_link_wrapper(batches):
-        yield from batches
-
-    for impostor in (my_nerzo_extract_link_passthrough,
-                     _nerzo_extract_link_wrapper):
-        masked2 = typed.repartition(8).mapInPandas(impostor, schema=typed.schema)
-        with pytest.raises(ValueError, match="narrow"):
-            _assert_narrow_from_extraction(masked2)
-
-
 def test_corpus_duplicate_files_checker(spark, fixture_small):
-    """The opt-in uniqueness checker (ADVICE r4/r5): clean fixture corpus ->
-    empty; an injected duplicate corpus row -> exactly that key flagged with
-    its row count."""
+    """The corpus uniqueness checker: clean fixture corpus -> empty; an
+    injected duplicate corpus row -> exactly that key flagged with its row
+    count."""
     from nerzo_spark.pipeline.kg import corpus_duplicate_files
 
     corpus = corpus_df(spark, fixture_small)

@@ -291,10 +291,30 @@ def test_resumable_sink_equals_in_memory(spark, fixture_small, kg_result, tmp_pa
     ])
 
 
+def test_resume_leaves_no_observation_entry(spark, fixture_small, tmp_path):
+    """run_incremental counts entities and triples with observed metrics
+    during their writes.  Those writes always run, so Spark's
+    ObservationManager holds as many entries afterwards as before (only an
+    observed plan that is built and never run leaves one)."""
+    from nerzo_spark.pipeline.incremental import run_incremental
+
+    fx = fixture_small
+    repos = sorted({c["repo"] for c in fx.corpus})[:4]
+    corpus = corpus_df(spark, fx).filter(F.col("repo").isin(repos))
+    manager = spark._jsparkSession.observationManager()
+    field = manager.getClass().getDeclaredField("observations")
+    field.setAccessible(True)
+    before = field.get(manager).size()
+    stats = run_incremental(spark, corpus, fx.anchors, str(tmp_path / "kg"))
+    assert stats["triples_total"] > 0
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    assert field.get(manager).size() == before
+
+
 def test_failed_build_releases_caches(spark, fixture_small, tmp_path, monkeypatch):
-    """A build that fails inside canonicalization, before or after the
-    edge table is released, leaves no entry behind in Spark's cache manager,
-    on either sink."""
+    """A build that fails inside canonicalization, while building the
+    collision plan or after its bounded collect, leaves no entry behind in
+    Spark's cache manager, on either sink."""
     import nerzo_spark.operators.canonicalize as canon
     from nerzo_spark.pipeline.incremental import run_incremental
 
@@ -311,7 +331,7 @@ def test_failed_build_releases_caches(spark, fixture_small, tmp_path, monkeypatc
         "in_memory": lambda out: run_kg_pipeline(spark, corpus, fx.anchors),
         "resumable": lambda out: run_incremental(spark, corpus, fx.anchors, out),
     }
-    for target in ("_collision_semi_join", "_driver_union_find"):
+    for target in ("squash_key", "_driver_union_find"):
         with monkeypatch.context() as m:
             m.setattr(canon, target, boom)
             for sink, build in builds.items():
