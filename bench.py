@@ -6,10 +6,11 @@ triples/sec) plus representative operators from each family (agg, window
 islands, cosine top-k, minhash LSH, recall@k).
 
 Min-of-k protocol (VERDICT r5 task 6): the default invocation runs
-``--samples 3`` FRESH-PROCESS samples (fresh JVM each — the first sample of
-a fresh JVM is JIT-inflated 15-40%, and this shared host's neighbor load
-varies identical runs 2-4x), each lightly loadavg-gated, and emits ONE
-pooled JSON line whose ``queries`` are per-query minima; every raw sample
+``--samples 3`` FRESH-PROCESS samples (fresh JVM each — a fresh local JVM
+runs C1 only (``session.get_spark``) and compiles for 4-5 s during the
+400k-file ``kg_pipeline``, 44-52 s with C2 on, and this shared host's
+neighbor load varies identical runs 2-4x), each lightly loadavg-gated, and
+emits ONE pooled JSON line whose ``queries`` are per-query minima; every raw sample
 rides along in ``samples`` with its window's loadavg, so round-over-round
 comparison needs no weather adjudication.  ``--as-sample`` is the internal
 single-run mode (the pre-r6 behavior).

@@ -38,13 +38,14 @@ class ManifestStore:
             return self.spark.read.schema(MANIFEST_SCHEMA).parquet(self.path)
         return local_frame(self.spark, [], MANIFEST_SCHEMA)
 
-    def committed(self, stage: str) -> DataFrame:
-        return self.read().filter(F.col("stage") == stage).select("partition_key").distinct()
-
     def filter_uncommitted(self, df: DataFrame, stage: str, key_col: str) -> DataFrame:
         """Anti-join the stage input on already-committed partition keys —
-        the ``cache_executed_step`` analog.  Broadcast the (small) manifest."""
-        committed = self.committed(stage).withColumnRenamed("partition_key", key_col)
+        the ``cache_executed_step`` analog.  Broadcast the (small) manifest.
+        A key committed twice needs no dedup (and no shuffle job) first: a
+        duplicate on the right side of an anti-join cannot change its result."""
+        committed = self.read().filter(F.col("stage") == stage).select(
+            F.col("partition_key").alias(key_col)
+        )
         return df.join(F.broadcast(committed), key_col, "left_anti")
 
     def commit(self, stage: str, keys: list[str], run_id: str | None = None) -> None:

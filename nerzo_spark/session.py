@@ -20,6 +20,8 @@ Scale posture (the point, even though tests run on ``local[N]``):
   "Cache lifetime").
 - partition discovery lists on the driver in local mode, where a listing
   job's tasks would run in the same JVM.
+- a local driver JVM runs the C1 compiler only and takes half the host's
+  memory as heap (ARCHITECTURE.md, "JVM-side fixed costs").
 - one Python worker pool per session: driver-built frames go through
   :func:`local_frame`, which never starts a Python worker, so the Arrow-UDF
   pool :func:`warm_python_workers` starts is the only one.
@@ -95,6 +97,15 @@ def local_frame(
     return spark.createDataFrame(table, struct)
 
 
+def default_driver_memory() -> str:
+    """Half of the host's memory (``MemTotal``), in whole GiB, at least 1g:
+    the local driver JVM is the whole engine, and the other half is left to
+    the Python workers and the OS page cache."""
+    with open("/proc/meminfo") as fh:
+        kib = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    return f"{max(kib // 2 // 2**20, 1)}g"
+
+
 def get_spark(
     app_name: str = "nerzo-spark",
     master: str | None = None,
@@ -160,9 +171,9 @@ def get_spark(
         # in the class name one plan yields a different source from run to
         # run whenever two stages race (j4_token_overlap_score does).
         .config("spark.sql.codegen.useIdInClassName", "false")
-        # local mode = single JVM: the default 1g heap GC-thrashes with 32
+        # local mode = single JVM: the default 1g heap GC-thrashes with
         # concurrent task threads; only applies if the JVM isn't started yet
-        .config("spark.driver.memory", os.environ.get("NERZO_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", default_driver_memory())
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
@@ -175,6 +186,19 @@ def get_spark(
         builder = builder.config(
             "spark.sql.sources.parallelPartitionDiscovery.threshold", str(2**31 - 1)
         )
+        # C1 only: a local JVM lives for one benchmark run, test session or
+        # job, too short for C2's optimizing compiles to pay back.  Measured
+        # on 4 cores (CompilationMXBean, per timed perfbench op): the
+        # kg_build_resume op compiled for 13-16 s inside ~24 CPU s, 2.3 s
+        # with C1 only, and its CPU fell 44%; catalog_mix 17-18 s -> 2 s.
+        # The trade: at 400k files the extraction's JVM side runs C1 code,
+        # so bench.py's kg_pipeline is ~9% slower (ARCHITECTURE.md,
+        # "JVM-side fixed costs").  defaultJavaOptions, not
+        # extraJavaOptions: a caller's extraJavaOptions (perfbench sets
+        # java.io.tmpdir there) replaces that whole key, and the launcher
+        # puts defaultJavaOptions before it.  Like spark.driver.memory, it
+        # applies only when this call launches the JVM.
+        builder = builder.config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

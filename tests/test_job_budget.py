@@ -36,11 +36,11 @@ CEILINGS = {
     "build": 6,
     f"build/{CANON}": 2,
     "triples_count": 9,
-    "resume": 26,
+    "resume": 25,
     f"resume/{CANON}": 2,
     AFTER_TRIPLES: 0,
 }
-OP_CEILING = 45
+OP_CEILING = 44
 
 
 @pytest.fixture(scope="module")

@@ -49,6 +49,36 @@ def test_kill_and_resume_produces_identical_triples(spark, fixture_small, tmp_pa
     assert oneshot.exceptAll(resumed).count() == 0
 
 
+def test_resume_skips_a_key_committed_twice(spark, fixture_small, tmp_path):
+    """The manifest is append-only, so a key can be committed twice (a
+    commit retried after a crash).  Such a repo is skipped, and each other
+    repo is extracted and committed exactly once."""
+    import glob
+
+    from nerzo_spark.pipeline.incremental import run_incremental
+
+    fx = fixture_small
+    corpus = corpus_df(spark, fx)
+    repos = sorted({c["repo"] for c in fx.corpus})
+    twice, rest = repos[0], repos[1:]
+    out = str(tmp_path / "kg")
+    run_incremental(spark, corpus.filter(F.col("repo") == twice), fx.anchors, out)
+    store = ManifestStore(spark, out)
+    store.commit("extract", [twice])
+    keys = store.read().filter(F.col("partition_key") == twice).count()
+    assert keys == 2
+    twice_files = set(glob.glob(out + "/mentions/*/*.parquet"))
+
+    stats = run_incremental(spark, corpus, fx.anchors, out, run_id="resume")
+    assert stats["repos_extracted"] == len(rest)
+    resumed = store.read().filter(F.col("run_id") == "resume").collect()
+    assert sorted(r["partition_key"] for r in resumed) == rest
+    # the skipped repo's partition was not rewritten
+    assert twice_files <= set(glob.glob(out + "/mentions/*/*.parquet"))
+    mentions = spark.read.parquet(out + "/mentions")
+    assert mentions.count() == mentions.dropDuplicates(["mention_id"]).count()
+
+
 def test_upsert_idempotent(spark, tmp_path):
     path = str(tmp_path / "tbl")
     df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
