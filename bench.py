@@ -19,6 +19,7 @@ single-run mode (the pre-r6 behavior).
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import os
 import subprocess
@@ -128,6 +129,9 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     warm_python_workers(spark)  # steady-state timing, not worker cold start
 
+    import nerzo_spark.fixtures.corpus as fixture_corpus
+    import nerzo_spark.fixtures.distributed as fixture_distributed
+    import nerzo_spark.fixtures.labels as fixture_labels
     from nerzo_spark.fixtures.corpus import anchor_rows_for
     from nerzo_spark.fixtures.distributed import corpus_df_distributed
     from nerzo_spark.pipeline.kg import run_kg_pipeline
@@ -156,7 +160,13 @@ def main() -> None:
     # Corpus generated DISTRIBUTED (no driver bottleneck) and materialized
     # via localCheckpoint so generation is excluded from pipeline timing.
     # Anchors are dimension-sized: a small driver-side generate() suffices.
-    corpus_path = f"/dev/shm/nerzo_corpus_{args.kg_files}"
+    # The cached corpus is keyed by the generator's source as well as its
+    # size, so an edited generator is never benchmarked on a stale corpus.
+    gen_src = hashlib.sha256()
+    for mod in (fixture_corpus, fixture_distributed, fixture_labels):
+        with open(mod.__file__, "rb") as f:
+            gen_src.update(f.read())
+    corpus_path = f"/dev/shm/nerzo_corpus_{args.kg_files}_{gen_src.hexdigest()[:16]}"
     if not os.path.exists(corpus_path):
         corpus_df_distributed(spark, args.kg_files, partitions=64).write.mode(
             "overwrite"

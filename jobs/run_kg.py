@@ -2,7 +2,9 @@
 ``spark-submit --py-files nerzo_spark.zip jobs/run_kg.py ...``).
 
 Reads a corpus parquet (or generates the deterministic fixture corpus when
---gen-files is given), runs the incremental pipeline (extraction gated by the
+--gen-files is given), refuses a corpus parquet that holds a (repo, path,
+commit) file on more than one row (exit 1, the first keys on stderr), runs
+the incremental pipeline (extraction gated by the
 committed-partition manifest; canonicalization + triples recomputed globally
 — see nerzo_spark/pipeline/incremental.py), prints a one-line JSON summary.
 
@@ -38,6 +40,7 @@ def main(argv: list[str] | None = None) -> int:
     from nerzo_spark.fixtures.corpus import anchor_rows_for
     from nerzo_spark.fixtures.distributed import corpus_df_distributed
     from nerzo_spark.pipeline.incremental import run_incremental
+    from nerzo_spark.pipeline.kg import corpus_duplicate_files
     from nerzo_spark.session import get_spark
 
     spark = get_spark("nerzo-kg", master=args.master,
@@ -61,6 +64,16 @@ def main(argv: list[str] | None = None) -> int:
         else:
             ap.error("--corpus requires --anchors PATH or --anchor-files N "
                      "(anchor fixture must match the corpus)")
+        # a file on two rows would be extracted twice, doubling its
+        # mentions and links_to triples: refuse the corpus instead
+        dups = (corpus_duplicate_files(corpus)
+                .orderBy("repo", "path", "commit").limit(10).collect())
+        if dups:
+            keys = "\n".join(f"  {r['repo']} {r['path']} {r['commit']} ({r['n_rows']} rows)"
+                             for r in dups)
+            print(f"corpus has files on more than one row (repo path commit):\n{keys}",
+                  file=sys.stderr)
+            return 1
 
     stats = run_incremental(
         spark, corpus, anchors, args.output, repartition_to=args.partitions

@@ -8,10 +8,6 @@ across engines.  (Spark's ``hash`` is Murmur3 with Spark-specific seeding —
 not portable.)
 
 Reference parity:
-- content-hash ids: ``fnd_`` + sha1(field concat) —
-  /root/reference/clearml_pipelines/fewnerd_pipeline/step_index_to_database.py:36-39
-- text_id = sha1(full_text) —
-  /root/reference/clearml_pipelines/fewnerd_for_passage_pipeline/process_to_dataset.py:94
 - seeded random scoring (seed 12345678910) — /root/reference/queries.py:96-103.
   Spark's ``rand(seed)`` is partitioning-dependent, so seeded sampling here is
   derived from ``md5(key || seed)`` instead: stable under any repartitioning
@@ -63,18 +59,6 @@ def seeded_unit_duckdb(expr: str, seed: int = DEFAULT_SEED) -> str:
     return f"{md5_i64_duckdb(keyed)} / 1152921504606846976.0"
 
 
-def fnd_id(*cols: Column) -> Column:
-    """``fnd_`` + sha1 over concatenated fields — the reference's
-    content-hash upsert id (step_index_to_database.py:36-39)."""
-    return F.concat(F.lit("fnd_"), F.sha1(F.concat_ws("", *cols)))
-
-
 def ent_id(fine_type: Column, canonical: Column) -> Column:
     """Canonical entity id: deterministic from (fine_type, canonical surface)."""
     return F.concat(F.lit("ent_"), F.sha1(F.concat_ws("|", fine_type, canonical)))
-
-
-def content_sha256(col: Column | str) -> Column:
-    """Per-row invariant column (BASELINE.json input_hint)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.sha2(c, 256)

@@ -1,17 +1,13 @@
 """String/scalar operator family (SURVEY.md §2.7 F1-F10).
 
-Ports the reference's *semantics* — exact boundary-character lists,
+Ports the reference's *semantics* — exact boundary-character classes,
 normalization chains, prompt templates — as Spark Column expressions
 (JVM-side, whole-stage-codegen friendly; no Python in the hot path).
 
 Reference citations:
 - boundary chars before/after a word: /root/reference/llm_interface.py:16-21 (F1)
-- no-space-before words:  /root/reference/clearml_pipelines/fewnerd_pipeline/
-  step_process_to_document.py:42-43 (F3)
-- tag splitter ("person-athlete" -> coarse/fine, "O" -> O/O):
-  step_process_to_document.py:52-55 (F4)
-- prompt templates: /root/reference/entity_classifier.py:1-9 (F5)
-- answer parsing chain: /root/reference/pocs/poc_fewnerd_extraction.py:11-33 (F6)
+- prompt template: /root/reference/entity_classifier.py:1-5 (F5)
+- answer-item parsing chain: /root/reference/pocs/poc_fewnerd_extraction.py:14-27 (F6)
 - normalization: poc_fewnerd_extraction.py:15-27, entity_classifier.py:3 (F7)
 """
 
@@ -19,16 +15,6 @@ from __future__ import annotations
 
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-# F1 — exact char lists from llm_interface.py:16-21
-CHARS_AFTER_WORD = [" ", ".", ",", "!", "?", ":", ";", ")", "]", "}", "'", '"']
-CHARS_BEFORE_WORD = [" ", "(", "[", "{", "'", '"']
-
-# F3 — exact list from step_process_to_document.py:42-43
-NO_SPACE_WORDS = [
-    "(", ")", "[", "]", "{", "}", ":", ";", ",", ".", "!", "?", "'", '"', "`",
-    "'s", "''", "%",
-]
 
 _BEFORE_CLASS = r"""[ (\[{'"]"""
 _AFTER_CLASS = r"""[ .,!?:;)\]}'"]"""
@@ -38,26 +24,6 @@ def word_boundary_regex(word_pattern: str) -> str:
     """F1 as a regex: `word` must be preceded by a boundary char (or SOS) and
     followed by one (or EOS) — the exact predicate of llm_interface.py:13-39."""
     return f"(?:^|(?<={_BEFORE_CLASS}))(?:{word_pattern})(?:$|(?={_AFTER_CLASS}))"
-
-
-def space_when_necessary(prev_word: Column, word: Column) -> Column:
-    """F3 — '' before punctuation-ish tokens, else ' '
-    (step_process_to_document.py:39-49)."""
-    no_space = (
-        prev_word.isNull()
-        | (prev_word == F.lit(""))
-        | (word == F.lit(""))
-        | word.isin(NO_SPACE_WORDS)
-    )
-    return F.when(no_space, F.lit("")).otherwise(F.lit(" "))
-
-
-def split_tag(tag: Column) -> tuple[Column, Column]:
-    """F4 — 'coarse-fine' -> (coarse, fine); 'O' -> ('O','O')
-    (step_process_to_document.py:52-55)."""
-    coarse = F.when(tag == "O", F.lit("O")).otherwise(F.split(tag, "-").getItem(0))
-    fine = F.when(tag == "O", F.lit("O")).otherwise(F.split(tag, "-").getItem(1))
-    return coarse, fine
 
 
 def classification_prompt(entity_type: Column, entity_text: Column, sentence: Column) -> Column:
@@ -71,17 +37,6 @@ def classification_prompt(entity_type: Column, entity_text: Column, sentence: Co
     )
 
 
-def extraction_prompt(entity_type: Column, sentence: Column) -> Column:
-    """F5 — entity_classifier.py:7-9."""
-    etype = F.regexp_replace(entity_type, "_", " ")
-    return F.format_string(
-        "In the following sentence, write in a list the words or word phrases "
-        "that represent a %s: %s\n if there are no words or word phrases that "
-        "represent a %s please write 'none'.",
-        etype, sentence, etype,
-    )
-
-
 def parse_answer_item(col: Column) -> Column:
     """F6 — the exact replace/regex chain of poc_fewnerd_extraction.py:14-27."""
     x = F.regexp_replace(col, r"- ", "")
@@ -91,13 +46,6 @@ def parse_answer_item(col: Column) -> Column:
     x = F.regexp_replace(x, r"  ", " ")
     x = F.regexp_replace(x, r"^\d+\.", "")
     return F.trim(x)
-
-
-def parse_extracted_entities(response: Column) -> Column:
-    """F6 — 'none' -> []; else split lines and parse each item
-    (poc_fewnerd_extraction.py:30-33)."""
-    items = F.transform(F.split(response, "\n"), parse_answer_item)
-    return F.when(response == "none", F.array().cast("array<string>")).otherwise(items)
 
 
 def normalize_surface(col: Column) -> Column:
@@ -137,16 +85,6 @@ def squash(surface: str) -> str:
     import re
 
     return re.sub(r"[_.\- ]", "", norm_key(surface))
-
-
-# DuckDB twins for the oracle side -----------------------------------------
-
-def normalize_surface_duckdb(expr: str) -> str:
-    x = f"lower({expr})"
-    x = f"regexp_replace({x}, '[`''\"]', '', 'g')"
-    x = f"regexp_replace({x}, '^[^a-z0-9]+|[^a-z0-9]+$', '', 'g')"
-    x = f"regexp_replace({x}, '\\s+', ' ', 'g')"
-    return x
 
 
 # F2 — offset -> token-index mapping (SURVEY.md §2.7 F2) --------------------

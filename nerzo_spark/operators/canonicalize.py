@@ -127,22 +127,6 @@ def resolve_entities(surfaces: DataFrame, overrides: DataFrame) -> DataFrame:
     )
 
 
-def canonicalize_surfaces(
-    typed_surfaces: DataFrame,
-    max_iter: int = 12,
-    loop_partitions: int = 32,
-    driver_limit: int = 500_000,
-) -> DataFrame:
-    """typed_surfaces(fine_type, surface) -> (fine_type, surface, canonical,
-    entity_id).  Deterministic: canonical = lexicographic min k1 in cluster."""
-    distinct_surfaces = typed_surfaces.select("fine_type", "surface").distinct()
-    overrides = canonical_overrides(
-        typed_surfaces, max_iter=max_iter, loop_partitions=loop_partitions,
-        driver_limit=driver_limit,
-    )
-    return resolve_entities(distinct_surfaces, overrides)
-
-
 def canonical_overrides(
     typed_surfaces: DataFrame,
     max_iter: int = 12,

@@ -22,7 +22,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, DoubleType
 from pyspark.sql.functions import pandas_udf
@@ -88,14 +88,3 @@ def pair_detector_prob(
     ca = F.col(a_col) if isinstance(a_col, str) else a_col
     cb = F.col(b_col) if isinstance(b_col, str) else b_col
     return _prob(ca, cb)
-
-
-def add_projection_column(
-    df: DataFrame, in_col: str, out_col: str, d_out: int = 4
-) -> DataFrame:
-    """S7-friendly wrapper: append the projected vector as a NEW column
-    (schema evolution: old readers keep working, mergeSchema readers see
-    the new field — tests/test_schema_evolution.py)."""
-    d_in = len(df.select(in_col).first()[0])
-    w, b = det_weights(d_in, d_out)
-    return df.withColumn(out_col, project_head(in_col, w, b))

@@ -41,8 +41,6 @@ from nerzo_spark.fixtures.labels import label_rows
 from nerzo_spark.operators.extract_link import extract_and_link
 from nerzo_spark.session import cached, local_frame
 
-TRIPLE_SCHEMA = "subj string, pred string, obj string, repo string, path string, commit string"
-
 
 @dataclass
 class KGResult:
@@ -111,10 +109,10 @@ def corpus_duplicate_files(corpus: DataFrame) -> DataFrame:
     corpus row is extracted twice, so its mentions and ``links_to`` triples
     are doubled.  FILE-scale work (one partial-agg groupBy over the corpus
     table, collapsing map-side to per-partition distinct keys): run it once
-    when ingesting a corpus of unknown provenance, not inside the timed
-    pipeline — the fixture generator and the incremental path's
-    dynamic-partition overwrite guarantee uniqueness by construction, so the
-    hot path never pays for it."""
+    when ingesting a corpus of unknown provenance (``jobs/run_kg.py
+    --corpus`` does), not inside the timed pipeline — the fixture generator
+    and the incremental path's dynamic-partition overwrite guarantee
+    uniqueness by construction, so the hot path never pays for it."""
     return (
         corpus.groupBy("repo", "path", "commit")
         .agg(F.count(F.lit(1)).alias("n_rows"))

@@ -248,8 +248,8 @@ def embedding_neardup_pairs(e, threshold: float = 0.4, label_cap: int = NEARDUP_
        FROM events GROUP BY 1, 2""",
 )
 def stream_windowed_counts_batch(spark, sf_dir):
-    """Batch twin of streaming/windowed.py::windowed_counts (unified
-    semantics): tumbling 1h windows, epoch-aligned like date_trunc."""
+    """Event counts per tumbling 1h window and event type, as a batch
+    query over the events table (windows epoch-aligned like date_trunc)."""
     e = T(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")

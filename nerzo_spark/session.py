@@ -145,9 +145,7 @@ def get_spark(
         # 64k-row Arrow batches: at 8192 the per-batch handoff (socket
         # roundtrip + pandas assembly) cost ~20% of the extraction stage at
         # 16 cores (measured 24.9s -> 21.0s at 800k files); mention/doc rows
-        # are small so 64k rows stay ~10-30 MB per batch in flight.  Byte-
-        # bounded payloads (multimodal) size partitions separately via
-        # repartition_for_payloads.
+        # are small so 64k rows stay ~10-30 MB per batch in flight.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
         # default (10MB) broadcast threshold: bigger thresholds make AQE
         # convert iterative-loop joins to broadcasts, paying a driver

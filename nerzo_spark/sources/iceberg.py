@@ -14,15 +14,8 @@ upgrades the whole pipeline without touching call sites:
 
 | adapter call            | Iceberg form                                   |
 |-------------------------|------------------------------------------------|
-| ensure_table            | CREATE TABLE IF NOT EXISTS ... USING iceberg
-|                         |   PARTITIONED BY (pred / bucket(repo, N))      |
 | write_overwrite_dynamic | INSERT OVERWRITE (snapshot-isolated dynamic
 |                         |   partition overwrite)                         |
-| upsert                  | MERGE INTO t USING s ON t.key = s.key
-|                         |   WHEN MATCHED UPDATE * WHEN NOT MATCHED INSERT*|
-| add_column              | ALTER TABLE ... ADD COLUMN (metadata-only, S7) |
-| read                    | spark.table('nerzo.db.t') (snapshot read;
-|                         |   time travel via VERSION AS OF)               |
 """
 
 from __future__ import annotations
@@ -42,22 +35,6 @@ def iceberg_available(spark: SparkSession, catalog: str = "nerzo") -> bool:
         return False
 
 
-def ensure_table(
-    spark: SparkSession, name: str, schema: str, partition_by: str | None,
-    path: str, catalog: str = "nerzo",
-) -> None:
-    """CREATE TABLE IF NOT EXISTS (Iceberg) / create-if-absent parquet dir."""
-    if iceberg_available(spark, catalog):
-        part = f" PARTITIONED BY ({partition_by})" if partition_by else ""
-        spark.sql(
-            f"CREATE TABLE IF NOT EXISTS {catalog}.{name} ({schema}) USING iceberg{part}"
-        )
-        return
-    from nerzo_spark.sources.io import ensure_table as _parquet_ensure
-
-    _parquet_ensure(spark, path, schema)
-
-
 def write_overwrite_dynamic(
     df: DataFrame, name: str, partition_col: str, path: str, catalog: str = "nerzo"
 ) -> None:
@@ -73,34 +50,3 @@ def write_overwrite_dynamic(
         .partitionBy(partition_col)
         .parquet(path)
     )
-
-
-def upsert(
-    spark: SparkSession, incoming: DataFrame, name: str, key: str, path: str,
-    catalog: str = "nerzo",
-) -> None:
-    """MERGE INTO (Iceberg) / anti-join + rename-swap parquet emulation (S8)."""
-    if iceberg_available(spark, catalog):
-        incoming.createOrReplaceTempView("_nerzo_upsert_src")
-        spark.sql(
-            f"MERGE INTO {catalog}.{name} t USING _nerzo_upsert_src s "
-            f"ON t.{key} = s.{key} "
-            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
-        )
-        return
-    from nerzo_spark.sources.io import upsert_by_key
-
-    upsert_by_key(spark, incoming, path, key)
-
-
-def add_column(
-    spark: SparkSession, name: str, column: str, col_type: str, path: str,
-    catalog: str = "nerzo",
-) -> None:
-    """S7 schema evolution: metadata-only ADD COLUMN (Iceberg); the parquet
-    emulation relies on mergeSchema reads (test_scale_guards S7 test)."""
-    if iceberg_available(spark, catalog):
-        spark.sql(f"ALTER TABLE {catalog}.{name} ADD COLUMN {column} {col_type}")
-        return
-    # parquet emulation: nothing to do — new files carry the column, readers
-    # use .option('mergeSchema', 'true')

@@ -10,7 +10,7 @@ import pytest
 
 import nerzo_spark.operators.canonicalize as canon
 from nerzo_spark.functions.text import norm_key, squash
-from nerzo_spark.operators.canonicalize import canonicalize_surfaces
+from nerzo_spark.operators.canonicalize import canonical_overrides, resolve_entities
 
 
 def _surfaces_df(spark, fixture_small):
@@ -18,6 +18,11 @@ def _surfaces_df(spark, fixture_small):
         sorted({(m["fine_type"], m["surface"]) for m in fixture_small.mentions}),
         "fine_type string, surface string",
     )
+
+
+def _canonicalize(surfaces, **kwargs):
+    """(fine_type, surface, canonical, entity_id) for distinct surfaces."""
+    return resolve_entities(surfaces, canonical_overrides(surfaces, **kwargs))
 
 
 def _hot_edge_rows(fixture_small) -> int:
@@ -40,8 +45,8 @@ def _assert_same_clusters(a, b):
 
 def test_driver_and_distributed_paths_agree(spark, fixture_small):
     surfaces = _surfaces_df(spark, fixture_small)
-    a = canonicalize_surfaces(surfaces)  # driver union-find
-    b = canonicalize_surfaces(surfaces, driver_limit=0)  # distributed loop
+    a = _canonicalize(surfaces)  # driver union-find
+    b = _canonicalize(surfaces, driver_limit=0)  # distributed loop
     _assert_same_clusters(a, b)
 
 
@@ -57,7 +62,7 @@ def test_driver_limit_boundary(spark, fixture_small, monkeypatch, slack, on_driv
         canon, "_driver_union_find", lambda *a, **k: calls.append(1) or union_find(*a, **k)
     )
     surfaces = _surfaces_df(spark, fixture_small)
-    got = canonicalize_surfaces(surfaces, driver_limit=hot + slack)
+    got = _canonicalize(surfaces, driver_limit=hot + slack)
     assert bool(calls) == on_driver
     monkeypatch.undo()
-    _assert_same_clusters(canonicalize_surfaces(surfaces), got)
+    _assert_same_clusters(_canonicalize(surfaces), got)

@@ -21,27 +21,35 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 GOLD = os.path.join(REPO, "nerzo_spark", "fixtures", "gold")
 
 
-def test_run_kg_cli_end_to_end(tmp_path, spark, fixture_small):
-    from nerzo_spark.fixtures.spark_io import anchors_df, corpus_df
+def _run_kg_cli(spark, fixture_small, tmp_path, corpus):
+    """Write ``corpus`` and the fixture's anchors as parquet, then run
+    ``jobs/run_kg.py`` on them in a fresh process."""
+    from nerzo_spark.fixtures.spark_io import anchors_df
 
     corpus_path = str(tmp_path / "corpus")
     anchors_path = str(tmp_path / "anchors")
-    out = str(tmp_path / "out")
-    corpus_df(spark, fixture_small).write.parquet(corpus_path)
+    corpus.write.parquet(corpus_path)
     anchors_df(spark, fixture_small).write.parquet(anchors_path)
 
     # plain `python jobs/run_kg.py` puts jobs/ (not the repo root) on
     # sys.path; spark-submit --py-files provides the package instead —
     # PYTHONPATH here stands in for the zip
     env = dict(os.environ, SPARK_GRAFT_MASTER="local[4]", PYTHONPATH=REPO)
-    res = subprocess.run(
+    return subprocess.run(
         [
             sys.executable, os.path.join(REPO, "jobs", "run_kg.py"),
             "--corpus", corpus_path, "--anchors", anchors_path,
-            "--output", out, "--partitions", "8",
+            "--output", str(tmp_path / "out"), "--partitions", "8",
         ],
         capture_output=True, text=True, cwd=REPO, env=env, timeout=600,
     )
+
+
+def test_run_kg_cli_end_to_end(tmp_path, spark, fixture_small):
+    from nerzo_spark.fixtures.spark_io import corpus_df
+
+    out = str(tmp_path / "out")
+    res = _run_kg_cli(spark, fixture_small, tmp_path, corpus_df(spark, fixture_small))
     assert res.returncode == 0, res.stderr[-3000:]
     stats = json.loads(
         [ln for ln in res.stdout.splitlines() if ln.startswith("{")][-1]
@@ -70,3 +78,21 @@ def test_run_kg_cli_end_to_end(tmp_path, spark, fixture_small):
     by_stage = {r[0]: r for r in lin if r[0] != "extract"}
     assert by_stage["triples"][1] == len(gold)
     assert all(r[2] > 0 for r in lin)
+
+
+def test_run_kg_cli_refuses_duplicate_corpus_rows(tmp_path, spark, fixture_small):
+    """A file on two corpus rows would be extracted twice, doubling its
+    mentions and links_to triples: the job exits non-zero, names the
+    file, and writes no triples."""
+    from nerzo_spark.fixtures.spark_io import corpus_df
+
+    corpus = corpus_df(spark, fixture_small)
+    first = min(fixture_small.corpus, key=lambda c: (c["repo"], c["path"], c["commit"]))
+    dup = corpus.filter(
+        (corpus.repo == first["repo"]) & (corpus.path == first["path"])
+        & (corpus.commit == first["commit"])
+    )
+    res = _run_kg_cli(spark, fixture_small, tmp_path, corpus.unionByName(dup))
+    assert res.returncode != 0
+    assert f"{first['repo']} {first['path']} {first['commit']} (2 rows)" in res.stderr
+    assert not os.path.exists(tmp_path / "out" / "triples")

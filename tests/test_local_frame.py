@@ -192,16 +192,3 @@ def test_zero_row_knn_keeps_declared_schema(spark):
         StructField("neighbor_label", IntegerType()),
     ])
     assert got.count() == 0
-
-
-def test_ensure_table_creates_readable_empty_table(spark, tmp_path):
-    from nerzo_spark.sources.io import ensure_table
-
-    path = str(tmp_path / "t")
-    got = ensure_table(spark, path, "k long, v string")
-    assert os.path.isdir(path)
-    assert got.schema == StructType([
-        StructField("k", LongType()), StructField("v", StringType()),
-    ])
-    assert got.count() == 0
-    assert spark.read.parquet(path).count() == 0

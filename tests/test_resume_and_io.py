@@ -1,4 +1,5 @@
-"""Checkpoint/resume (manifest anti-join) + upsert idempotence + TSV round-trip."""
+"""Checkpoint/resume (manifest anti-join), the resume's partition-overwrite
+sink, and the cache lifetimes of both KG sinks."""
 
 from __future__ import annotations
 
@@ -8,7 +9,6 @@ from pyspark.sql import functions as F
 from nerzo_spark.fixtures.spark_io import anchors_df, corpus_df
 from nerzo_spark.pipeline.kg import run_kg_pipeline
 from nerzo_spark.pipeline.manifest import ManifestStore
-from nerzo_spark.sources.io import read_tsv, upsert_by_key, write_tsv
 
 
 def test_kill_and_resume_produces_identical_triples(spark, fixture_small, tmp_path):
@@ -79,31 +79,6 @@ def test_resume_skips_a_key_committed_twice(spark, fixture_small, tmp_path):
     assert mentions.count() == mentions.dropDuplicates(["mention_id"]).count()
 
 
-def test_upsert_idempotent(spark, tmp_path):
-    path = str(tmp_path / "tbl")
-    df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    df2 = spark.createDataFrame([(2, "B"), (3, "c")], "k long, v string")
-    upsert_by_key(spark, df1, path, "k")
-    upsert_by_key(spark, df2, path, "k")
-    got = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert got == {1: "a", 2: "B", 3: "c"}
-    # re-running the same upsert converges (idempotence, S8)
-    upsert_by_key(spark, df2, path, "k")
-    got2 = {r["k"]: r["v"] for r in spark.read.parquet(path).collect()}
-    assert got2 == got
-
-
-def test_tsv_roundtrip(spark, tmp_path):
-    p = str(tmp_path / "tsv")
-    df = spark.createDataFrame(
-        [("person", "Alice", "yes", "Alice went home")],
-        "entity_type string, entity_text string, ground_truth_answer string, content string",
-    )
-    write_tsv(df, p)
-    back = read_tsv(spark, p)
-    assert [r.asDict() for r in back.collect()] == [r.asDict() for r in df.collect()]
-
-
 def test_torn_crash_no_duplicate_mentions(spark, fixture_small, tmp_path):
     """Exactly-once at EVERY kill point: simulate a crash BETWEEN the
     mentions partition write and the manifest commit (the at-least-once gap
@@ -145,89 +120,25 @@ def test_torn_crash_no_duplicate_mentions(spark, fixture_small, tmp_path):
     assert t_a.exceptAll(t_b).count() == 0
 
 
-def test_upsert_no_tmp_leak(spark, tmp_path):
-    import os
-
-    path = str(tmp_path / "tbl2")
-    df = spark.createDataFrame([(1, "a")], "k long, v string")
-    upsert_by_key(spark, df, path, "k")
-    upsert_by_key(spark, df, path, "k")
-    assert not os.path.exists(path + ".tmp")
-    assert not os.path.exists(path + ".old")
-
-
 def test_iceberg_adapter_fallback(spark, tmp_path):
-    """No Iceberg runtime in this container: the adapter must detect that
-    and degrade to the parquet emulation with identical semantics."""
+    """No Iceberg runtime in this session: the adapter must detect that
+    and degrade to a parquet dynamic partition overwrite."""
     from nerzo_spark.sources import iceberg as ice
 
     assert ice.iceberg_available(spark) is False
-    p = str(tmp_path / "ice_tbl")
-    ice.ensure_table(spark, "db.t", "k long, v string", None, p)
-    assert spark.read.parquet(p).count() == 0
     df1 = spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string")
-    df2 = spark.createDataFrame([(2, "B")], "k long, v string")
-    ice.upsert(spark, df1, "db.t", "k", p)
-    ice.upsert(spark, df2, "db.t", "k", p)
-    got = {r["k"]: r["v"] for r in spark.read.parquet(p).collect()}
-    assert got == {1: "a", 2: "B"}
     pp = str(tmp_path / "ice_part")
     ice.write_overwrite_dynamic(df1.withColumn("part", df1.k % 2), "db.p", "part", pp)
     assert spark.read.parquet(pp).count() == 2
 
 
-def test_upsert_recovers_torn_swap(spark, tmp_path):
-    """Crash between rename(path -> .old) and rename(.tmp -> path) leaves no
-    live dir; the next upsert must restore .old (never rebuild from incoming
-    alone and then delete the only surviving copy of prior data)."""
-    import os
-
-    path = str(tmp_path / "tbl3")
-    upsert_by_key(spark, spark.createDataFrame([(1, "a"), (2, "b")], "k long, v string"), path, "k")
-    # simulate the torn state
-    os.rename(path, path + ".old")
-    out = upsert_by_key(spark, spark.createDataFrame([(3, "c")], "k long, v string"), path, "k")
-    got = {(r["k"], r["v"]) for r in out.collect()}
-    assert got == {(1, "a"), (2, "b"), (3, "c")}
-    assert not os.path.exists(path + ".old") and not os.path.exists(path + ".tmp")
-
-
-def test_upsert_clears_stale_old_and_tmp(spark, tmp_path):
-    """A stale .old next to a live table (crash after the final rename) and
-    a stale .tmp must both be cleared, not crash the swap or leak."""
-    import os
-
-    path = str(tmp_path / "tbl4")
-    df = spark.createDataFrame([(1, "a")], "k long, v string")
-    upsert_by_key(spark, df, path, "k")
-    os.makedirs(path + ".old/x")  # non-empty stale .old
-    os.makedirs(path + ".tmp")
-    out = upsert_by_key(spark, spark.createDataFrame([(2, "b")], "k long, v string"), path, "k")
-    assert {r["k"] for r in out.collect()} == {1, 2}
-    assert not os.path.exists(path + ".old") and not os.path.exists(path + ".tmp")
-
-
 def test_iceberg_production_statements(spark, monkeypatch, tmp_path):
-    """The Iceberg branches are dead code in this sandbox (no runtime jars);
-    lock the EXACT production statements they would issue by mocking
-    iceberg_available and capturing spark.sql / writeTo."""
+    """The Iceberg branch does not run without the runtime jars; lock the
+    EXACT production call it would make by mocking iceberg_available and
+    capturing the writeTo chain."""
     from nerzo_spark.sources import iceberg as ice
 
     monkeypatch.setattr(ice, "iceberg_available", lambda *a, **k: True)
-    issued = []
-    monkeypatch.setattr(spark, "sql", lambda q, *a, **k: issued.append(" ".join(q.split())))
-
-    ice.ensure_table(spark, "db.triples", "subj string, pred string", "pred", "/unused")
-    ice.add_column(spark, "db.docs", "emb", "array<float>", "/unused")
-    inc = spark.createDataFrame([(1, "a")], "k long, v string")
-    ice.upsert(spark, inc, "db.docs", "k", "/unused")
-    assert issued == [
-        "CREATE TABLE IF NOT EXISTS nerzo.db.triples (subj string, pred string) "
-        "USING iceberg PARTITIONED BY (pred)",
-        "ALTER TABLE nerzo.db.docs ADD COLUMN emb array<float>",
-        "MERGE INTO nerzo.db.docs t USING _nerzo_upsert_src s ON t.k = s.k "
-        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
-    ]
 
     class _W:  # records the writeTo(...).overwritePartitions() chain
         def __init__(self, rec):

@@ -200,30 +200,6 @@ def test_pair_detector_probability_range(spark):
     assert 0.0 < mn and mx < 1.0
 
 
-def test_schema_evolution_add_vector_column(spark, tmp_path):
-    """S7 — add-a-vector-column path (reference dataset_provider.py:172-173
-    index mapping update + index_to_elastic.py:14-46 reindex): old parquet
-    files lack the new column; a mergeSchema read sees it as NULL for old
-    rows while new rows carry the projection."""
-    from nerzo_spark.operators.projection import add_projection_column
-
-    path = str(tmp_path / "evo")
-    e = spark.read.parquet(f"{SF_SMALL}/embeddings.parquet")
-    v1 = e.filter(F.col("vec_id") % 2 == 0)
-    v1.write.parquet(path, mode="overwrite")
-
-    v2 = add_projection_column(e.filter(F.col("vec_id") % 2 == 1), "embedding", "proj")
-    v2.write.parquet(path, mode="append")
-
-    merged = spark.read.option("mergeSchema", "true").parquet(path)
-    assert "proj" in merged.columns
-    old_null = merged.filter((F.col("vec_id") % 2 == 0) & F.col("proj").isNotNull()).count()
-    new_filled = merged.filter((F.col("vec_id") % 2 == 1) & F.col("proj").isNull()).count()
-    assert old_null == 0 and new_filled == 0
-    # plain (non-mergeSchema) readers of the original files keep working
-    assert spark.read.parquet(path).count() == merged.count()
-
-
 # --- F2 token offsets -----------------------------------------------------------
 
 def test_token_offsets_substring_invariant(spark):

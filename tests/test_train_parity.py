@@ -8,15 +8,9 @@ import pytest
 
 from nerzo_spark.plans import catalog_train
 
-from tests.oracle_harness import compare, compare_tolerant, duck_con
+from tests.oracle_harness import TOLERANT, compare, compare_tolerant, duck_con
 
 SF_DIR = "/root/testdata/sf0.001"
-
-# U8's loss cells are float SUMS accumulated in different orders on the two
-# engines (e.g. sum(exp(cp))) — exact rounded equality flips when a value
-# lands within 1 ulp of a 6-dp rounding boundary (ADVICE r5), so it gets the
-# tolerant float compare; everything else stays hash-exact like the driver.
-_TOLERANT = {"u8_contrastive_losses"}
 
 
 @pytest.fixture(scope="module")
@@ -28,7 +22,7 @@ def con():
 def test_train_parity(spark, con, name):
     fn = catalog_train.queries()[name]
     sql = catalog_train.oracle_sql()[name]
-    cmp = compare_tolerant if name in _TOLERANT else compare
+    cmp = compare_tolerant if name in TOLERANT else compare
     ok, msg = cmp(fn(spark, SF_DIR), con, sql)
     assert ok, f"{name}: {msg}"
 
