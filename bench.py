@@ -22,6 +22,7 @@ import argparse
 import hashlib
 import json
 import os
+import shutil
 import subprocess
 import sys
 import time
@@ -34,6 +35,21 @@ def _wait_quiet(gate: float, timeout_s: float) -> float:
         if la < gate or time.time() - t0 > timeout_s:
             return la
         time.sleep(10)
+
+
+def _drop_stale_corpora(keep: str) -> list[str]:
+    """Remove the cached corpora beside ``keep`` (older keys, other sizes
+    and the unkeyed ``nerzo_corpus_<n>`` of older trees): each is a 100+ MB
+    parquet directory in ``/dev/shm`` that no run reads again.  A ``.tmp``
+    write in progress stays."""
+    base, name = os.path.split(keep)
+    stale = sorted(
+        os.path.join(base, n) for n in os.listdir(base)
+        if n.startswith("nerzo_corpus_") and n != name and not n.endswith(".tmp")
+    )
+    for path in stale:
+        shutil.rmtree(path, ignore_errors=True)
+    return stale
 
 
 def _pooled(args) -> None:
@@ -172,6 +188,7 @@ def main() -> None:
             "overwrite"
         ).parquet(corpus_path + ".tmp")
         os.rename(corpus_path + ".tmp", corpus_path)
+        _drop_stale_corpora(corpus_path)
     corpus = spark.read.parquet(corpus_path)
     # anchors are pinned per-type gold mentions of the SAME corpus (mention
     # ids depend on n_files); driver-side scan of the first 1000 files only

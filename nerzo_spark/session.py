@@ -25,6 +25,10 @@ Scale posture (the point, even though tests run on ``local[N]``):
 - one Python worker pool per session: driver-built frames go through
   :func:`local_frame`, which never starts a Python worker, so the Arrow-UDF
   pool :func:`warm_python_workers` starts is the only one.
+- in local mode that pool forks from :mod:`nerzo_spark.worker_daemon`,
+  which imports pyspark from the installed package, preloads the Arrow
+  worker's imports and freezes them out of the collector's reach
+  (ARCHITECTURE.md, "Python-side scale rules").
 """
 
 from __future__ import annotations
@@ -196,7 +200,25 @@ def get_spark(
         # java.io.tmpdir there) replaces that whole key, and the launcher
         # puts defaultJavaOptions before it.  Like spark.driver.memory, it
         # applies only when this call launches the JVM.
-        builder = builder.config("spark.driver.defaultJavaOptions", "-XX:TieredStopAtLevel=1")
+        # C1 alone reserves a 48 MB code cache, and a full cache disables
+        # the compiler for the rest of the JVM.  Measured peaks of the
+        # CodeCache pool: 75 MB at the end of Tier-1, 51 MB after
+        # jobs/verify_parity.py at sf0.001.  160 MB is about twice the
+        # larger and stays under 240 MB, where HotSpot segments the cache.
+        builder = builder.config(
+            "spark.driver.defaultJavaOptions",
+            "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=160m",
+        )
+        # Python workers fork from nerzo_spark.worker_daemon (pyspark from
+        # the installed package, the Arrow worker's imports preloaded and
+        # frozen).  The daemon starts before a spark-submit's --py-files
+        # reach the workers' path, so the package's own location (its
+        # parent directory, or the --py-files zip) goes on it here.
+        package_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        builder = (
+            builder.config("spark.python.daemon.module", "nerzo_spark.worker_daemon")
+            .config("spark.executorEnv.PYTHONPATH", package_root)
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
@@ -204,8 +226,10 @@ def get_spark(
 
 def warm_python_workers(spark: SparkSession, depth: int = 1) -> None:
     """Pre-spawn a MINIMAL Python UDF worker pool: exactly one Arrow worker
-    per task slot (pandas/pyarrow imports are ~1-2 s per worker, so
-    benchmarks warm once to measure steady state, not cold start).
+    per task slot, so benchmarks measure steady state, not cold start.  In
+    local mode the workers fork from :mod:`nerzo_spark.worker_daemon`, which
+    has already imported numpy, pandas, pyarrow and the pyspark worker once;
+    a worker no longer pays those imports (~1-2 s each) itself.
 
     Round-4 lesson (BENCH.md): the previous warm ran a chain of FOUR Python
     operators in one stage plus a plain-RDD pass — ~4.5 pooled workers per

@@ -5,6 +5,17 @@ import pytest
 from nerzo_spark.session import get_spark
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "session_end: run after every other test of the session"
+    )
+
+
+def pytest_collection_modifyitems(items):
+    # stable: the session_end tests keep their order, after all the others
+    items.sort(key=lambda item: item.get_closest_marker("session_end") is not None)
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("nerzo-tests", master="local[4]", shuffle_partitions=8)

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 
@@ -45,11 +46,9 @@ def _run_kg_cli(spark, fixture_small, tmp_path, corpus):
     )
 
 
-def test_run_kg_cli_end_to_end(tmp_path, spark, fixture_small):
-    from nerzo_spark.fixtures.spark_io import corpus_df
-
-    out = str(tmp_path / "out")
-    res = _run_kg_cli(spark, fixture_small, tmp_path, corpus_df(spark, fixture_small))
+def _check_output(res, out: str) -> dict:
+    """The run's JSON summary, after checking its triples against the gold
+    and its lineage stages."""
     assert res.returncode == 0, res.stderr[-3000:]
     stats = json.loads(
         [ln for ln in res.stdout.splitlines() if ln.startswith("{")][-1]
@@ -78,6 +77,38 @@ def test_run_kg_cli_end_to_end(tmp_path, spark, fixture_small):
     by_stage = {r[0]: r for r in lin if r[0] != "extract"}
     assert by_stage["triples"][1] == len(gold)
     assert all(r[2] > 0 for r in lin)
+    return stats
+
+
+def test_run_kg_cli_end_to_end(tmp_path, spark, fixture_small):
+    from nerzo_spark.fixtures.spark_io import corpus_df
+
+    res = _run_kg_cli(spark, fixture_small, tmp_path, corpus_df(spark, fixture_small))
+    _check_output(res, str(tmp_path / "out"))
+
+
+def test_spark_submit_with_py_files_outside_the_repo(tmp_path):
+    """The documented surface: ``spark-submit --py-files nerzo_spark.zip
+    jobs/run_kg.py``, run from a directory outside the repo with no
+    ``PYTHONPATH``, so the package reaches the driver and the Python
+    workers' daemon only as the zip."""
+    package = shutil.make_archive(
+        str(tmp_path / "pkg" / "nerzo_spark"), "zip", root_dir=REPO, base_dir="nerzo_spark"
+    )
+    spark_submit = shutil.which("spark-submit") or os.path.join(
+        os.environ["SPARK_HOME"], "bin", "spark-submit")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_MASTER"] = "local[4]"
+    work = tmp_path / "elsewhere"
+    work.mkdir()
+    out = str(tmp_path / "out")
+    res = subprocess.run(
+        [spark_submit, "--py-files", package, os.path.join(REPO, "jobs", "run_kg.py"),
+         "--gen-files", "120", "--output", out, "--partitions", "8"],
+        capture_output=True, text=True, cwd=work, env=env, timeout=600,
+    )
+    stats = _check_output(res, out)
+    assert stats["repos_extracted"] == 85
 
 
 def test_run_kg_cli_refuses_duplicate_corpus_rows(tmp_path, spark, fixture_small):

@@ -101,7 +101,11 @@ no_vectors = local_frame(spark, [], "vec_id long, embedding array<float>, label 
 assert knn_self_join(no_vectors, k=3).collect() == []
 
 
-def children(pid):
+# the module the session's daemon runs: its name is on the daemon's cmdline
+daemon_module = spark.sparkContext.getConf().get("spark.python.daemon.module", "pyspark.daemon")
+
+
+def children(pid, module=None):
     out = []
     for p in os.listdir("/proc"):
         if not p.isdigit():
@@ -113,13 +117,14 @@ def children(pid):
                 cmd = f.read()
         except OSError:  # exited while we looked
             continue
-        if ppid == pid and b"pyspark.daemon" in cmd:
+        if ppid == pid and (module is None or module.encode() in cmd.split(b"\0")):
             out.append(int(p))
     return out
 
 
-daemons = children(spark.sparkContext._gateway.proc.pid)
+daemons = children(spark.sparkContext._gateway.proc.pid, daemon_module)
 print(json.dumps({
+    "daemon_module": daemon_module,
     "daemons": len(daemons),
     "workers": sum(len(children(d)) for d in daemons),
     "cores": spark.sparkContext.defaultParallelism,

@@ -13,8 +13,10 @@ the functions it hands to a query registry (``register``/``_register``
 decorators).  A reached definition reaches the names its body, decorators
 and defaults use, through the module's own definitions and its imports.
 ``perfbench/trace.py`` patches some functions by name (``_wrap(module,
-"name", ...)``); those strings count too.  Docstrings and comments do not:
-a name mentioned only in prose is not reached.
+"name", ...)``), and ``get_spark`` names the Python workers' daemon by its
+module (``.config("spark.python.daemon.module", "dotted.name")``), which
+Spark runs as ``python -m``; those strings count too.  Docstrings and
+comments do not: a name mentioned only in prose is not reached.
 
 ``ALLOWED`` names the definitions kept without an entry point, each with
 its reason.  An entry that something now reaches, or that no longer
@@ -38,6 +40,9 @@ ENTRY_FILES = [
 ]
 
 REGISTRY_DECORATORS = {"register", "_register"}
+
+# Spark settings whose value is a module that Spark runs
+MODULE_SETTINGS = {"spark.python.daemon.module"}
 
 _GOLD = "the test adapter over the committed gold triples (tests/test_kg_e2e.py)"
 _GUARDS = ("the read API for skew-guard drops, structured records rather than "
@@ -212,6 +217,12 @@ class _Walk:
                 owner = self.resolve(target) if target else None
                 if owner is not None:
                     self.reach(owner, node.args[1].value)
+            elif (isinstance(node, ast.Call) and len(node.args) >= 2
+                  and isinstance(node.args[0], ast.Constant)
+                  and node.args[0].value in MODULE_SETTINGS
+                  and isinstance(node.args[1], ast.Constant)):
+                # .config("spark.python.daemon.module", "dotted.name")
+                self.module(node.args[1].value)
 
     def run(self) -> None:
         for path in ENTRY_FILES:
