@@ -36,7 +36,7 @@ def entry(spark: SparkSession) -> DataFrame:
     fx = generate(n_files=120)
     planted = corpus_df(spark, fx)
 
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    docs = _catalog.T(spark, SF_DIR, "documents")
     derived = docs.select(
         F.concat(F.lit("docsrc/"), F.col("source")).alias("repo"),
         F.concat(F.lit("docs/"), F.col("doc_id").cast("string"), F.lit(".txt")).alias("path"),

@@ -18,7 +18,7 @@ SURVEY.md §7.3).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -165,9 +165,19 @@ def link_topk(
     return mentions.select(id_col, emb_col).mapInPandas(_score, schema=LINK_SCHEMA)
 
 
+# multiply-adds of scoring per query task: about 0.1 s of a core's GEMM and
+# selection, against a Python task's fixed cost of about 0.06 s
+_MACS_PER_TASK = 1 << 28
+
+
+def _knn_schema(label_col: str | None) -> str:
+    schema = "query_id long, neighbor_id long, score double, rank int"
+    return schema + (", query_label int, neighbor_label int" if label_col else "")
+
+
 def knn_self_join(
     vectors: DataFrame,
-    k: int,
+    k: int | Callable[[np.ndarray], int],
     id_col: str = "vec_id",
     emb_col: str = "embedding",
     label_col: str | None = "label",
@@ -189,6 +199,11 @@ def knn_self_join(
     degenerates to the single-broadcast exact path with zero extra shuffle
     beyond the final per-query re-rank.
 
+    ``k`` may instead be a function of the relayed labels (every row's
+    ``label_col`` value, in no particular order) that returns k, for a k
+    that depends on the class sizes (R-precision): the labels are on the
+    driver anyway, so no action of the caller's has to fetch them.
+
     Determinism: ties broken by neighbor_id ascending (within a chunk via
     stable argsort over id-sorted rows; across chunks via the final window
     ORDER BY score DESC, neighbor_id ASC).
@@ -207,29 +222,45 @@ def knn_self_join(
 
     cols = [id_col, emb_col] + ([label_col] if label_col else [])
     src = vectors.select(*cols)
-    n = src.count()
+    # One bounded relay: at most chunk_rows + 1 rows reach the driver.  When
+    # they all fit they are the only chunk and their number is n; only a
+    # larger input is counted, and then relayed chunk by chunk below.
+    head = src.limit(chunk_rows + 1).collect()
+    n = len(head) if len(head) <= chunk_rows else src.count()
+    if n == 0:  # empty input: zero-row result with the declared schema
+        return local_frame(vectors.sparkSession, [], _knn_schema(label_col))
     n_chunks = max(1, -(-n // chunk_rows))
     # Parallelism repair (guide §2.5 input skew): vector tables often arrive
     # as one parquet row group, which pins the WHOLE O(n^2) scoring pass to a
     # single task regardless of split settings.  The query side is narrow
     # (id, vec, label), so a round-robin exchange is tiny next to the GEMM it
-    # parallelizes.  Scale-adaptive: derived from n and the session's core
-    # count, never a local constant.
+    # parallelizes, and it is made whatever the input's partitioning (reading
+    # that needs a physical plan).  Scale-adaptive: one task per
+    # _MACS_PER_TASK of scoring, up to 4 per core, so a task's GEMM outweighs
+    # the fixed cost of a Python task; a pass smaller than that is one task
+    # and needs no exchange at all.
     cores = max(vectors.sparkSession.sparkContext.defaultParallelism, 1)
-    q_parts = max(1, min(max(cores, -(-n // 1024)), 4 * cores, n))
-    if src.rdd.getNumPartitions() < q_parts:
-        src = src.repartition(q_parts)
-    if n_chunks > 1:
-        # every chunk collect and every scorer pass re-reads src, and the
-        # returned plan does too, so no scoped cache can hold it: a lazy
-        # local checkpoint is materialized by the first chunk collect and
-        # released by Spark's ContextCleaner together with the result
-        src = src.localCheckpoint(eager=False)
+    macs = n * min(n, chunk_rows) * len(head[0][emb_col])
+    q_parts = max(1, min(-(-macs // _MACS_PER_TASK), 4 * cores, n))
+    queries = src.coalesce(1) if q_parts == 1 else src.repartition(q_parts)
+    if n_chunks == 1:
+        relay = [head]
+    else:
+        # every chunk collect and every scorer pass re-reads the queries,
+        # and the returned plan does too, so no scoped cache can hold them:
+        # a lazy local checkpoint is materialized by the first chunk collect
+        # and released by Spark's ContextCleaner together with the result.
+        # Chunks by pmod(hash(id)): robust to negative ids (Spark's % keeps
+        # the dividend sign, so `id % B == c` would silently drop them) and
+        # to arithmetically-patterned ids (all multiples of B would collapse
+        # into one chunk, restoring the unbounded collect blocking prevents)
+        queries = queries.localCheckpoint(eager=False)
+        relay = (
+            queries.filter(F.pmod(F.hash(F.col(id_col)), F.lit(n_chunks)) == c).collect()
+            for c in range(n_chunks)
+        )
 
-    out_schema = "query_id long, neighbor_id long, score double, rank int"
-    if label_col:
-        out_schema += ", query_label int, neighbor_label int"
-
+    out_schema = _knn_schema(label_col)
     sc = vectors.sparkSession.sparkContext
 
     def _scorer(bc, kk_cap):
@@ -276,18 +307,8 @@ def knn_self_join(
 
         return _knn
 
-    parts = []
-    for c in range(n_chunks):
-        # chunk by pmod(hash(id)): robust to negative ids (Spark's % keeps
-        # the dividend sign, so `id % B == c` would silently drop them) and
-        # to arithmetically-patterned ids (all multiples of B would collapse
-        # into one chunk, restoring the unbounded collect blocking prevents)
-        chunk_df = (
-            src
-            if n_chunks == 1
-            else src.filter(F.pmod(F.hash(F.col(id_col)), F.lit(n_chunks)) == c)
-        )
-        rows = chunk_df.collect()
+    chunks = []
+    for rows in relay:
         if not rows:
             continue
         rows.sort(key=lambda r: r[id_col])
@@ -295,13 +316,15 @@ def knn_self_join(
         mat = np.stack([np.asarray(r[emb_col], dtype=np.float64) for r in rows])
         mat = mat / np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
         labels = np.array([r[label_col] for r in rows]) if label_col else None
-        bc = sc.broadcast((ids, mat, labels))
-        # per-chunk k must cover the global k even if all top-k live here;
-        # +1 headroom for the self row masked to -inf
-        parts.append(src.mapInPandas(_scorer(bc, min(k + 1, len(rows))), schema=out_schema))
-
-    if not parts:  # empty input: zero-row result with the declared schema
-        return local_frame(vectors.sparkSession, [], out_schema)
+        chunks.append((sc.broadcast((ids, mat, labels)), len(rows), labels))
+    if callable(k):
+        k = k(np.concatenate([labels for _, _, labels in chunks]))
+    # per-chunk k must cover the global k even if all top-k live here;
+    # +1 headroom for the self row masked to -inf
+    parts = [
+        queries.mapInPandas(_scorer(bc, min(k + 1, m)), schema=out_schema)
+        for bc, m, _ in chunks
+    ]
     union = parts[0]
     for p in parts[1:]:
         union = union.unionByName(p)

@@ -33,7 +33,7 @@ from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass, field
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nerzo_spark.embed.embedder import embed_span
@@ -44,9 +44,9 @@ from nerzo_spark.session import cached, local_frame
 
 @dataclass
 class KGResult:
-    """The in-memory KG.  It holds three caches: the mention table
-    (``mentions``), the surface aggregate the entities and triples plans
-    read, and ``triples_count``.  ``close()`` (or leaving a ``with`` block)
+    """The in-memory KG.  It holds two caches: the mention table
+    (``mentions``) and the surface aggregate the entities and triples plans
+    read.  ``close()`` (or leaving a ``with`` block)
     releases them; the plans stay valid and recompute on their next action.
     A result that is never closed, even once garbage-collected, keeps its
     caches until the session's ``clearCache()``."""
@@ -60,8 +60,9 @@ class KGResult:
     # count of the materialized mention table (the extract+link action the
     # pipeline already runs) — links_to arm cardinality, free to reuse
     n_mentions: int = 0
-    # lazy, cached 1-row (n_triples long) plan == triples.count();
-    # None only for hand-built results in tests
+    # lazy 1-row (n_triples long) plan == triples.count(), also read by the
+    # lineage 'triples' row; uncached: a 1-row cache costs a job of its own
+    # on first use.  None only for hand-built results in tests
     triples_count: DataFrame | None = None
     caches: ExitStack = field(default_factory=ExitStack, repr=False)
 
@@ -122,9 +123,10 @@ def corpus_duplicate_files(corpus: DataFrame) -> DataFrame:
 
 def build_triples(
     typed: DataFrame, overrides: DataFrame, catalog: list[dict],
-    surfaces: DataFrame,
-) -> DataFrame:
-    """(typed mentions, canonical overrides) -> (subj, pred, obj, provenance).
+    surfaces: DataFrame, n_links: int,
+) -> tuple[DataFrame, DataFrame]:
+    """(typed mentions, canonical overrides) -> (subj, pred, obj, provenance),
+    and its count.
 
     Shuffle economics: the entity id of a mention is a COLUMN EXPRESSION —
     ``ent_id(fine_type, coalesce(override, norm_key(surface)))`` — joined
@@ -137,6 +139,14 @@ def build_triples(
     ``surfaces``: the DISTINCT (fine_type, surface) table (assemble_kg
     shares one across overrides/entities/triples), so the ``typed_as``
     entity set is derived at SURFACE scale, not from the mention table.
+
+    The count is a lazy one-row ``n_triples`` plan equal to
+    ``triples.count()``.  ``links_to`` has one row per mention, so its
+    count is ``n_links``, the mention count the caller already has; the
+    other three arms are counted by ONE distinct over their tagged keys
+    (one shuffle, of which only the ``defined_in`` keys are mention-scale)
+    instead of a count over the four-arm union, which re-ran each arm's
+    own dedup: 4 Spark jobs against 9.
     """
     from nerzo_spark.functions.hashing import ent_id
     from nerzo_spark.operators.canonicalize import canonical_expr
@@ -150,35 +160,27 @@ def build_triples(
         )
     )
 
-    typed_e = typed.join(
-        F.broadcast(overrides), ["fine_type", "surface"], "left"
-    ).withColumn(
-        "entity_id",
-        ent_id(
+    def entity_id() -> Column:
+        return ent_id(
             F.col("fine_type"),
             canonical_expr(F.col("fine_type"), F.col("surface"), F.col("canonical")),
-        ),
-    )
-    ent_typed = (
-        surfaces.join(F.broadcast(overrides), ["fine_type", "surface"], "left")
-        .select(
-            "fine_type",
-            ent_id(
-                F.col("fine_type"),
-                canonical_expr(F.col("fine_type"), F.col("surface"), F.col("canonical")),
-            ).alias("entity_id"),
         )
-        .select("entity_id", "fine_type")
-        .distinct()
-        .join(label_map, "fine_type")
-    )
 
-    # dedup BEFORE building the prov string: obj is a function of
-    # (repo, path, commit), so the key is identical but the shuffle moves
-    # ~100B/row less (0.3 GB at 3.2M mentions); literals added post-shuffle
-    defined_base = typed_e.select(
-        F.col("entity_id").alias("subj"), "repo", "path", "commit"
-    ).dropDuplicates(["subj", "repo", "path", "commit"])
+    typed_e = typed.join(
+        F.broadcast(overrides), ["fine_type", "surface"], "left"
+    ).withColumn("entity_id", entity_id())
+    # each arm's keys before its dedup; the triples and the count dedup them
+    # each time
+    defined_keys = typed_e.select(F.col("entity_id").alias("subj"), "repo", "path", "commit")
+    surface_entities = surfaces.join(
+        F.broadcast(overrides), ["fine_type", "surface"], "left"
+    ).select(entity_id().alias("entity_id"), "fine_type")
+    # every surface yields an entity of its own fine type, so the fine types
+    # present among entities == fine types present among surfaces: derive
+    # subtype_of from the surface table's tiny fine_type distinct (partial
+    # agg collapses to |types| rows map-side) instead of re-running the
+    # whole entity chain (join+distinct over the entity table) for ~8 rows.
+    fine_types = surfaces.select("fine_type")
 
     null_prov = [
         F.lit(None).cast("string").alias("repo"),
@@ -191,32 +193,46 @@ def build_triples(
         F.col("mention_id").alias("subj"), F.lit("links_to").alias("pred"),
         F.col("entity_id").alias("obj"), "repo", "path", "commit",
     )
-    t_defined = defined_base.select(
+    # dedup BEFORE building the prov string: obj is a function of
+    # (repo, path, commit), so the key is identical but the shuffle moves
+    # ~100B/row less (0.3 GB at 3.2M mentions); literals added post-shuffle
+    t_defined = defined_keys.dropDuplicates().select(
         "subj", F.lit("defined_in").alias("pred"), prov.alias("obj"),
         "repo", "path", "commit",
     )
-    t_typed = ent_typed.select(
+    t_typed = surface_entities.distinct().join(label_map, "fine_type").select(
         F.col("entity_id").alias("subj"), F.lit("typed_as").alias("pred"),
         F.col("label_id").alias("obj"), *null_prov,
     )
-    # every surface yields an entity of its own fine type, so the fine types
-    # present among entities == fine types present among surfaces: derive
-    # subtype_of from the surface table's tiny fine_type distinct (partial
-    # agg collapses to |types| rows map-side) instead of re-running the
-    # whole entity chain (join+distinct over the entity table) for ~8 rows.
-    # label_map has one row per fine type (each fine type appears once in TAXONOMY), so
-    # the join keeps (fine_type, coarse_type) distinct.
-    t_subtype = (
-        surfaces.select("fine_type")
-        .distinct()
-        .join(label_map, "fine_type")
-        .select(
-            F.col("fine_type").alias("subj"), F.lit("subtype_of").alias("pred"),
-            F.col("coarse_type").alias("obj"), *null_prov,
-        )
+    # label_map has one row per fine type (each fine type appears once in
+    # TAXONOMY), so the joins keep their left sides distinct
+    t_subtype = fine_types.distinct().join(label_map, "fine_type").select(
+        F.col("fine_type").alias("subj"), F.lit("subtype_of").alias("pred"),
+        F.col("coarse_type").alias("obj"), *null_prov,
     )
+    triples = t_links.unionByName(t_typed).unionByName(t_defined).unionByName(t_subtype)
 
-    return t_links.unionByName(t_typed).unionByName(t_defined).unionByName(t_subtype)
+    def arm_keys(arm: int, df: DataFrame, *keys: str) -> DataFrame:
+        pad = [F.lit(None).cast("string")] * (4 - len(keys))
+        return df.select(F.lit(arm).alias("arm"), *keys, *pad)
+
+    # the label map's fine types as a predicate, not a join: a broadcast of
+    # a driver-built frame is a Spark job of its own
+    labelled = F.col("fine_type").isin([c["fine_type"] for c in catalog])
+    deduped = (
+        arm_keys(0, defined_keys, "subj", "repo", "path", "commit")
+        .union(arm_keys(1, surface_entities.filter(labelled), "entity_id", "fine_type"))
+        .union(arm_keys(2, fine_types.filter(labelled), "fine_type"))
+        .distinct()
+        .select(F.lit(1).cast("long").alias("n"))
+    )
+    # links_to as one row weighing n_links: data, not a literal, so a new
+    # count compiles no new code
+    links = local_frame(spark, [(n_links,)], "n long")
+    count = deduped.union(links).agg(
+        F.coalesce(F.sum("n"), F.lit(0).cast("long")).alias("n_triples")
+    )
+    return triples, count
 
 
 @dataclass
@@ -229,6 +245,8 @@ class KGAssembly:
     canon_wall_ms: float
     entities: DataFrame
     triples: DataFrame
+    # lazy one-row (n_triples long) plan == triples.count()
+    triples_count: DataFrame
     # per repo: rows_out, sha_ok, files; each sink adds stage/run_id/wall_ms
     repo_lineage: DataFrame
 
@@ -305,12 +323,16 @@ def assemble_kg(typed: DataFrame, catalog: list[dict]) -> Iterator[KGAssembly]:
         # real canonicalize stage wall.
         overrides = canonical_overrides(surfaces, already_distinct=True)
         canon_wall_ms = (time.time() - t_surfaces) * 1000.0
+        triples, triples_count = build_triples(
+            typed, overrides, catalog, surfaces=surfaces, n_links=n_mentions
+        )
         yield KGAssembly(
             n_mentions=n_mentions,
             t_surfaces=t_surfaces,
             canon_wall_ms=canon_wall_ms,
             entities=resolve_entities(surfaces, overrides),
-            triples=build_triples(typed, overrides, catalog, surfaces=surfaces),
+            triples=triples,
+            triples_count=triples_count,
             repo_lineage=typed.groupBy("repo").agg(
                 F.count("*").alias("rows_out"),
                 F.min(F.col("sha_ok").cast("int")).cast("boolean").alias("sha_ok"),
@@ -350,15 +372,6 @@ def run_kg_pipeline(
         # wall agree
         extract_wall_ms = (kg.t_surfaces - t0) * 1000.0
 
-        # lazy cache of the ONE-row count plan: it is embedded both in
-        # KGResult.triples_count and in the lineage 'triples' row — a caller
-        # materializing both (or lineage twice) would otherwise pay the
-        # mention-scale scan each time.  No action is triggered here (keeps
-        # the no-serialized-action property of the library path).
-        triples_count = caches.enter_context(
-            cached(kg.triples.agg(F.count(F.lit(1)).alias("n_triples")))
-        )
-
         # Per-stage lineage on the library path, without adding serialized
         # actions to the pipeline's own critical path: the extract+link rows
         # are per-repo with the measured wall; 'canonicalize' carries the
@@ -382,7 +395,7 @@ def run_kg_pipeline(
             .unionByName(
                 _stage_row(kg.entities.agg(F.count(F.lit(1)).alias("n")), "n", "canonicalize")
             )
-            .unionByName(_stage_row(triples_count, "n_triples", "triples")),
+            .unionByName(_stage_row(kg.triples_count, "n_triples", "triples")),
             run_id,
             {"extract+link": extract_wall_ms, "canonicalize": kg.canon_wall_ms,
              "triples": -1.0},
@@ -396,6 +409,6 @@ def run_kg_pipeline(
             lineage=lineage,
             label_catalog=catalog,
             n_mentions=kg.n_mentions,
-            triples_count=triples_count,
+            triples_count=kg.triples_count,
             caches=caches.pop_all(),
         )

@@ -48,8 +48,42 @@ def oracle_sql() -> dict[str, str]:
     return {k: v[1] for k, v in _REGISTRY.items() if v[1] is not None}
 
 
+# The driver tables' schemas, as their parquet footers give them (names,
+# types and order; tests/test_table_schemas.py holds every footer to them).
+# A read that declares its schema skips Spark's schema inference, a job of
+# its own on every read (ARCHITECTURE.md, "JVM-side fixed costs").
+SCHEMAS: dict[str, str] = {
+    "region": "r_regionkey int, r_name string",
+    "nation": "n_nationkey int, n_name string, n_regionkey int",
+    "customer": (
+        "c_custkey bigint, c_name string, c_nationkey int, c_acctbal double,"
+        " c_mktsegment string"
+    ),
+    "supplier": "s_suppkey bigint, s_name string, s_nationkey int, s_acctbal double",
+    "part": (
+        "p_partkey bigint, p_name string, p_brand string, p_type string, p_size int,"
+        " p_retailprice double"
+    ),
+    "orders": (
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string, o_totalprice double,"
+        " o_orderdate timestamp_ntz, o_orderpriority string"
+    ),
+    "lineitem": (
+        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint, l_linenumber int,"
+        " l_quantity double, l_extendedprice double, l_discount double, l_tax double,"
+        " l_returnflag string, l_linestatus string, l_shipdate timestamp_ntz"
+    ),
+    "events": (
+        "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string,"
+        " value double, props string"
+    ),
+    "documents": "doc_id bigint, text string, lang string, source string, n_chars bigint",
+    "embeddings": "vec_id bigint, embedding array<float>, label int",
+}
+
+
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return spark.read.schema(SCHEMAS[name]).parquet(f"{sf_dir}/{name}.parquet")
 
 
 def T_par(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -57,15 +91,28 @@ def T_par(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     skew): the sf parquet tables ship as ONE row group, so every split but
     one is empty and any compute-heavy map side (explode + md5 per shingle,
     per-pair cosine, posexplode folds) runs in a single task regardless of
-    maxPartitionBytes.  When the scan arrives with fewer partitions than the
-    session's core count, round-robin repartition — the narrow exchange is
-    tiny next to the per-row compute it parallelizes.  Scale-adaptive: a
-    properly laid-out corpus (many row groups / files) already exceeds the
-    target and is left untouched; use :func:`T` for scan-dominated queries
-    where an extra exchange would only add cost."""
+    maxPartitionBytes.  A table smaller than one full split per target
+    slot is round-robin repartitioned — the narrow exchange is tiny next to
+    the per-row compute it parallelizes.  Scale-adaptive at both ends:
+
+    - a properly laid-out corpus at least that large is left untouched;
+    - so is a table smaller than ``spark.sql.files.openCostInBytes``, the
+      least input Spark gives a task of its own: spreading it costs an
+      exchange (a Spark job) and a task per slot for less work than one
+      task's fixed cost (a catalog pass at sf0.01 ran 1.0-2.0 s less CPU
+      on a 4-core host).
+
+    Use :func:`T` for scan-dominated queries where an extra exchange would
+    only add cost.  The size comes from the file system, not from the
+    scan's partition count: that count needs a physical plan (about 30-70
+    ms of driver CPU per call), the size one file-status call."""
     d = T(spark, sf_dir, name)
-    target = max(spark.sparkContext.defaultParallelism, 8)
-    if d.rdd.getNumPartitions() < target:
+    sc = spark.sparkContext
+    jpath = sc._jvm.org.apache.hadoop.fs.Path(f"{sf_dir}/{name}.parquet")
+    size = jpath.getFileSystem(sc._jsc.hadoopConfiguration()).getContentSummary(jpath).getLength()
+    conf = spark._jsparkSession.sessionState().conf()
+    target = max(sc.defaultParallelism, 8)
+    if conf.filesOpenCostInBytes() <= size < target * conf.filesMaxPartitionBytes():
         d = d.repartition(target)
     return d
 

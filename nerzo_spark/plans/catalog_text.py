@@ -12,6 +12,9 @@ default); concat_ws for shingles (both engines skip NULLs).
 
 from __future__ import annotations
 
+import hashlib
+
+import pandas as pd
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -234,15 +237,30 @@ def token_count_totals(spark, sf_dir):
 )
 def doc_fingerprint(spark, sf_dir):
     """Document fingerprinting: min-hash over rolling char-8-gram shingles
-    (winnowing-lite, content-defined)."""
+    (winnowing-lite, content-defined).
+
+    Hashed in one Arrow-batched Python pass (:func:`_min_md5_char8`): Spark
+    runs a ``transform`` lambda interpreted, about 5 µs per shingle (0.8 s
+    of CPU for the 145k shingles of sf0.01 on a 4-core host), where
+    ``hashlib`` takes under 1 µs (0.4 s, the Python task's fixed cost
+    included)."""
     d = T(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.expr(
-            "array_min(transform(sequence(1, greatest(length(text) - 7, 1)),"
-            " i -> md5(substring(text, i, 8))))"
-        ).alias("fingerprint"),
-    )
+    fingerprint = F.pandas_udf(_min_md5_char8, "string")
+    return d.select("doc_id", fingerprint("text").alias("fingerprint"))
+
+
+def _min_md5_char8(text: pd.Series) -> pd.Series:
+    """Per text, the least md5 hex of its char-8-grams, as the oracle's
+    ``min(md5(substr(text, i, 8)))`` for i in 1..max(length - 7, 1): a text
+    shorter than 8 chars is its own one gram, and NULL stays NULL.  Chars
+    are code points on both sides, and md5 hashes their UTF-8 bytes."""
+
+    def one(t):
+        if t is None:
+            return None
+        return min(hashlib.md5(t[i : i + 8].encode()).hexdigest() for i in range(max(len(t) - 7, 1)))
+
+    return text.map(one)
 
 
 # --- dedup family ---------------------------------------------------------------
@@ -380,13 +398,15 @@ def dedup_minhash_lsh_pairs(spark, sf_dir):
     corpus-wide."""
     from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform
 
-    d = _docs_par(spark, sf_dir)
-
     def _cand_exploder(ids_df):
-        return _explode_shingles(d.join(F.broadcast(ids_df), "doc_id", "left_semi"))
+        # the candidate docs straight from the scan: over T_par's exchange,
+        # the semi-join would be pushed below it and shuffle the table a
+        # second time (a Spark job) for a candidate-scale explode
+        docs = T(spark, sf_dir, "documents")
+        return _explode_shingles(docs.join(F.broadcast(ids_df), "doc_id", "left_semi"))
 
     return minhash_lsh_pairs_rowform(
-        _doc_shingle_arrays(d),
+        _doc_shingle_arrays(_docs_par(spark, sf_dir)),
         explode_shingles=_cand_exploder,
         threshold=0.5,
         band_cap=64,

@@ -67,13 +67,15 @@ def j1_cosine_topk(spark, sf_dir):
     r7: T_par (single-row-group scan skew) + factored-norm cosine (each
     side's norm computed once per ROW instead of once per PAIR; bit-identical
     op sequence — see _DOT_SPARK/_NORM_SPARK)."""
-    e = T_par(spark, sf_dir, "embeddings").withColumn(
-        "n_e", F.expr(_NORM_SPARK.format(v="embedding"))
-    )
-    q = e.filter(F.col("vec_id") < 5).select(
+    norm = F.expr(_NORM_SPARK.format(v="embedding"))
+    e = T_par(spark, sf_dir, "embeddings").withColumn("n_e", norm)
+    # the query side reads the table directly: over T_par's exchange, its
+    # filter would be pushed below the exchange and shuffle the table a
+    # second time (a Spark job), only to feed a broadcast of 5 rows
+    q = T(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
-        F.col("n_e").alias("n_q"),
+        norm.alias("n_q"),
     )
     scored = (
         e.crossJoin(F.broadcast(q))
@@ -139,16 +141,27 @@ def e1_recall_at_k(spark, sf_dir):
 def e2_rprecision(spark, sf_dir):
     """E2 — R-precision (fewnerd_single_vector_r_precision.py:26-51): per
     query, fraction of top (class_size - 1) neighbors sharing the label;
-    macro-averaged per label."""
+    macro-averaged per label.  The class sizes come from the labels the kNN
+    relay brings to the driver, so no job of its own fetches them."""
+    from collections import Counter
+
     from nerzo_spark.operators.topk import knn_self_join
 
-    e = T(spark, sf_dir, "embeddings")
-    sizes = e.groupBy("label").agg(F.count("*").alias("n"))
-    kmax = max(r["n"] for r in sizes.collect()) - 1
-    knn = knn_self_join(e, k=kmax)
+    counts: Counter = Counter()
+
+    def kmax(labels):
+        counts.update(labels.tolist())
+        return max(counts.values()) - 1
+
+    knn = knn_self_join(T(spark, sf_dir, "embeddings"), k=kmax)
+    # label -> class size as a map value, not a broadcast join: a broadcast
+    # of a driver-built frame is a Spark job of its own.  A folded map
+    # literal is a reference in the generated code, so other sizes compile
+    # no new code.  A NULL label has no size, so its queries drop out, as
+    # in the oracle's inner join on the sizes.
+    sizes = F.create_map(*[F.lit(x) for kv in counts.items() if kv[0] is not None for x in kv])
     per_q = (
-        knn.join(F.broadcast(sizes), knn.query_label == sizes.label)
-        .filter(F.col("rank") <= F.col("n") - 1)
+        knn.filter(F.col("rank") <= F.element_at(sizes, F.col("query_label")) - 1)
         .groupBy("query_id", "query_label")
         .agg(F.avg((F.col("neighbor_label") == F.col("query_label")).cast("double")).alias("frac"))
     )

@@ -35,12 +35,12 @@ AFTER_TRIPLES = "resume/after_triples"
 CEILINGS = {
     "build": 6,
     f"build/{CANON}": 2,
-    "triples_count": 9,
+    "triples_count": 4,
     "resume": 25,
     f"resume/{CANON}": 2,
     AFTER_TRIPLES: 0,
 }
-OP_CEILING = 44
+OP_CEILING = 39
 
 
 @pytest.fixture(scope="module")

@@ -5,66 +5,50 @@ action inside the builder (a count, a collect, an eager checkpoint) costs a
 job and a driver round trip on every call, outside the caller's control.
 
 Each builder runs under its own job group, with no action after it, and
-Spark's status tracker counts the jobs of that group.  Reading a parquet
-table's schema submits a job of its own (Spark's footer read), which is
-table metadata, not the builder's work: reads run under a separate group.
-``EAGER`` names the builders that still act today, each with its reason.
-An entry that no longer submits a job fails the test too, so the list can
-only shrink."""
+Spark's status tracker counts the jobs of that group.  ``EAGER`` names the
+builders that still act today, each with its reason.  An entry that no
+longer submits a job fails the test too, so the list can only shrink."""
 
 from __future__ import annotations
 
 import itertools
 
 import pytest
-from pyspark.sql.readwriter import DataFrameReader
 
 # importing the entry module registers every catalog entry
 from __spark_entry__ import SF_DIR
 from nerzo_spark.plans import catalog
 
-_KNN = "knn_self_join counts its input and relays chunks through the driver (operators/topk.py)"
+_KNN = "knn_self_join relays its input through the driver in bounded chunks (operators/topk.py)"
 
 EAGER: dict[str, str] = {
     "ann_ivf_probe": "collects its centroids (catalog_ivf.py)",
     "ann_lsh_bucketed": "probes the embedding dim with first() (catalog_vec.py)",
     "dedup_embedding_neardup": "checks the largest label against its cap with first() (catalog_more.py)",
     "e1_recall_at_k": _KNN,
-    "e2_rprecision": _KNN + "; collects kmax (catalog_vec.py)",
+    "e2_rprecision": _KNN,
     "u5_u6_mlp_heads": "probes the embedding dim with first() (catalog_vec.py)",
 }
 
 _groups = itertools.count()
 
 
-def _build_jobs(spark, monkeypatch, fn) -> int:
-    """Jobs the builder ``fn`` submits, parquet schema reads aside."""
+def _build_jobs(spark, fn) -> int:
+    """Jobs the builder ``fn`` submits."""
     sc = spark.sparkContext
-    n = next(_groups)
-    build, read = f"lazy-build-{n}", f"lazy-read-{n}"
-    orig = DataFrameReader.parquet
-
-    def parquet(self, *paths, **options):
-        sc.setJobGroup(read, read)
-        try:
-            return orig(self, *paths, **options)
-        finally:
-            sc.setJobGroup(build, build)
-
-    monkeypatch.setattr(DataFrameReader, "parquet", parquet)
+    build = f"lazy-build-{next(_groups)}"
     sc.setJobGroup(build, build)
     try:
         fn(spark, SF_DIR)
     finally:
         sc.setJobGroup("", "")
-        monkeypatch.undo()
     # the status tracker is fed by the listener bus
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     return len(sc.statusTracker().getJobIdsForGroup(build))
 
 
 @pytest.mark.parametrize("name", sorted(catalog.queries()))
-def test_building_submits_no_job(spark, monkeypatch, name):
+def test_building_submits_no_job(spark, name):
     if name.startswith("kg_"):
         # the kg_* entries share one pipeline run per session, made by
         # whichever is called first (its canonicalize stage is eager by
@@ -72,7 +56,7 @@ def test_building_submits_no_job(spark, monkeypatch, name):
         from nerzo_spark.plans.catalog_kg import _run
 
         _run(spark)
-    jobs = _build_jobs(spark, monkeypatch, catalog.queries()[name])
+    jobs = _build_jobs(spark, catalog.queries()[name])
     if name in EAGER:
         assert jobs > 0, f"{name} builds lazily now: take it off EAGER"
     else:

@@ -89,8 +89,23 @@ def test_f2_token_offsets_shuffle_free(spark):
     df = catalog.queries()["f2_token_offsets"](spark, SF)
     plan = plan_of(df)
     assert "hashpartitioning" not in plan
-    # the single-row-group sf table scans as one split, so T_par's exchange
-    # is present, and it is the round-robin one
+    # the sf0.001 table is smaller than spark.sql.files.openCostInBytes, so
+    # T_par leaves its one-split scan as it is
+    tree = plan.split("(1) Scan")[0]
+    assert tree.count("Exchange") == 0, tree
+
+
+def test_t_par_repartitions_a_mid_sized_table(spark):
+    """With openCostInBytes below the table's size, the same table is one
+    T_par spreads: its round-robin exchange is the plan's only one."""
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1k")
+    try:
+        plan = plan_of(catalog.queries()["f2_token_offsets"](spark, SF))
+    finally:
+        spark.conf.set(key, old)
+    assert "hashpartitioning" not in plan
     tree = plan.split("(1) Scan")[0]
     assert tree.count("Exchange") == 1, tree
     assert "RoundRobinPartitioning" in plan, plan
