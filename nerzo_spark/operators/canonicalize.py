@@ -44,6 +44,11 @@ from nerzo_spark.functions.hashing import ent_id
 from nerzo_spark.functions.text import norm_key, normalize_surface, squash, squash_key
 from nerzo_spark.session import local_frame
 
+# distributed path: most propagation rounds (a cluster of larger diameter
+# fails loudly) and the label table's partitions in the loop
+MAX_ITER = 12
+LOOP_PARTITIONS = 32
+
 
 def _driver_union_find(
     pairs: list[tuple[str, str]],
@@ -127,27 +132,19 @@ def resolve_entities(surfaces: DataFrame, overrides: DataFrame) -> DataFrame:
     )
 
 
-def canonical_overrides(
-    typed_surfaces: DataFrame,
-    max_iter: int = 12,
-    loop_partitions: int = 32,
-    driver_limit: int = 500_000,
-    already_distinct: bool = False,
-) -> DataFrame:
+def canonical_overrides(surfaces: DataFrame, driver_limit: int = 500_000) -> DataFrame:
     """The MINIMAL canonicalization mapping: (fine_type, surface, canonical)
     ONLY for surfaces whose cluster canonical differs from their own
     normalized key.  Everything else follows the default rule
     canonical = norm_key(surface) — so consumers join a broadcast-sized
     override table instead of shuffling a distinct-surface-sized one
     (measured: forcing the full entity table through a mention-scale join
-    cost +20s at 800k files)."""
-    spark = typed_surfaces.sparkSession
-    # ``already_distinct``: callers holding a pre-distincted (fine_type,
-    # surface) table (pipeline/kg.py's assemble_kg shares one persisted
-    # copy) skip a redundant surface-scale shuffle here.
-    distinct_surfaces = typed_surfaces.select("fine_type", "surface")
-    if not already_distinct:
-        distinct_surfaces = distinct_surfaces.distinct()
+    cost +20s at 800k files).
+
+    ``surfaces``: (fine_type, surface) rows, distinct as assemble_kg's
+    shared aggregate is; a repeated row changes nothing (the union-find and
+    the hot-node ``dropDuplicates`` collapse it), it only costs work."""
+    spark = surfaces.sparkSession
 
     # Normalization keys are ALWAYS computed distributed (Spark regex
     # exprs): running norm_key() on the driver over the distinct-surface set
@@ -155,7 +152,7 @@ def canonical_overrides(
     # core-count-invariant).  The driver only ever union-finds the HOT
     # subgraph (surfaces sharing a bucket) with keys precomputed.
     nodes = (
-        distinct_surfaces
+        surfaces.select("fine_type", "surface")
         .withColumn("k1", normalize_surface(F.col("surface")))
         .withColumn("k2", squash_key(F.col("surface")))
         .withColumn("node_id", F.sha1(F.concat_ws("|", "fine_type", "surface")))
@@ -220,13 +217,13 @@ def canonical_overrides(
     ).dropDuplicates(["node_id"])
     edges = hot_edges.select("node_id", "bucket")
     labels = (
-        hot.repartition(loop_partitions, "node_id")
+        hot.repartition(LOOP_PARTITIONS, "node_id")
         .select("node_id", F.col("k1").alias("label"))
         .localCheckpoint()
     )
 
-    changed = 0  # defined even when max_iter == 0 (loop body never runs)
-    for it in range(max_iter):
+    changed = 0
+    for it in range(MAX_ITER):
         bucket_min = (
             edges.hint("shuffle_hash")
             .join(labels.hint("shuffle_hash"), "node_id")
@@ -242,7 +239,7 @@ def canonical_overrides(
         )
         # convergence checked every 2 rounds: each count is a full job, the
         # dominant fixed cost of the loop
-        if it % 2 == 1 or it == max_iter - 1:
+        if it % 2 == 1 or it == MAX_ITER - 1:
             changed = (
                 new_labels.alias("n")
                 .hint("shuffle_hash")
@@ -255,14 +252,14 @@ def canonical_overrides(
                 break
         labels = new_labels
     else:
-        # loop exhausted max_iter with the final convergence check non-zero:
-        # clusters with diameter > max_iter would get canonicals that
+        # loop exhausted MAX_ITER with the final convergence check non-zero:
+        # clusters with diameter > MAX_ITER would get canonicals that
         # disagree with the exact union-find — fail loudly, never silently
         if changed > 0:
             raise RuntimeError(
                 f"canonicalize: min-label propagation did not converge in "
-                f"{max_iter} rounds ({changed} labels still changing); "
-                f"raise max_iter (cluster diameter exceeds it)"
+                f"{MAX_ITER} rounds ({changed} labels still changing); raise "
+                f"operators.canonicalize.MAX_ITER (cluster diameter exceeds it)"
             )
 
     # hot nodes whose propagated label differs from their own k1.

@@ -7,7 +7,7 @@ remaining 100 TB hazard is a DEGENERATE BAND: M near-identical docs sharing
 a band produce M(M-1)/2 candidate rows inside one join bucket (a quadratic
 skew bomb no AQE split can fix, since it is real output volume, not
 partition imbalance).  Guard: size each band with a window count over the
-band key (operators/skew.py) and EXCLUDE bands larger than ``band_cap``
+band key (operators/skew.py) and EXCLUDE bands larger than ``BAND_CAP``
 from pairing.  The window's exchange on the band is the one the candidate
 self-join reads on both sides, and the drop is observed in-plan and
 reported as a record (no silent caps, no extra job).  Docs in a dropped
@@ -24,12 +24,18 @@ tests' own rows.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nerzo_spark.operators.skew import capped_keys, watch
 
-DEFAULT_BAND_CAP = 64
+# a verified pair's least Jaccard, and the most docs a band may hold before
+# the guard drops it; the oracle of ``dedup_minhash_lsh_pairs``
+# (plans/catalog_text.py) states both in its SQL
+THRESHOLD = 0.5
+BAND_CAP = 64
 
 
 def _bands_of(sig: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
@@ -50,14 +56,12 @@ def _bands_of(sig: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
 
 def minhash_lsh_pairs_rowform(
     doc_sh: DataFrame,
-    explode_shingles=None,
-    threshold: float = 0.5,
-    band_cap: int = DEFAULT_BAND_CAP,
+    explode_shingles: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
     """Banded LSH candidate generation + exact-Jaccard verification.
 
-    Returns (id_a, id_b, jaccard) for verified pairs with J >= threshold,
-    considering only bands with <= band_cap member docs (skew guard above),
+    Returns (id_a, id_b, jaccard) for verified pairs with J >= THRESHOLD,
+    considering only bands with <= BAND_CAP member docs (skew guard above),
     as one lazy plan: building it runs nothing and holds no cache.  The
     guard's record (``guard="minhash_lsh_pairs_rowform"``) is read with
     :func:`~nerzo_spark.operators.skew.guard_records` on the returned frame
@@ -73,14 +77,13 @@ def minhash_lsh_pairs_rowform(
     oracle of ``dedup_minhash_lsh_pairs`` bit-for-bit
     (tests/test_scale_guards.py, including an active band-cap drop).
 
-    ``explode_shingles``: optional callable ``(cand_ids_df) -> (doc_id, s)``
-    producing the exploded distinct shingles of the candidate docs only
-    (the ``doc_id`` column of ``cand_ids_df``).  Callers SHOULD supply one whose explode sits directly over the source
-    projection (see catalog_text._explode_shingles): exploding the aliased
-    ``sh`` column lets CollapseProject inline the array-building expression
-    into the Generate and re-evaluate it per element (measured 54 s vs
-    1.6 s at sf1.0).  Default: explode ``doc_sh.sh`` (acceptable when the
-    array is a stored column, pathological when it is an expression)."""
+    ``explode_shingles``: ``(cand_ids_df) -> (doc_id, s)``, the exploded
+    distinct shingles of the candidate docs only (the ``doc_id`` column of
+    ``cand_ids_df``).  Its explode sits directly over the source projection
+    (see catalog_text._explode_shingles): exploding ``doc_sh``'s aliased
+    ``sh`` column would let CollapseProject inline the array-building
+    expression into the Generate and re-evaluate it per element (measured
+    54 s vs 1.6 s at sf1.0)."""
     base = doc_sh.select(
         "doc_id",
         F.size("sh").alias("n"),
@@ -92,7 +95,7 @@ def minhash_lsh_pairs_rowform(
         ],
     )
     observed, kept, guard = capped_keys(
-        _bands_of(base, carry=("n",)), ["band"], band_cap, "minhash_lsh_pairs_rowform"
+        _bands_of(base, carry=("n",)), ["band"], BAND_CAP, "minhash_lsh_pairs_rowform"
     )
     cand = (
         observed.alias("a")
@@ -112,12 +115,7 @@ def minhash_lsh_pairs_rowform(
     # rides along (it is a function of doc_id) so that this read needs the
     # same columns as the join's and Spark reuses the exchange
     cand_ids = kept.filter(F.col("cnt") >= 2).select("doc_id", "n").distinct()
-    if explode_shingles is not None:
-        cand_sh = explode_shingles(cand_ids)
-    else:
-        cand_sh = doc_sh.join(F.broadcast(cand_ids), "doc_id", "left_semi").select(
-            "doc_id", F.explode("sh").alias("s")
-        )
+    cand_sh = explode_shingles(cand_ids)
     inter = (
         cand.join(cand_sh.alias("x"), F.col("x.doc_id") == F.col("id_a"))
         .join(
@@ -132,7 +130,7 @@ def minhash_lsh_pairs_rowform(
         inter.withColumn("jaccard", F.round(jac, 6))
         # filter on the SAME rounded expression that is returned, so no
         # emitted row can display a jaccard below the threshold
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= THRESHOLD)
         .select("id_a", "id_b", "jaccard")
     )
     return watch(pairs, guard)

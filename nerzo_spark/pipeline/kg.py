@@ -20,8 +20,9 @@ Scale notes
   broadcast into the scoring UDF as a dense matrix — never shuffled.
 - canonicalization iterates over DISTINCT (fine_type, surface), orders of
   magnitude smaller than mentions.
-- triples are built from mention-sized tables with one final dropDuplicates
-  per predicate family (hash aggregate, spillable).
+- triples are built from mention-sized tables with ONE distinct over a
+  tagged key table of the three deduplicated predicate families (one hash
+  aggregate, spillable); the same key table gives the triples' count.
 """
 
 from __future__ import annotations
@@ -52,18 +53,16 @@ class KGResult:
     caches until the session's ``clearCache()``."""
 
     mentions: DataFrame
-    links: DataFrame
     entities: DataFrame
     triples: DataFrame
     lineage: DataFrame
-    label_catalog: list[dict]
+    # lazy 1-row (n_triples long) plan == triples.count(), also read by the
+    # lineage 'triples' row; uncached: a 1-row cache costs a job of its own
+    # on first use
+    triples_count: DataFrame
     # count of the materialized mention table (the extract+link action the
     # pipeline already runs) — links_to arm cardinality, free to reuse
     n_mentions: int = 0
-    # lazy 1-row (n_triples long) plan == triples.count(), also read by the
-    # lineage 'triples' row; uncached: a 1-row cache costs a job of its own
-    # on first use.  None only for hand-built results in tests
-    triples_count: DataFrame | None = None
     caches: ExitStack = field(default_factory=ExitStack, repr=False)
 
     def close(self) -> None:
@@ -133,104 +132,84 @@ def build_triples(
     only against the broadcast-sized override table (surfaces whose cluster
     canonical differs from their own key; the hot minority).  The
     distinct-surface-sized entity table never shuffles against mentions.
-    Only ``links_to`` (no dedup) and ``defined_in`` (one dedup shuffle) are
-    mention-scale; ``typed_as``/``subtype_of`` are entity-scale.
 
-    ``surfaces``: the DISTINCT (fine_type, surface) table (assemble_kg
-    shares one across overrides/entities/triples), so the ``typed_as``
-    entity set is derived at SURFACE scale, not from the mention table.
+    ``links_to`` is one row per mention, not deduplicated.  The other three
+    families come from ONE tagged key table ``(pred, subj, a, b, c)`` and
+    one ``distinct`` over it (one hash aggregate, one shuffle, of which only
+    the ``defined_in`` keys are mention-scale):
+
+    - ``defined_in``: (entity_id, repo, path, commit) of the typed mentions;
+    - ``typed_as``: (entity_id, fine_type) of the surface entities;
+    - ``subtype_of``: (fine_type) of the surfaces.
+
+    ``surfaces`` is the DISTINCT (fine_type, surface) table assemble_kg
+    shares across overrides, entities and triples, so the last two are
+    surface-scale.  Every surface yields an entity of its own fine type, so
+    the fine types among entities are those among surfaces.  Both keep only
+    the catalog's fine types, and their objects are map-literal lookups
+    built from ``catalog``: no label frame, no broadcast (a broadcast of a
+    driver-built frame is a Spark job of its own).  The provenance string
+    is built after the shuffle: obj is a function of (repo, path, commit).
 
     The count is a lazy one-row ``n_triples`` plan equal to
-    ``triples.count()``.  ``links_to`` has one row per mention, so its
-    count is ``n_links``, the mention count the caller already has; the
-    other three arms are counted by ONE distinct over their tagged keys
-    (one shuffle, of which only the ``defined_in`` keys are mention-scale)
-    instead of a count over the four-arm union, which re-ran each arm's
-    own dedup: 4 Spark jobs against 9.
+    ``triples.count()``: the key table's rows plus ``n_links``, the mention
+    count the caller already has.
     """
     from nerzo_spark.functions.hashing import ent_id
     from nerzo_spark.operators.canonicalize import canonical_expr
 
-    spark = typed.sparkSession
-    label_map = F.broadcast(
-        local_frame(
-            spark,
-            [(c["fine_type"], c["coarse_type"], c["label_id"]) for c in catalog],
-            "fine_type string, coarse_type string, label_id string",
+    def with_entity(df: DataFrame) -> DataFrame:
+        canonical = canonical_expr(F.col("fine_type"), F.col("surface"), F.col("canonical"))
+        return df.join(F.broadcast(overrides), ["fine_type", "surface"], "left").withColumn(
+            "entity_id", ent_id(F.col("fine_type"), canonical)
         )
+
+    slots = ("subj", "a", "b", "c")
+
+    def keys(pred: str, df: DataFrame, *cols: str) -> DataFrame:
+        return df.select(
+            F.lit(pred).alias("pred"),
+            *[F.col(c).alias(s) for c, s in zip(cols, slots)],
+            *[F.lit(None).cast("string").alias(s) for s in slots[len(cols):]],
+        )
+
+    typed_e = with_entity(typed)
+    labelled = surfaces.filter(F.col("fine_type").isin([c["fine_type"] for c in catalog]))
+    key_table = (
+        keys("defined_in", typed_e, "entity_id", "repo", "path", "commit")
+        .union(keys("typed_as", with_entity(labelled), "entity_id", "fine_type"))
+        .union(keys("subtype_of", labelled, "fine_type"))
+        .distinct()
     )
 
-    def entity_id() -> Column:
-        return ent_id(
-            F.col("fine_type"),
-            canonical_expr(F.col("fine_type"), F.col("surface"), F.col("canonical")),
-        )
+    def lookup(field: str, key: str) -> Column:
+        pairs = [F.lit(x) for c in catalog for x in (c["fine_type"], c[field])]
+        return F.create_map(*pairs)[F.col(key)]
 
-    typed_e = typed.join(
-        F.broadcast(overrides), ["fine_type", "surface"], "left"
-    ).withColumn("entity_id", entity_id())
-    # each arm's keys before its dedup; the triples and the count dedup them
-    # each time
-    defined_keys = typed_e.select(F.col("entity_id").alias("subj"), "repo", "path", "commit")
-    surface_entities = surfaces.join(
-        F.broadcast(overrides), ["fine_type", "surface"], "left"
-    ).select(entity_id().alias("entity_id"), "fine_type")
-    # every surface yields an entity of its own fine type, so the fine types
-    # present among entities == fine types present among surfaces: derive
-    # subtype_of from the surface table's tiny fine_type distinct (partial
-    # agg collapses to |types| rows map-side) instead of re-running the
-    # whole entity chain (join+distinct over the entity table) for ~8 rows.
-    fine_types = surfaces.select("fine_type")
-
-    null_prov = [
-        F.lit(None).cast("string").alias("repo"),
-        F.lit(None).cast("string").alias("path"),
-        F.lit(None).cast("string").alias("commit"),
-    ]
-    prov = F.concat_ws("", F.col("repo"), F.lit("/"), F.col("path"), F.lit("@"), F.col("commit"))
-
-    t_links = typed_e.select(
+    pred = F.col("pred")
+    defined = pred == "defined_in"
+    prov = F.concat_ws("", F.col("a"), F.lit("/"), F.col("b"), F.lit("@"), F.col("c"))
+    triples = typed_e.select(
         F.col("mention_id").alias("subj"), F.lit("links_to").alias("pred"),
         F.col("entity_id").alias("obj"), "repo", "path", "commit",
-    )
-    # dedup BEFORE building the prov string: obj is a function of
-    # (repo, path, commit), so the key is identical but the shuffle moves
-    # ~100B/row less (0.3 GB at 3.2M mentions); literals added post-shuffle
-    t_defined = defined_keys.dropDuplicates().select(
-        "subj", F.lit("defined_in").alias("pred"), prov.alias("obj"),
-        "repo", "path", "commit",
-    )
-    t_typed = surface_entities.distinct().join(label_map, "fine_type").select(
-        F.col("entity_id").alias("subj"), F.lit("typed_as").alias("pred"),
-        F.col("label_id").alias("obj"), *null_prov,
-    )
-    # label_map has one row per fine type (each fine type appears once in
-    # TAXONOMY), so the joins keep their left sides distinct
-    t_subtype = fine_types.distinct().join(label_map, "fine_type").select(
-        F.col("fine_type").alias("subj"), F.lit("subtype_of").alias("pred"),
-        F.col("coarse_type").alias("obj"), *null_prov,
-    )
-    triples = t_links.unionByName(t_typed).unionByName(t_defined).unionByName(t_subtype)
-
-    def arm_keys(arm: int, df: DataFrame, *keys: str) -> DataFrame:
-        pad = [F.lit(None).cast("string")] * (4 - len(keys))
-        return df.select(F.lit(arm).alias("arm"), *keys, *pad)
-
-    # the label map's fine types as a predicate, not a join: a broadcast of
-    # a driver-built frame is a Spark job of its own
-    labelled = F.col("fine_type").isin([c["fine_type"] for c in catalog])
-    deduped = (
-        arm_keys(0, defined_keys, "subj", "repo", "path", "commit")
-        .union(arm_keys(1, surface_entities.filter(labelled), "entity_id", "fine_type"))
-        .union(arm_keys(2, fine_types.filter(labelled), "fine_type"))
-        .distinct()
-        .select(F.lit(1).cast("long").alias("n"))
+    ).unionByName(
+        key_table.select(
+            "subj", "pred",
+            F.when(defined, prov)
+            .when(pred == "typed_as", lookup("label_id", "a"))
+            .otherwise(lookup("coarse_type", "subj"))
+            .alias("obj"),
+            *[F.when(defined, F.col(s)).alias(c)
+              for s, c in zip("abc", ("repo", "path", "commit"))],
+        )
     )
     # links_to as one row weighing n_links: data, not a literal, so a new
     # count compiles no new code
-    links = local_frame(spark, [(n_links,)], "n long")
-    count = deduped.union(links).agg(
-        F.coalesce(F.sum("n"), F.lit(0).cast("long")).alias("n_triples")
+    links = local_frame(typed.sparkSession, [(n_links,)], "n long")
+    count = (
+        key_table.select(F.lit(1).cast("long").alias("n"))
+        .union(links)
+        .agg(F.coalesce(F.sum("n"), F.lit(0).cast("long")).alias("n_triples"))
     )
     return triples, count
 
@@ -321,7 +300,7 @@ def assemble_kg(typed: DataFrame, catalog: list[dict]) -> Iterator[KGAssembly]:
         # here.  canonical_overrides runs its clustering jobs EAGERLY over
         # the cached surface table, so the wall measured around it is the
         # real canonicalize stage wall.
-        overrides = canonical_overrides(surfaces, already_distinct=True)
+        overrides = canonical_overrides(surfaces)
         canon_wall_ms = (time.time() - t_surfaces) * 1000.0
         triples, triples_count = build_triples(
             typed, overrides, catalog, surfaces=surfaces, n_links=n_mentions
@@ -403,12 +382,10 @@ def run_kg_pipeline(
 
         return KGResult(
             mentions=typed,
-            links=typed.select("mention_id", "label_id", "coarse_type", "fine_type", "score"),
             entities=kg.entities,
             triples=kg.triples,
             lineage=lineage,
-            label_catalog=catalog,
-            n_mentions=kg.n_mentions,
             triples_count=kg.triples_count,
+            n_mentions=kg.n_mentions,
             caches=caches.pop_all(),
         )

@@ -406,10 +406,7 @@ def dedup_minhash_lsh_pairs(spark, sf_dir):
         return _explode_shingles(docs.join(F.broadcast(ids_df), "doc_id", "left_semi"))
 
     return minhash_lsh_pairs_rowform(
-        _doc_shingle_arrays(_docs_par(spark, sf_dir)),
-        explode_shingles=_cand_exploder,
-        threshold=0.5,
-        band_cap=64,
+        _doc_shingle_arrays(_docs_par(spark, sf_dir)), _cand_exploder
     )
 
 

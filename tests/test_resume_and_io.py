@@ -232,6 +232,23 @@ def test_resumable_sink_equals_in_memory(spark, fixture_small, kg_result, tmp_pa
     ])
 
 
+def test_empty_snapshot_sinks_agree(spark, fixture_small, tmp_path):
+    """A zero-row corpus into a fresh directory commits no mention table;
+    the resumable sink reads it as empty, as the in-memory sink builds it,
+    and both count 0 triples."""
+    from nerzo_spark.pipeline.incremental import run_incremental
+
+    fx = fixture_small
+    empty = corpus_df(spark, fx).limit(0)
+    with run_kg_pipeline(spark, empty, anchors_df(spark, fx)) as res:
+        assert res.triples_count.collect()[0]["n_triples"] == 0
+    out = str(tmp_path / "kg")
+    stats = run_incremental(spark, empty, fx.anchors, out)
+    assert (stats["repos_extracted"], stats["triples_total"]) == (0, 0)
+    stages = spark.read.parquet(out + "/lineage").select("stage", "rows_out").collect()
+    assert sorted(stages) == [("canonicalize", 0), ("triples", 0)]
+
+
 def test_resume_leaves_no_observation_entry(spark, fixture_small, tmp_path):
     """run_incremental counts entities and triples with observed metrics
     during their writes.  Those writes always run, so Spark's
@@ -303,7 +320,11 @@ def test_near_dup_plans_hold_no_cache(spark, op):
     """Building and collecting a near-dup plan whose skew guard fires
     leaves the session's cache entries as they were."""
     from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform
-    from nerzo_spark.plans.catalog_text import _doc_shingle_arrays, _ngram_jaccard_pairs
+    from nerzo_spark.plans.catalog_text import (
+        _doc_shingle_arrays,
+        _explode_shingles,
+        _ngram_jaccard_pairs,
+    )
 
     base = "the quick value of a stream is computed from rows and batches near"
     docs = spark.createDataFrame(
@@ -311,7 +332,8 @@ def test_near_dup_plans_hold_no_cache(spark, op):
     )
     builds = {
         "minhash_lsh_pairs_rowform": lambda: minhash_lsh_pairs_rowform(
-            _doc_shingle_arrays(docs), band_cap=64
+            _doc_shingle_arrays(docs),
+            lambda ids: _explode_shingles(docs.join(F.broadcast(ids), "doc_id", "left_semi")),
         ),
         "_ngram_jaccard_pairs": lambda: _ngram_jaccard_pairs(docs, df_cap=8),
     }

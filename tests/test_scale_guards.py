@@ -45,6 +45,18 @@ def _docs_con(rows, cols=("doc_id", "text")):
     return con
 
 
+def _minhash_pairs(docs):
+    """The near-dup pairs of ``docs`` (doc_id, text), with candidate shingles
+    exploded the way the catalog query explodes them."""
+    from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform
+    from nerzo_spark.plans.catalog_text import _explode_shingles
+
+    def exploder(ids_df):
+        return _explode_shingles(docs.join(F.broadcast(ids_df), "doc_id", "left_semi"))
+
+    return minhash_lsh_pairs_rowform(_doc_shingle_arrays(docs), exploder)
+
+
 def _duck_band_record(con, cap=64):
     """GuardRecord of the band guard, from band sizes counted in DuckDB."""
     from nerzo_spark.operators.skew import GuardRecord
@@ -69,7 +81,6 @@ def test_lsh_degenerate_band_capped(spark):
     join emits ~45k pairs from one bucket; with cap=64 both of their bands
     are dropped, the record says so, and distinct near-dup pairs still come
     through."""
-    from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform
     from nerzo_spark.operators.skew import GuardRecord
 
     base = "the quick value of a stream is computed from rows and batches near"
@@ -79,7 +90,7 @@ def test_lsh_degenerate_band_capped(spark):
              (1001, "alpha beta gamma delta epsilon zeta eta theta iota kappa x")]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     con = _docs_con(rows)
-    pairs = minhash_lsh_pairs_rowform(_doc_shingle_arrays(docs), threshold=0.5, band_cap=64)
+    pairs = _minhash_pairs(docs)
     assert _records(spark, pairs) == []  # nothing has run yet
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     record = GuardRecord("minhash_lsh_pairs_rowform", dropped=2, cap=64, worst=300)
@@ -93,12 +104,11 @@ def test_lsh_degenerate_band_capped(spark):
 def test_lsh_guard_noop_below_cap(spark):
     """With no oversized band the guard changes nothing: the sf0.001 pairs
     equal the oracle's, and the record shows no drop."""
-    from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform
     from tests.oracle_harness import duck_con
 
     docs = spark.read.parquet(f"{SF_SMALL}/documents.parquet")
     con = duck_con(SF_SMALL)
-    pairs = minhash_lsh_pairs_rowform(_doc_shingle_arrays(docs), threshold=0.5, band_cap=64)
+    pairs = _minhash_pairs(docs)
     _oracle_matches(pairs, con)
     (record,) = _records(spark, pairs)
     assert record == _duck_band_record(con)
@@ -106,13 +116,10 @@ def test_lsh_guard_noop_below_cap(spark):
 
 
 def test_minhash_rowform_band_cap_equals_oracle(spark):
-    """Under an active band_cap drop (70 identical docs, cap 64) the pair
-    set and jaccard values equal the oracle's, via BOTH the default explode
-    path and a caller-supplied explode_shingles callback, and both records
-    show the two dropped bands."""
-    from nerzo_spark.operators.dedup import minhash_lsh_pairs_rowform
+    """Under an active band cap drop (70 identical docs, cap 64) the pair
+    set and jaccard values equal the oracle's, and the record shows the two
+    dropped bands."""
     from nerzo_spark.operators.skew import GuardRecord
-    from nerzo_spark.plans.catalog_text import _explode_shingles
 
     base = "the quick value of a stream is computed from rows and batches near"
     rows = [(i, base) for i in range(70)]  # one shared band, above cap=64
@@ -125,17 +132,11 @@ def test_minhash_rowform_band_cap_equals_oracle(spark):
     record = GuardRecord("minhash_lsh_pairs_rowform", dropped=2, cap=64, worst=70)
     assert _duck_band_record(con) == record
 
-    def _exploder(ids_df):  # shaped like the catalog query's callback
-        return _explode_shingles(docs.join(F.broadcast(ids_df), "doc_id", "left_semi"))
-
-    for explode_shingles in (None, _exploder):
-        pairs = minhash_lsh_pairs_rowform(
-            _doc_shingle_arrays(docs), explode_shingles=explode_shingles, threshold=0.5, band_cap=64,
-        )
-        # non-degenerate: the small near-dup pairs survive
-        assert {(1000, 1001), (1002, 1003)} <= {(r.id_a, r.id_b) for r in pairs.collect()}
-        assert _records(spark, pairs) == [record]
-        _oracle_matches(pairs, con)
+    pairs = _minhash_pairs(docs)
+    # non-degenerate: the small near-dup pairs survive
+    assert {(1000, 1001), (1002, 1003)} <= {(r.id_a, r.id_b) for r in pairs.collect()}
+    assert _records(spark, pairs) == [record]
+    _oracle_matches(pairs, con)
 
 
 # --- blocked kNN --------------------------------------------------------------
